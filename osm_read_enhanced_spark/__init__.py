@@ -7,7 +7,7 @@ reference OSM PBF parser ``metabench/osm-read-enhanced`` (see SURVEY.md):
   (vectorized numpy kernels run inside Arrow-batched ``mapInPandas``).
 - ``functions``     — geospatial kernels (haversine, slippy tiles, S2,
   hex binning), image codecs, text analytics, vector math.
-- ``operators``     — distributed spatial join (PIP w/ broadcast R-tree),
+- ``operators``     — distributed spatial join (PIP w/ broadcast grid index),
   kNN, tile assignment, dedup (exact / MinHash-LSH / SimHash), ANN.
 - ``plans``         — the named query catalog driving ``__spark_entry__``.
 - ``streaming``     — Structured Streaming over the events table.

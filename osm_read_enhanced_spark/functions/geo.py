@@ -6,7 +6,7 @@ Two flavours of each:
   versions (no Python at all) and the shapes mirrored by the DuckDB
   oracle SQL in ``__spark_entry__``.
 - numpy kernels (``*_np``) — used inside pandas UDFs by operators that
-  are already in an Arrow batch (PIP refine, R-tree probes).
+  are already in an Arrow batch (PIP refine, bbox-index probes).
 
 Slippy z/x/y math per the public OSM wiki formula; haversine per the
 standard great-circle formula (engine-only operators, SURVEY.md §2.9).

@@ -1,10 +1,10 @@
 """STR-packed static R-tree over polygon bboxes, pure numpy.
 
-Built once per task from the broadcast polygon layer (SURVEY.md §2.5 J4
-"broadcast R-tree per partition" — the SpatialSpark/Sedona pattern): the
-polygon array is broadcast, each executor bulk-loads this tree lazily,
-then probes it for every point batch. Query returns candidate polygon
-indices; the exact ray-cast refine happens on candidates only.
+The SpatialSpark/Sedona "broadcast R-tree per partition" pattern
+(SURVEY.md §2.5 J4). The broadcast point-in-polygon probe now uses
+``grid_index.GridIndex``; this tree stays as the grid's test reference
+and as an independent bbox-candidate counter. Query returns (point, box)
+pairs with the point inside the box.
 
 Sort-Tile-Recursive bulk load: sort by center-x into vertical slices,
 sort each slice by center-y, pack leaves of size `leaf_size`, then build

@@ -2,17 +2,20 @@
 
 Two physical strategies, chosen by polygon-layer size:
 
-- ``pip_join_broadcast`` — the north-star pattern: the polygon layer
-  (rings + bboxes) is broadcast once; every task lazily bulk-loads a
-  shared STR R-tree and probes it per Arrow batch, ray-casting only the
-  bbox candidates. Zero shuffle on the fact side; scales to any number
-  of points. Right choice while polygons ≤ a few hundred MB.
+- ``pip_join_broadcast`` — the north-star pattern: the polygon layer is
+  collected through Arrow into flat CSR arrays (ids, bboxes, ring
+  vertex offsets and coordinates) and broadcast once; every task lazily
+  builds a uniform-grid bbox index and the concatenated ring edges, then
+  per Arrow batch emits each (point, polygon-bbox) candidate once from
+  the grid and refines all candidates in one chunked ring-edge ray cast
+  — no Python loop per polygon. Zero shuffle on the fact side; scales
+  to any number of points. Right choice while polygons ≤ a few hundred MB.
 - ``pip_join_cells`` — for huge polygon layers: polygons explode their
   hex covering cells, points compute their cell, equi-join on the cell
   (shuffle, AQE-skew-aware), then exact ray-cast refine per matched
   pair. Shuffles scale with candidate pairs, not |points| × |polygons|.
 
-Both refine with the same vectorized kernel; results are identical.
+Both refine with the same ray-cast arithmetic; results are identical.
 """
 
 from __future__ import annotations
@@ -26,14 +29,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import hexgrid
-from ..functions.pip import points_in_ring
-from .rtree import STRtree
+from ..functions.pip import pairs_in_rings, points_in_ring, ring_edges
+from .grid_index import GridIndex
 
-# Per-worker cache of broadcast-built R-trees, keyed by a driver-generated
-# uuid captured in the probe closure (NOT id(bc): the CPython address of
-# the per-task deserialized Broadcast differs per task — no sharing — and
-# can be reused by a later broadcast after GC — stale-tree risk).
-# LRU-bounded so long-lived reused Python workers don't grow unboundedly.
+# Per-worker cache of broadcast-built probe indexes, keyed by a
+# driver-generated uuid captured in the probe closure (NOT id(bc): the
+# CPython address of the per-task deserialized Broadcast differs per task
+# — no sharing — and can be reused by a later broadcast after GC —
+# stale-index risk). LRU-bounded so long-lived reused Python workers
+# don't grow unboundedly.
 _TREE_CACHE: dict = {}
 _TREE_CACHE_MAX = 4
 
@@ -48,19 +52,42 @@ def _tree_cache_get(token: str, build):
     return cached
 
 
+def _flat_list(col) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow list column → (row lengths, flat float64 values); a null
+    list is an empty one and a null coordinate is NaN."""
+    import pyarrow.compute as pc
+
+    lengths = pc.list_value_length(col).fill_null(0).to_numpy()
+    values = pc.list_flatten(col).to_numpy()
+    return lengths.astype(np.int64), np.asarray(values, dtype=np.float64)
+
+
 def _collect_polygon_layer(polygons: DataFrame):
-    """Driver-side: polygon layer → (ids, rings, boxes) plain arrays for
-    broadcast. Layer must be 'small' (admin/landuse scale)."""
-    rows = polygons.select("polygon_id", "lats", "lons").collect()
-    ids = np.array([r.polygon_id for r in rows], dtype=np.int64)
-    rings = [
-        (np.asarray(r.lats, dtype=np.float64), np.asarray(r.lons, dtype=np.float64))
-        for r in rows
-    ]
-    boxes = np.array(
-        [[lo.min(), la.min(), lo.max(), la.max()] for la, lo in rings], dtype=np.float64
-    )
-    return ids, rings, boxes
+    """Driver-side: polygon layer → (ids, boxes, vertex offsets, lats,
+    lons) flat arrays for broadcast, collected through Arrow. Layer must
+    be 'small' (admin/landuse scale). An empty ring, or one with a null
+    or NaN vertex, gets a NaN bbox and matches nothing."""
+    table = polygons.select("polygon_id", "lats", "lons").toArrow()
+    ids = table.column("polygon_id")
+    if ids.null_count:
+        raise ValueError("pip_join_broadcast: polygon_id must not be null")
+    ids = np.asarray(ids.to_numpy(), dtype=np.int64)
+    n_lat, lats = _flat_list(table.column("lats"))
+    n_lon, lons = _flat_list(table.column("lons"))
+    if not np.array_equal(n_lat, n_lon):
+        raise ValueError("pip_join_broadcast: lats and lons differ in length")
+    offsets = np.zeros(len(ids) + 1, dtype=np.int64)
+    np.cumsum(n_lat, out=offsets[1:])
+    boxes = np.full((len(ids), 4), np.nan)
+    full = np.flatnonzero(n_lat > 0)
+    if full.size:
+        at = offsets[full]
+        boxes[full] = np.stack(
+            [np.minimum.reduceat(lons, at), np.minimum.reduceat(lats, at),
+             np.maximum.reduceat(lons, at), np.maximum.reduceat(lats, at)],
+            axis=1,
+        )
+    return ids, boxes, offsets, lats, lons
 
 
 def pip_join_broadcast(
@@ -102,35 +129,21 @@ def pip_join_broadcast(
         import pyarrow as pa
 
         def build():
-            ids, rings, boxes = bc.value
-            return ids, rings, STRtree(boxes)
+            ids, boxes, offsets, lats, lons = bc.value
+            return ids, GridIndex(boxes), ring_edges(offsets, lats, lons)
 
-        ids, rings, tree = _tree_cache_get(token, build)
+        ids, grid, edges = _tree_cache_get(token, build)
         for rb in it:
             xs = np.asarray(rb.column(i_lon).to_numpy(zero_copy_only=False),
                             dtype=np.float64)
             ys = np.asarray(rb.column(i_lat).to_numpy(zero_copy_only=False),
                             dtype=np.float64)
-            pi, bi = tree.query_points(xs, ys)
-            if len(pi) == 0:
-                continue
-            keep_p, keep_poly = [], []
-            # refine per candidate polygon (vectorize across its points)
-            order = np.argsort(bi, kind="stable")
-            pi, bi = pi[order], bi[order]
-            bounds = np.flatnonzero(np.r_[True, bi[1:] != bi[:-1], True])
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                poly = bi[a]
-                la, lo = rings[poly]
-                sel = pi[a:b]
-                m = points_in_ring(ys[sel], xs[sel], la, lo)
-                if m.any():
-                    keep_p.append(sel[m])
-                    keep_poly.append(np.full(int(m.sum()), ids[poly], dtype=np.int64))
-            if keep_p:
-                kp = pa.array(np.concatenate(keep_p))
+            pi, bi = grid.query_points(xs, ys)
+            m = pairs_in_rings(ys[pi], xs[pi], bi, edges)
+            if m.any():
+                kp = pa.array(pi[m])
                 arrays = [rb.column(j).take(kp) for j in out_idx]
-                arrays.append(pa.array(np.concatenate(keep_poly)))
+                arrays.append(pa.array(ids[bi[m]]))
                 yield pa.RecordBatch.from_arrays(
                     arrays, names=[*in_cols[:-2], "polygon_id"]
                 )
@@ -243,7 +256,7 @@ def pip_join_with_holes(
     ``pip_join_broadcast``) runs once per ring layer, then a
     ``left_anti`` on (point_id, polygon_id) subtracts hole hits — no
     new refine kernel, both legs keep their plan shape (broadcast
-    R-tree or cell equi-join + AQE), and the anti-join shuffles only
+    grid index or cell equi-join + AQE), and the anti-join shuffles only
     O(|matches|) narrow rows. Build the layers by role:
     ``build_polygon_layer(rings.filter(role == 'outer'))`` /
     ``...('inner')`` from ``relation_multipolygons`` output.

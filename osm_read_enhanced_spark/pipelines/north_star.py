@@ -1,7 +1,7 @@
 """The north-rule pipeline, composed end-to-end (BASELINE.json
 north_star): an image+caption table's geotags are batch-encoded to hex
 (H3-shaped) and S2 cells via vectorized Arrow UDFs, joined to
-OSM-derived polygon layers with the broadcast R-tree point-in-polygon
+OSM-derived polygon layers with the broadcast grid-index point-in-polygon
 operator, assigned slippy Z/X/Y raster tiles, and committed to an
 iceberg-lite table partition-by-partition with per-partition lineage
 (+ df.observe row counts) so a killed job resumes idempotently from the
@@ -11,8 +11,8 @@ Every stage is an existing, independently-tested operator — this module
 is the composition, not new math:
 
 - cell encode: plans.udfs.s2_cell_l10 / hex_cell_udf (Arrow batches)
-- PIP: operators.spatial_join.pip_join_broadcast (executor-cached STR
-  R-tree, zero shuffle on the image side)
+- PIP: operators.spatial_join.pip_join_broadcast (executor-cached bbox
+  grid + ring-edge ray-cast kernel, zero shuffle on the image side)
 - tiles: functions.geo.tile_x_col/tile_y_col (pure JVM Column math)
 - checkpointed sink: sources.iceberg_lite.write_partitioned (atomic
   rename + manifest + left-anti resume)
@@ -41,7 +41,7 @@ def enrich_images(
 ) -> DataFrame:
     """images(+geotag) → + hex_cell, s2_cell, z/x/y tile, polygon_id.
 
-    ``polygons`` (polygon_id, lats, lons) joins via broadcast R-tree
+    ``polygons`` (polygon_id, lats, lons) joins via broadcast grid-index
     PIP; images outside every polygon keep polygon_id NULL (left join —
     rows are never dropped). ``s2_level`` is fixed at 10 by the shipped
     UDF; other levels via functions.s2 directly.

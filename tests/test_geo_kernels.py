@@ -3,17 +3,20 @@
 import numpy as np
 import pytest
 
-from osm_read_enhanced_spark.functions import hexgrid, s2
+from osm_read_enhanced_spark.functions import hexgrid, pip, s2
 from osm_read_enhanced_spark.functions.geo import (
     haversine_np,
     tile_bounds_np,
     tile_xy_np,
 )
 from osm_read_enhanced_spark.functions.pip import (
+    pairs_in_rings,
     points_in_polygon,
     points_in_ring,
     ring_area_deg2,
+    ring_edges,
 )
+from osm_read_enhanced_spark.operators.grid_index import GridIndex
 from osm_read_enhanced_spark.operators.rtree import STRtree
 
 rng = np.random.default_rng(42)
@@ -140,32 +143,166 @@ def test_ring_area_orientation():
     assert ccw == -cw and abs(ccw) == 0.5
 
 
-def test_strtree_matches_bruteforce():
+def _ring_csr(rings):
+    offsets = np.r_[0, np.cumsum([len(la) for la, _ in rings])]
+    lats = np.concatenate([la for la, _ in rings]) if rings else np.empty(0)
+    lons = np.concatenate([lo for _, lo in rings]) if rings else np.empty(0)
+    return ring_edges(offsets, lats, lons)
+
+
+def test_pairs_in_rings_equals_points_in_ring(monkeypatch):
+    r = np.random.default_rng(11)
+    # random vertex order → self-intersecting rings; sizes 0..30 incl. an
+    # empty ring (contains nothing) and 1-2 vertex degenerate rings
+    rings = [(r.uniform(-1, 1, k), r.uniform(-1, 1, k)) for k in (0, 1, 2, 3, 7, 30, 12, 5)]
+    # lattice rings: every vertex lies on an integer scan line and the
+    # ring has horizontal edges; points sit on vertices, on horizontal
+    # edges and on vertical edges
+    rings.append((np.array([0, 0, 2, 2, 1, 1, 3, 3], dtype=float),
+                  np.array([0, 3, 3, 2, 2, 1, 1, 0], dtype=float)))
+    rings.append((np.array([0, 0, 1, 1, 0, 2, 2], dtype=float),
+                  np.array([0, 2, 2, 0, 1, 1, 0], dtype=float)))
+    n = 3000
+    ring = r.integers(0, len(rings), n)
+    plat = np.where(r.random(n) < 0.5, r.integers(-1, 4, n).astype(float), r.uniform(-1, 3.5, n))
+    plon = np.where(r.random(n) < 0.5, r.integers(-1, 4, n) / 2.0, r.uniform(-1, 3.5, n))
+    # points exactly on sloped edges, placed with the reference arithmetic
+    # (one ulp either side too): only a bit-identical kernel agrees on all
+    n_on = 2000
+    ring_k = r.integers(3, 8, n_on)  # the random rings of 3..30 vertices
+    edge_k = r.integers(0, 1 << 30, n_on) % np.array([len(rings[i][0]) for i in ring_k])
+    ya = np.array([rings[i][0][j] for i, j in zip(ring_k, edge_k)])
+    xa = np.array([rings[i][1][j] for i, j in zip(ring_k, edge_k)])
+    yb = np.array([np.roll(rings[i][0], -1)[j] for i, j in zip(ring_k, edge_k)])
+    xb = np.array([np.roll(rings[i][1], -1)[j] for i, j in zip(ring_k, edge_k)])
+    on_y = ya + r.random(n_on) * (yb - ya)
+    on_x = xa + (on_y - ya) / (yb - ya) * (xb - xa)
+    on_x = on_x + np.array([-1, 0, 1])[r.integers(0, 3, n_on)] * np.spacing(on_x)
+    ring, plat, plon = np.r_[ring, ring_k], np.r_[plat, on_y], np.r_[plon, on_x]
+    n += n_on
+    want = np.array(
+        [points_in_ring(plat[k : k + 1], plon[k : k + 1], *rings[ring[k]])[0] for k in range(n)]
+    )
+    assert want.any() and not want.all()
+    assert not want[ring == 0].any()
+    edges = _ring_csr(rings)
+    assert np.array_equal(pairs_in_rings(plat, plon, ring, edges), want)
+    # chunk boundaries: pairs × edges split every 7 (and single pairs with
+    # more edges than a chunk), and a chunk of 1 edge-pair
+    for chunk in (1, 7, 64):
+        monkeypatch.setattr(pip, "_EDGE_CHUNK", chunk)
+        assert np.array_equal(pairs_in_rings(plat, plon, ring, edges), want)
+
+
+def test_pairs_in_rings_empty_inputs():
+    edges = _ring_csr([])
+    assert pairs_in_rings(np.empty(0), np.empty(0), np.empty(0, dtype=np.int64), edges).size == 0
+    edges = _ring_csr([(np.empty(0), np.empty(0))])
+    assert pairs_in_rings(np.array([0.0]), np.array([0.0]), np.array([0]), edges).tolist() == [False]
+
+
+def _bbox_pairs(boxes, xs, ys):
+    return {
+        (p, b)
+        for p in range(len(xs))
+        for b in range(len(boxes))
+        if boxes[b, 0] <= xs[p] <= boxes[b, 2] and boxes[b, 1] <= ys[p] <= boxes[b, 3]
+    }
+
+
+def _index_cases():
+    r = np.random.default_rng(5)
+    # unit lattice boxes + points on every box edge / cell boundary,
+    # also on a 0.1 lattice whose steps are not exact in binary
+    for step in (1.0, 0.1):
+        i, j = np.meshgrid(np.arange(6), np.arange(5))
+        lo_x, lo_y = i.ravel() * step, j.ravel() * step
+        boxes = np.stack([lo_x, lo_y, lo_x + step, lo_y + step], axis=1)
+        g = np.arange(-1, 15) * (step / 2)
+        xs, ys = (a.ravel() for a in np.meshgrid(g, g))
+        yield "lattice", boxes, xs, ys
+    # zero-width and zero-height boxes (and zero-size points-as-boxes)
+    a = np.round(r.uniform(0, 10, 60), 1)
+    b = np.round(r.uniform(0, 10, 60), 1)
+    h = np.round(r.uniform(0, 2, 60), 1)
+    boxes = np.concatenate([
+        np.stack([a[:20], b[:20], a[:20], b[:20] + h[:20]], 1),
+        np.stack([a[20:40], b[20:40], a[20:40] + h[20:40], b[20:40]], 1),
+        np.stack([a[40:], b[40:], a[40:], b[40:]], 1),
+    ])
+    xs = np.r_[a, a + h / 2, r.uniform(0, 12, 100)]
+    ys = np.r_[b + h / 2, b, r.uniform(0, 12, 100)]
+    yield "degenerate", boxes, xs, ys
+    yield "all_zero_width", boxes[:20], xs, ys
+    # one box spanning the whole extent among many tiny scattered ones:
+    # the start grid would hold ~10^10 cells, so it must coarsen
+    lo = r.uniform(0, 100, (300, 2))
+    small = np.concatenate([lo, lo + 0.001], axis=1)
+    boxes = np.vstack([small, [[0.0, 0.0, 100.001, 100.001]]])
+    xs = np.r_[lo[:, 0] + 0.0005, r.uniform(0, 100, 200)]
+    ys = np.r_[lo[:, 1], r.uniform(0, 100, 200)]
+    yield "spanning", boxes, xs, ys
+    # half tiny, half wide boxes: the median side puts the wide ones in
+    # dozens of cells each, over the entry budget
+    lo = r.uniform(0, 50, (200, 2))
+    w = np.where(np.arange(200) < 101, 0.2, 12.0)[:, None]
+    boxes = np.concatenate([lo, lo + w], axis=1)
+    yield "bimodal", boxes, r.uniform(0, 62, 300), r.uniform(0, 62, 300)
+    # points outside the extent, NaN and infinite points
+    boxes = np.array([[0.0, 0.0, 1.0, 1.0], [0.5, 0.5, 2.0, 2.0]])
+    xs = np.array([-5.0, 5.0, 0.5, np.nan, 0.5, np.inf, -np.inf, 1.0, 2.0])
+    ys = np.array([0.5, 0.5, -5.0, 0.5, np.nan, 0.5, 0.5, 1.0, 2.0])
+    yield "outside", boxes, xs, ys
+
+
+@pytest.mark.parametrize("index", [STRtree, GridIndex], ids=["STRtree", "GridIndex"])
+def test_strtree_matches_bruteforce(index):
     boxes = np.empty((200, 4))
     boxes[:, 0] = rng.uniform(-10, 10, 200)
     boxes[:, 1] = rng.uniform(-10, 10, 200)
     boxes[:, 2] = boxes[:, 0] + rng.uniform(0.1, 3, 200)
     boxes[:, 3] = boxes[:, 1] + rng.uniform(0.1, 3, 200)
-    tree = STRtree(boxes, leaf_size=8)
     xs, ys = rng.uniform(-12, 14, 300), rng.uniform(-12, 14, 300)
-    pi, bi = tree.query_points(xs, ys)
-    got = set(zip(pi.tolist(), bi.tolist()))
-    want = {
-        (p, b)
-        for p in range(300)
-        for b in range(200)
-        if boxes[b, 0] <= xs[p] <= boxes[b, 2] and boxes[b, 1] <= ys[p] <= boxes[b, 3]
-    }
-    assert got == want
+    cases = [("random", boxes, xs, ys), *_index_cases()]
+    for name, boxes, xs, ys in cases:
+        tree = STRtree(boxes, leaf_size=8) if index is STRtree else index(boxes)
+        pi, bi = tree.query_points(xs, ys)
+        got = list(zip(pi.tolist(), bi.tolist()))
+        assert len(got) == len(set(got)), name  # each pair emitted once
+        assert set(got) == _bbox_pairs(boxes, xs, ys), name
+        if index is GridIndex:
+            cells = len(tree.start) - 1
+            assert len(tree.entries) <= 8 * len(boxes) + cells, name
+            assert cells <= 16 * len(boxes), name
+            if name in ("spanning", "bimodal"):
+                assert tree.side[0] > np.median(boxes[:, 2] - boxes[:, 0]), name
 
 
-def test_strtree_empty_and_single():
-    t = STRtree(np.empty((0, 4)))
+@pytest.mark.parametrize("index", [STRtree, GridIndex], ids=["STRtree", "GridIndex"])
+def test_strtree_empty_and_single(index):
+    t = index(np.empty((0, 4)))
     pi, bi = t.query_points(np.array([1.0]), np.array([1.0]))
     assert len(pi) == 0
-    t1 = STRtree(np.array([[0.0, 0.0, 1.0, 1.0]]))
+    t1 = index(np.array([[0.0, 0.0, 1.0, 1.0]]))
     assert t1.query_point(0.5, 0.5).tolist() == [0]
     assert t1.query_point(2.0, 2.0).tolist() == []
+    pi, bi = t1.query_points(np.empty(0), np.empty(0))
+    assert len(pi) == 0
+    t0 = index(np.array([[3.0, 4.0, 3.0, 4.0]]))  # a zero-size box
+    assert t0.query_point(3.0, 4.0).tolist() == [0]
+    assert t0.query_point(3.0, 4.5).tolist() == []
+
+
+def test_grid_index_skips_non_finite_boxes():
+    boxes = np.array([[0.0, 0.0, 1.0, 1.0], [np.nan, 0.0, 1.0, 1.0],
+                      [2.0, 2.0, np.inf, 3.0], [5.0, 5.0, 4.0, 6.0], [0.5, 0.5, 3.0, 3.0],
+                      [-1e308, 0.0, 1e308, 1.0]])
+    g = GridIndex(boxes)
+    xs = np.array([0.5, 2.5, 4.5, 0.9])
+    ys = np.array([0.5, 2.5, 5.5, 0.9])
+    pi, bi = g.query_points(xs, ys)
+    assert sorted(zip(pi.tolist(), bi.tolist())) == [(0, 0), (0, 4), (1, 4), (3, 0), (3, 4)]
+    assert len(GridIndex(np.full((3, 4), np.nan)).query_points(xs, ys)[0]) == 0
 
 
 # ------------------------------------------------ clean-room S2 reimpl

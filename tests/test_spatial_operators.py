@@ -297,6 +297,51 @@ def test_pip_broadcast_keep_cols_pass_through(spark, pip_setup):
     assert all(r.tag42 == r.point_id * 42 for r in with_cols)
 
 
+def _unit_squares_and_centres(spark, n=40):
+    rows = [(i, [0.0, 0.0, 1.0, 1.0], [i * 2.0, i * 2.0 + 1, i * 2.0 + 1, i * 2.0])
+            for i in range(n)]
+    pts = spark.createDataFrame(
+        [(i, 0.5, i * 2.0 + 0.5) for i in range(n)], "point_id long, lat double, lon double"
+    )
+    return rows, pts
+
+
+POLY_SCHEMA = "polygon_id long, lats array<double>, lons array<double>"
+
+
+def test_pip_broadcast_non_finite_polygon_matches_nothing(spark):
+    # one null and one NaN vertex give NaN bboxes: those polygons match
+    # nothing and every other polygon keeps its hits (a NaN bbox used to
+    # poison the whole index and empty the join)
+    rows, pts = _unit_squares_and_centres(spark)
+    rows.append((900, [0.0, None, 1.0], [0.0, 1.0, 1.0]))
+    rows.append((901, [0.0, float("nan"), 1.0], [2.0, 3.0, 3.0]))
+    layer = spark.createDataFrame(rows, POLY_SCHEMA)
+    got = {(r.point_id, r.polygon_id) for r in pip_join_broadcast(pts, layer).collect()}
+    assert got == {(i, i) for i in range(40)}
+
+
+def test_pip_broadcast_empty_rings_and_layer(spark):
+    rows, pts = _unit_squares_and_centres(spark, n=5)
+    rows.append((900, [], []))
+    rows.append((901, None, None))
+    layer = spark.createDataFrame(rows, POLY_SCHEMA)
+    got = {(r.point_id, r.polygon_id) for r in pip_join_broadcast(pts, layer).collect()}
+    assert got == {(i, i) for i in range(5)}
+    empty = spark.createDataFrame([], POLY_SCHEMA)
+    assert pip_join_broadcast(pts, empty).count() == 0
+
+
+def test_pip_broadcast_rejects_malformed_layer(spark):
+    _, pts = _unit_squares_and_centres(spark, n=1)
+    ragged = spark.createDataFrame([(1, [0.0, 0.0, 1.0], [0.0, 1.0])], POLY_SCHEMA)
+    with pytest.raises(ValueError, match="differ in length"):
+        pip_join_broadcast(pts, ragged)
+    no_id = spark.createDataFrame([(None, [0.0, 0.0, 1.0], [0.0, 1.0, 1.0])], POLY_SCHEMA)
+    with pytest.raises(ValueError, match="polygon_id"):
+        pip_join_broadcast(pts, no_id)
+
+
 def test_auto_resolution_scales_with_density(spark):
     """auto_resolution must pick a COARSE grid for a globally sparse
     right side and a FINE grid for a dense cluster — the knob the
