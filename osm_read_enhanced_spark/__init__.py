@@ -7,8 +7,9 @@ reference OSM PBF parser ``metabench/osm-read-enhanced`` (see SURVEY.md):
   (vectorized numpy kernels run inside Arrow-batched ``mapInPandas``).
 - ``functions``     — geospatial kernels (haversine, slippy tiles, S2,
   hex binning), image codecs, text analytics, vector math.
-- ``operators``     — distributed spatial join (PIP w/ broadcast grid index),
-  kNN, tile assignment, dedup (exact / MinHash-LSH / SimHash), ANN.
+- ``operators``     — distributed spatial join (broadcast PIP with a grid
+  index), adaptive kNN, tile assignment, dedup (exact / MinHash-LSH /
+  SimHash / embedding cosine), ANN (IVF, int8-quantized brute force).
 - ``plans``         — the named query catalog driving ``__spark_entry__``.
 - ``streaming``     — Structured Streaming over the events table.
 

@@ -60,14 +60,6 @@ def tile_key_col(lat: Column, lon: Column, z: int) -> Column:
     return (F.lit(z).cast("long") * F.lit(1 << 58) + x * F.lit(1 << 29) + y).cast("long")
 
 
-def grid_cell_col(lat: Column, lon: Column, cells_per_degree: int) -> Column:
-    """Square-grid cell id (integer lattice) — the SQL-expressible coarse
-    cell used where an ANSI oracle must reproduce the exact key."""
-    gy = F.floor((lat + 90.0) * cells_per_degree).cast("long")
-    gx = F.floor((lon + 180.0) * cells_per_degree).cast("long")
-    return gy * F.lit(360 * cells_per_degree + 1) + gx
-
-
 # ------------------------------------------------------------ numpy kernels
 
 
@@ -107,10 +99,6 @@ def tile_bounds_np(z: int, x, y) -> tuple[np.ndarray, np.ndarray, np.ndarray, np
     north = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * y / n))))
     south = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * (y + 1) / n))))
     return west, south, east, north
-
-
-def bbox_of_ring(lats: np.ndarray, lons: np.ndarray) -> tuple[float, float, float, float]:
-    return float(lats.min()), float(lons.min()), float(lats.max()), float(lons.max())
 
 
 def path_length_m_col(lats: Column, lons: Column) -> Column:

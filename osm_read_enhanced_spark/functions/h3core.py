@@ -249,11 +249,6 @@ def _ijk_rotate60ccw(i, j, k):
     return _ijk_normalize(i + k, i + j, j + k)
 
 
-def _ijk_rotate60cw(i, j, k):
-    # i→IK(1,0,1), j→IJ(1,1,0), k→JK(0,1,1)
-    return _ijk_normalize(i + j, j + k, i + k)
-
-
 def _up_ap7(i, j, k):
     di, dj = i - k, j - k
     return _ijk_normalize(
@@ -886,18 +881,6 @@ def _h3_rotate_pent60ccw(h: int) -> int:
     return h
 
 
-def _h3_rotate_pent60cw(h: int) -> int:
-    found = False
-    for r in range(1, _h3_res(h) + 1):
-        d = _ROT60CW[_h3_digit(h, r)]
-        h = _h3_set_digit(h, r, d)
-        if not found and d != 0:
-            found = True
-            if _h3_leading_nonzero(h) == K_AXES:
-                h = _h3_rotate60(h, _ROT60CW)
-    return h
-
-
 def _bc_is_cw_offset(bc: int, face: int) -> bool:
     d = BASE_CELL_DATA[bc]
     return d[5] == face or d[6] == face
@@ -1069,28 +1052,6 @@ def _cell_neighbors(h: int) -> list[int]:
             seen.add(c)
             uniq.append(c)
     return uniq
-
-
-def _face_ijk_to_h3_with_overage(face: int, i: int, j: int, k: int, res: int) -> int:
-    """_faceIjkToH3 tolerant of coords beyond the face patch: adjust
-    overage (via the class II substrate dance) until on a face, then
-    convert."""
-    adj_res = res
-    oi, oj, ok = i, j, k
-    if _is_class_iii(res):
-        i, j, k = _down_ap7r(i, j, k)
-        adj_res += 1
-    for _ in range(4):
-        over, face, i, j, k = _adjust_overage_class_ii(face, i, j, k, adj_res, False)
-        if not over:
-            break
-    if adj_res != res:
-        if over:
-            i, j, k = _up_ap7r(i, j, k)
-        else:
-            i, j, k = oi, oj, ok
-    h = _face_ijk_to_h3(face, i, j, k, res)
-    return h
 
 
 def grid_disk(h: int, k: int) -> list[int]:
@@ -1283,36 +1244,10 @@ def latlng_to_cell_vec(lat_deg, lng_deg, res: int) -> np.ndarray:
     return h
 
 
-def cell_to_latlng_vec(cells) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized cell → center lat/lng degrees. Cells sharing an index
-    are computed once (typical inputs are exploded cell columns)."""
-    cells = np.asarray(cells, dtype=np.int64)
-    uniq, inv = np.unique(cells, return_inverse=True)
-    lats = np.empty(len(uniq), dtype=np.float64)
-    lngs = np.empty(len(uniq), dtype=np.float64)
-    for idx, c in enumerate(uniq):
-        la, lo = cell_to_latlng(int(c))
-        lats[idx] = la
-        lngs[idx] = lo
-    return lats[inv], lngs[inv]
-
-
-def cell_to_parent_vec(cells, parent_res: int) -> np.ndarray:
-    cells = np.asarray(cells, dtype=np.int64)
-    res = (cells >> np.int64(52)) & np.int64(0xF)
-    if (parent_res > res).any():
-        raise ValueError("parent_res must be ≤ every cell res")
-    out = (cells & ~np.int64(0xF << 52)) | (np.int64(parent_res) << np.int64(52))
-    for r in range(parent_res + 1, 16):
-        shift = np.int64(3 * (15 - r))
-        out = out | (np.int64(7) << shift)
-    return out
-
-
 def polygon_to_cells(ring_lats, ring_lons, res: int) -> np.ndarray:
-    """Covering cell set of a polygon ring (degrees): centers-contained
-    plus a 1-ring conservative boundary cover — same contract as the
-    planar hexgrid.polyfill but on true H3 cells."""
+    """Covering cell set of a polygon ring (degrees): cells whose center
+    lies inside the ring plus a 1-ring conservative boundary cover, on
+    true H3 cells."""
     from .pip import points_in_ring
 
     ring_lats = np.asarray(ring_lats, dtype=np.float64)

@@ -3,13 +3,13 @@
 DOCUMENTED DEVIATION (SURVEY.md §7 risk register): no H3 library exists
 in this environment and full icosahedral H3 (face/IJK/class-III math,
 pentagon handling) is out of round-1 scope, so this module provides the
-engine's H3-shaped surface — res 7-10 cell ids, kRing neighborhoods,
-polyfill — on a deterministic equirectangular hex lattice instead of
-the true H3 projection. Cell edge lengths per res match H3's published
-scale (aperture-7: edge ≈ 1107.7 km / √7^res), so join fan-outs and
-skew behaviour are realistic. The packed-int64 cell id, kRing, and
-polyfill semantics are what the spatial operators contract on; the
-projection can be swapped for true H3 later without touching callers.
+engine's H3-shaped surface — res 7-10 cell ids and kRing
+neighborhoods — on a deterministic equirectangular hex lattice instead
+of the true H3 projection. Cell edge lengths per res match H3's
+published scale (aperture-7: edge ≈ 1107.7 km / √7^res), so join
+fan-outs and skew behaviour are realistic. The packed-int64 cell id
+and kRing semantics are what the kNN operator contracts on; true H3
+cells live in ``h3core``.
 
 Axial hex coordinates (pointy-top) with standard cube rounding; all
 kernels numpy-vectorized for Arrow batches.
@@ -120,41 +120,3 @@ def kring_cells(cell, k: int = 1) -> np.ndarray:
     rr = r[:, None] + offs[None, :, 1]
     return pack_cell(res[:, None], qq, rr)
 
-
-def polyfill(ring_lats: np.ndarray, ring_lons: np.ndarray, res: int) -> np.ndarray:
-    """Covering cell set of a polygon ring: bbox-scan hex centers + keep
-    centers inside (ray cast) or hexes whose center is within one edge of
-    the boundary (conservative cover). Pure numpy (SURVEY.md §7 Phase 3)."""
-    from .pip import points_in_ring  # local import to avoid cycle
-
-    size = edge_deg(res)
-    lat_min, lat_max = float(ring_lats.min()) - size, float(ring_lats.max()) + size
-    lon_min, lon_max = float(ring_lons.min()) - size, float(ring_lons.max()) + size
-    # candidate axial range from bbox corners
-    corners_q, corners_r = _axial_from_xy(
-        np.array([lon_min, lon_max, lon_min, lon_max]),
-        np.array([lat_min, lat_min, lat_max, lat_max]),
-        size,
-    )
-    q0, q1 = int(np.floor(corners_q.min())) - 1, int(np.ceil(corners_q.max())) + 1
-    r0, r1 = int(np.floor(corners_r.min())) - 1, int(np.ceil(corners_r.max())) + 1
-    qq, rr = np.meshgrid(np.arange(q0, q1 + 1), np.arange(r0, r1 + 1))
-    qq, rr = qq.ravel(), rr.ravel()
-    cx, cy = _xy_from_axial(qq, rr, size)
-    inside = points_in_ring(cy, cx, ring_lats, ring_lons)
-    interior = pack_cell(res, qq[inside], rr[inside])
-    # conservative boundary cover: densify each edge at size/2 spacing,
-    # take the 1-ring of every boundary sample's cell
-    pts_lat, pts_lon = [], []
-    n = len(ring_lats)
-    for a in range(n):
-        b = (a + 1) % n
-        seg = max(np.hypot(ring_lats[b] - ring_lats[a], ring_lons[b] - ring_lons[a]), 1e-12)
-        steps = max(int(np.ceil(seg / (size / 2))), 1)
-        t = np.linspace(0, 1, steps, endpoint=False)
-        pts_lat.append(ring_lats[a] + t * (ring_lats[b] - ring_lats[a]))
-        pts_lon.append(ring_lons[a] + t * (ring_lons[b] - ring_lons[a]))
-    blat = np.concatenate(pts_lat)
-    blon = np.concatenate(pts_lon)
-    boundary = kring_cells(hex_cell(blat, blon, res), k=1).ravel()
-    return np.unique(np.concatenate([interior, boundary]))

@@ -206,13 +206,6 @@ class _BitReader:
         self.pos = (self.pos + 7) & ~7
 
 
-def _extend(v: int, n: int) -> int:
-    """T.81 §F.2.2.1 EXTEND: map n received bits to a signed value."""
-    if n == 0:
-        return 0
-    return v if v >= (1 << (n - 1)) else v - (1 << n) + 1
-
-
 def _triangle_upsample_axis(p: np.ndarray, axis: int) -> np.ndarray:
     """Factor-2 'fancy' (triangle-filter) chroma upsampling along one
     axis — the libjpeg convention (3/4·near + 1/4·next, edges

@@ -109,14 +109,6 @@ def pairs_in_rings(plat, plon, ring, edges: RingEdges) -> np.ndarray:
     return inside
 
 
-def points_in_polygon(plat, plon, outer_lats, outer_lons, holes=()) -> np.ndarray:
-    """Ring + holes (relation multipolygon semantics: outer minus inners)."""
-    inside = points_in_ring(plat, plon, outer_lats, outer_lons)
-    for hlat, hlon in holes:
-        inside &= ~points_in_ring(plat, plon, hlat, hlon)
-    return inside
-
-
 def ring_area_deg2(ring_lats, ring_lons) -> float:
     """Signed shoelace area (degree² units; sign = orientation)."""
     y = np.asarray(ring_lats, dtype=np.float64)

@@ -13,8 +13,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-TOKEN_RE = r"[A-Za-z0-9_']+"
-
 # tiny stopword list (shared with quality scoring and the SQL oracle)
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
@@ -28,11 +26,6 @@ def token_count_col(text: Column) -> Column:
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, r"\s+"))
     )
-
-
-def word_tokens_col(text: Column) -> Column:
-    """Word tokens via regexp extraction (BPE-ish splitting)."""
-    return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), F.lit(0))
 
 
 def quality_score_col(text: Column) -> Column:

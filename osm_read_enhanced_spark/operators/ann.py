@@ -1,21 +1,21 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
+- ``ann_ivf_topk`` — the scale path: ``kmeans_fit`` centroids on a
+  driver sample, ``ivf_assign`` puts every vector in its nearest list
+  (broadcast centroid matrix, one matmul per Arrow batch), each query
+  probes its top-nprobe lists through an equi-join on the list id,
+  exact cosine refine + window top-k.
+- ``ann_bruteforce_topk_quantized`` — cosine top-k over int8-style
+  quantized vectors (``quantize_embeddings``), JVM-side integer dot
+  products.
 - ``ann_bruteforce_topk`` — exact cosine top-k: broadcast the (small)
   query set, JVM-side zip_with/aggregate dot products, window top-k.
-  The baseline and the oracle.
-- ``ann_lsh_topk`` — scale path: random-hyperplane LSH buckets
-  (sign-bit sketch) as the blocking key; candidates = bucket equi-join
-  (plus optional multi-probe), exact cosine refine + top-k. Sub-linear
-  candidate generation; the bucket join shuffles on the sketch key.
-- ``ivf_assign`` — IVF-style coarse quantization: assign vectors to the
-  nearest of k centroids (broadcast centroid matrix, one matmul per
-  Arrow batch); probing top-nprobe centroid lists bounds the scan.
+  The oracle for the IVF and quantized recall tests.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,115 +52,6 @@ def ann_bruteforce_topk(
         query_id_col,
         id_col,
         (F.floor(dot / (F.col("_nv") * F.col("_nq")) * 1e6 + 0.5) / 1e6).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine")
-    )
-
-
-def _hyperplanes(dim: int, n_bits: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.normal(size=(n_bits, dim))
-
-
-def with_lsh_bucket(
-    df: DataFrame,
-    dim: int,
-    n_bits: int = 12,
-    vec_col: str = "embedding",
-    out_col: str = "bucket",
-    seed: int = 42,
-) -> DataFrame:
-    """Sign-bit random-hyperplane sketch → int64 bucket (one matmul per
-    Arrow batch)."""
-    planes = _hyperplanes(dim, n_bits, seed)
-    schema = T.StructType([*df.schema.fields, T.StructField(out_col, T.LongType(), False)])
-
-    def add(it):
-        for pdf in it:
-            M = np.vstack(pdf[vec_col].to_numpy())
-            bits = (M @ planes.T) > 0
-            bucket = bits @ (1 << np.arange(n_bits, dtype=np.int64))
-            yield pdf.assign(**{out_col: bucket.astype(np.int64)})
-
-    return df.mapInPandas(add, schema)
-
-
-def with_lsh_probes(
-    df: DataFrame,
-    dim: int,
-    n_bits: int = 12,
-    vec_col: str = "embedding",
-    out_col: str = "bucket",
-    seed: int = 42,
-    multiprobe: int = 0,
-) -> DataFrame:
-    """Query-side multiprobe buckets: the exact sketch bucket PLUS the
-    ``multiprobe`` single-bit flips of the LOWEST-MARGIN bits (the
-    projections closest to their hyperplane — the bits most likely to
-    disagree with a true neighbor's sketch). One matmul + argsort per
-    Arrow batch; output has one row per (input row, probed bucket).
-    """
-    planes = _hyperplanes(dim, n_bits, seed)
-    m = min(multiprobe, n_bits)
-    schema = T.StructType([*df.schema.fields, T.StructField(out_col, T.LongType(), False)])
-
-    def probe(it):
-        for pdf in it:
-            M = np.vstack(pdf[vec_col].to_numpy())
-            margins = M @ planes.T
-            bits = margins > 0
-            base = bits @ (1 << np.arange(n_bits, dtype=np.int64))
-            flips_order = np.argsort(np.abs(margins), axis=1)[:, :m]
-            buckets = np.empty((len(base), m + 1), dtype=np.int64)
-            buckets[:, 0] = base
-            for j in range(m):
-                buckets[:, j + 1] = base ^ (np.int64(1) << flips_order[:, j])
-            out = pdf.loc[pdf.index.repeat(m + 1)].reset_index(drop=True)
-            out[out_col] = buckets.ravel()
-            yield out
-
-    return df.mapInPandas(probe, schema)
-
-
-def ann_lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_bits: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-    multiprobe: int = 0,
-) -> DataFrame:
-    """LSH-bucketed cosine top-k (approximate: recall < 1 when true
-    neighbors land in other buckets). ``multiprobe`` additionally probes
-    that many lowest-margin single-bit-flip buckets per query — recall
-    rises toward exact at the cost of a proportionally larger candidate
-    join (the standard multiprobe trade; vectors are never replicated,
-    only query rows)."""
-    v = with_lsh_bucket(
-        vectors.select(id_col, vec_col), dim, n_bits, vec_col, "bucket", seed
-    ).select(F.col(id_col), F.col(vec_col).alias("_v"), _norm_col("_v").alias("_nv"), "bucket")
-    q = with_lsh_probes(
-        queries.select(query_id_col, vec_col), dim, n_bits, vec_col, "bucket", seed,
-        multiprobe=multiprobe,
-    ).select(
-        F.col(query_id_col), F.col(vec_col).alias("_q"), _norm_col("_q").alias("_nq"), "bucket"
-    )
-    cand = v.join(q, "bucket").filter(F.col(id_col) != F.col(query_id_col))
-    dot = F.aggregate(
-        F.zip_with("_v", "_q", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = cand.select(
-        query_id_col, id_col, (F.floor(dot / (F.col("_nv") * F.col("_nq")) * 1e6 + 0.5) / 1e6).alias("cosine")
     )
     w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
     return (
@@ -372,238 +263,3 @@ def ann_bruteforce_topk_quantized(
         .select(query_id_col, id_col, "rank", "cosine_q")
     )
 
-
-def ann_bruteforce_topk_arrow(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_to: int = 6,
-) -> DataFrame:
-    """Exact cosine top-k, Arrow-vectorized (round 4): the query matrix
-    (tiny) is collected once and closed over; every Arrow batch scores
-    itself against ALL queries with ONE numpy matmul and emits only its
-    LOCAL top-k per query, so the shuffle carries |queries|·k rows per
-    batch instead of |vectors|·|queries| scores; a final window keeps
-    the global top-k. Semantically identical to ann_bruteforce_topk
-    (same rounding, same id tie-break — equality pinned by test), but
-    the scoring loop runs in BLAS instead of a per-element JVM lambda
-    fold: measured 30-100× on the 200k×32 set. This is the brute-force
-    engine the IVF/LSH refine stages want at scale."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    if not q_rows:
-        schema = T.StructType(
-            [
-                T.StructField(query_id_col, T.LongType()),
-                T.StructField(id_col, T.LongType()),
-                T.StructField("rank", T.IntegerType()),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
-        return vectors.sparkSession.createDataFrame([], schema)
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1)[:, None], 1e-300)
-
-    schema = T.StructType(
-        [
-            T.StructField(query_id_col, T.LongType(), False),
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
-    )
-
-    def score(it):
-        for pdf in it:
-            if len(pdf) == 0:  # empty Arrow batch / partition
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1)[:, None], 1e-300)
-            C = Mn @ Qn.T  # (batch, nq) — one BLAS call scores everything
-            out_q, out_id, out_c = [], [], []
-            for qi in range(len(q_ids)):
-                col = C[:, qi]
-                mask = ids != q_ids[qi]
-                cand = np.flatnonzero(mask)
-                if len(cand) == 0:
-                    continue
-                # local top-k with the SAME tie-break as the JVM path:
-                # cosine desc (rounded), then id asc. floor(x·10^r+0.5)
-                # — identical IEEE ops to the JVM path's floor Column
-                # (np.round is half-even, F.round HALF_UP: a cosine on
-                # an exact binary midpoint would flip rank between the
-                # twins — ADVICE r4)
-                scale = float(10 ** round_to)
-                cr = np.floor(col[cand] * scale + 0.5) / scale
-                order = np.lexsort((ids[cand], -cr))[: k]
-                sel = cand[order]  # absolute row positions in the batch
-                out_q.extend([int(q_ids[qi])] * len(sel))
-                out_id.extend(int(x) for x in ids[sel])
-                out_c.extend(float(x) for x in cr[order])  # cr is cand-indexed
-            yield pd.DataFrame({query_id_col: out_q, id_col: out_id, "cosine": out_c})
-
-    local = vectors.select(id_col, vec_col).mapInPandas(score, schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine")
-    )
-
-
-def ann_bruteforce_topk_quantized_arrow(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Arrow-vectorized twin of ``ann_bruteforce_topk_quantized``: the
-    same int8 grid (floor(x/s·127+.5)) and quantized-cosine ranking,
-    scored with one integer matmul per Arrow batch + local-top-k
-    shuffle reduction (the exact-path arrow scorer's shape). Identical
-    results to the JVM-fold quantized path — equality pinned by test —
-    at BLAS speed; this is the memory-bound 100-TB configuration:
-    int8 storage AND vectorized scoring."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def _quantize(M):
-        s = np.abs(M).max(axis=1)
-        safe = np.maximum(s, 1e-300)
-        return np.floor(M / safe[:, None] * 127 + 0.5), s
-
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qq, _ = _quantize(Q)
-    Qn = Qq / np.maximum(np.linalg.norm(Qq, axis=1)[:, None], 1e-300)
-
-    schema = T.StructType(
-        [
-            T.StructField(query_id_col, T.LongType(), False),
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("cosine_q", T.DoubleType(), False),
-        ]
-    )
-
-    def score(it):
-        for pdf in it:
-            if len(pdf) == 0:  # empty Arrow batch / partition
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            Mq, _ = _quantize(M)
-            Mn = Mq / np.maximum(np.linalg.norm(Mq, axis=1)[:, None], 1e-300)
-            C = Mn @ Qn.T
-            out_q, out_id, out_c = [], [], []
-            for qi in range(len(q_ids)):
-                cand = np.flatnonzero(ids != q_ids[qi])
-                if len(cand) == 0:
-                    continue
-                cr = np.floor(C[cand, qi] * 10000 + 0.5) / 10000
-                order = np.lexsort((ids[cand], -cr))[: k]
-                sel = cand[order]
-                out_q.extend([int(q_ids[qi])] * len(sel))
-                out_id.extend(int(x) for x in ids[sel])
-                out_c.extend(float(x) for x in cr[order])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_id, "cosine_q": out_c}
-            )
-
-    local = vectors.select(id_col, vec_col).mapInPandas(score, schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_q").desc(), F.col(id_col).asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine_q")
-    )
-
-
-def kmeans_lloyd_distributed(
-    vectors: DataFrame,
-    k: int = 16,
-    vec_col: str = "embedding",
-    iters: int = 10,
-    seed: int = 42,
-    tol: float = 1e-6,
-) -> np.ndarray:
-    """FULLY DISTRIBUTED Lloyd's k-means (round 4): every iteration is
-    one Arrow-batched pass that emits per-partition PARTIAL sums
-    (cluster → Σx, count) + one tiny groupBy — the map-side-combinable
-    shape that scales to any table size; only the (k × dim) centroid
-    matrix ever reaches the driver. Initialization reuses the bounded
-    driver-sample fit (``kmeans_fit``), so this is the refinement pass
-    over the FULL data that the sample-only fit cannot see. Stops early
-    when the max centroid shift drops below ``tol``.
-
-    Returns the (k, dim) centroid matrix. Objective is monotonically
-    non-increasing (standard Lloyd guarantee) — pinned by test against
-    a clean-room single-machine implementation on identical data.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    cent = kmeans_fit(vectors, k=k, vec_col=vec_col, seed=seed)
-    dim = cent.shape[1]
-    schema = T.StructType(
-        [
-            T.StructField("list_id", T.IntegerType(), False),
-            T.StructField("psum", T.ArrayType(T.DoubleType()), False),
-            T.StructField("n", T.LongType(), False),
-        ]
-    )
-    for _ in range(iters):
-        c = cent.copy()
-        c_norm2 = (c * c).sum(axis=1)
-
-        def partial(it, c=c, c_norm2=c_norm2):
-            for pdf in it:
-                if len(pdf) == 0:  # empty Arrow batch / partition
-                    continue
-                M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                d2 = (M * M).sum(1)[:, None] - 2 * (M @ c.T) + c_norm2[None, :]
-                lab = d2.argmin(1)
-                rows = []
-                for j in np.unique(lab):
-                    m = lab == j
-                    rows.append((int(j), M[m].sum(0).tolist(), int(m.sum())))
-                yield pd.DataFrame(rows, columns=["list_id", "psum", "n"])
-
-        agg = (
-            vectors.select(vec_col)
-            .mapInPandas(partial, schema)
-            .groupBy("list_id")
-            .agg(
-                F.aggregate(
-                    F.collect_list("psum"),
-                    F.array(*[F.lit(0.0)] * dim),
-                    lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-                ).alias("sum"),
-                F.sum("n").alias("n"),
-            )
-            .collect()
-        )
-        new_cent = cent.copy()
-        for r in agg:
-            if r["n"]:
-                new_cent[r["list_id"]] = np.array(r["sum"]) / r["n"]
-        shift = float(np.abs(new_cent - cent).max())
-        cent = new_cent
-        if shift < tol:
-            break
-    return cent

@@ -9,7 +9,9 @@
                        exact signature/jaccard similarity.
 - simhash_pairs      — 64-bit SimHash + hamming radius via band rotation
 - ngram_jaccard_pairs— n-gram Jaccard verify over LSH or prefix blocks
-- embedding_dup_pairs— cosine near-dup over embedding vectors
+- embedding_dup_pairs_exact — exact cosine near-dup over embedding
+                       vectors: a broadcast matmul scan for small
+                       tables, a banded equi-join beyond
 
 All heavy text kernels run vectorized in Arrow batches
 (functions.text); joins/groupBys stay JVM-side.
@@ -456,6 +458,19 @@ def dedup_keep_list(
     )
 
 
+# Rows of an Arrow batch scored at once by the broadcast prefilter: the
+# score matrix and mask per worker are this many rows × the table size,
+# whatever the batch size.
+_DUP_SLICE_ROWS = 128
+
+
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; all-zero rows stay zero."""
+    norms = np.sqrt((M * M).sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(norms[:, None] > 0, M / norms[:, None], 0.0)
+
+
 def embedding_dup_pairs_broadcast(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -470,8 +485,8 @@ def embedding_dup_pairs_broadcast(
     is inherently O(n²) COMPUTE, and this path keeps that compute
     vectorized and embarrassingly parallel over rows. Use while the
     table fits one broadcast (≲ a few hundred MB of vectors); beyond
-    that, block first (``embedding_dup_pairs`` with an LSH
-    ``block_col`` — approximate) or IVF-partition.
+    that, ``embedding_dup_pairs_banded`` is the exact equi-join plan
+    (``embedding_dup_pairs_exact`` picks between the two).
 
     The threshold is applied to the UNROUNDED cosine (SQL-oracle
     semantics); ``round_to`` only formats the output column.
@@ -480,9 +495,10 @@ def embedding_dup_pairs_broadcast(
     zip_with/aggregate dot per (row, table-entry) pair INTERPRETED —
     higher-order functions are not codegen'd — so q33 at sf1.0
     (20k x 64) ran >580 s; now ~seconds):
-      1. a numpy matmul PREFILTER inside mapInArrow — each batch
-         multiplies its normalized rows against the broadcast
-         normalized matrix and emits (id_a, id_b) for every entry
+      1. a numpy matmul PREFILTER inside mapInArrow — each batch, in
+         slices of ``_DUP_SLICE_ROWS`` rows, multiplies its normalized
+         rows against the broadcast normalized matrix (collected
+         through Arrow) and emits (id_a, id_b) for every entry
          within a safety margin of the threshold (margin 1e-6 ≫ the
          float64 matmul-vs-sequential-fold divergence, so no
          qualifying pair can be missed);
@@ -493,8 +509,8 @@ def embedding_dup_pairs_broadcast(
          because IEEE multiplication is commutative and the fold order
          is the element order on both paths.
     """
-    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from ..session import python_parallelism, widen
 
@@ -504,41 +520,38 @@ def embedding_dup_pairs_broadcast(
         F.transform(vec_col, lambda x: x.cast("double")).alias("_v"),
     ).withColumn("_n", F.sqrt(F.aggregate("_v", F.lit(0.0), lambda a, x: a + x * x)))
 
-    rows = v.select(F.col(id_col).alias("_id"), "_v").collect()
-    ids_all = np.array([r["_id"] for r in rows], dtype=np.int64)
-    M = (
-        np.array([r["_v"] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 0), dtype=np.float64)
-    )
-    norms = np.sqrt((M * M).sum(axis=1))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        Mn = np.where(norms[:, None] > 0, M / norms[:, None], 0.0)
-    bc = spark.sparkContext.broadcast((ids_all, Mn))
+    # ids stay in the column's own Arrow type; pairs are ordered by the
+    # ids' dense rank, which follows that type's ordering
+    table = v.select(id_col, "_v").toArrow()
+    ids_all = table.column(0).combine_chunks()
+    rank_all = pc.rank(ids_all, tiebreaker="dense").to_numpy()
+    n = len(ids_all)
+    flat = table.column(1).combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    dim = len(flat) // n if n else 0
+    Mn = _unit_rows(np.asarray(flat, dtype=np.float64).reshape(n, dim))
+    bc = spark.sparkContext.broadcast((ids_all, rank_all, Mn))
     thr = float(threshold) - 1e-6
-    dim = M.shape[1]
 
     def prefilter(batches):
-        ids_b, Mb = bc.value
+        ids_b, rank_b, Mb = bc.value
         for rb in batches:
-            ids = np.asarray(rb.column(0).to_numpy(zero_copy_only=False), dtype=np.int64)
+            ids = rb.column(0)
+            rank = rank_b[pc.index_in(ids, value_set=ids_b).to_numpy()]
             # flatten() (not .values) respects a sliced batch's offsets
             flat = np.asarray(
                 rb.column(1).flatten().to_numpy(zero_copy_only=False),
                 dtype=np.float64,
             )
-            A = flat.reshape(len(ids), dim) if dim else np.zeros((len(ids), 0))
-            an = np.sqrt((A * A).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                An = np.where(an[:, None] > 0, A / an[:, None], 0.0)
-            S = An @ Mb.T
-            mask = (S >= thr) & (ids_b[None, :] > ids[:, None])
-            pi, pj = np.nonzero(mask)
-            if len(pi):
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids[pi]), pa.array(ids_b[pj])],
-                    names=["id_a", "id_b"],
-                )
+            An = _unit_rows(flat.reshape(len(ids), dim))
+            for lo in range(0, len(ids), _DUP_SLICE_ROWS):
+                hi = lo + _DUP_SLICE_ROWS
+                S = An[lo:hi] @ Mb.T
+                pi, pj = np.nonzero((S >= thr) & (rank_b[None, :] > rank[lo:hi, None]))
+                if len(pi):
+                    yield pa.RecordBatch.from_arrays(
+                        [ids.take(pa.array(lo + pi)), ids_b.take(pa.array(pj))],
+                        names=["id_a", "id_b"],
+                    )
 
     src = widen(
         v.select(id_col, "_v"),
@@ -570,52 +583,6 @@ def embedding_dup_pairs_broadcast(
         .withColumn("_c", dot / (F.col("_nb") * F.col("_na")))
         .filter(F.col("_c") >= F.lit(float(threshold)))
         .select("id_a", "id_b", F.round("_c", round_to).alias("cosine"))
-    )
-
-
-def embedding_dup_pairs(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    block_col=None,
-) -> DataFrame:
-    """Cosine near-dup pairs over an embedding column.
-
-    Without ``block_col`` this is the exact quadratic self-join
-    (test-scale / oracle path); with a blocking column (e.g. an LSH
-    bucket from operators.ann) candidates come from the block equi-join.
-    Cosine is computed JVM-side via zip_with/aggregate — no Python.
-    """
-    v = embeddings.select(
-        F.col(id_col),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("_v"),
-        F.sqrt(
-            F.aggregate(vec_col, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double"))
-        ).alias("_n"),
-        *([F.col(block_col)] if block_col else []),
-    )
-    a, b = v.alias("a"), v.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    if block_col:
-        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-        cand = a.join(b, cond)
-    else:
-        cand = a.join(b, cond)
-    dot = F.aggregate(
-        F.zip_with(F.col("a._v"), F.col("b._v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("a._n") * F.col("b._n"))
-    return (
-        cand.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 

@@ -1,20 +1,23 @@
 """kNN over geo points (SURVEY.md §2.5 J5, §2.7 W3).
 
-``knn_join``: kRing expansion reduces the theta-join to an equi-join —
-each left point probes the cells of its k-ring; right points are keyed
-by their cell. Exact haversine refine + row_number window top-k. The
-ring radius must cover the true kNN radius (pick ``res``/``ring`` so a
-ring holds ≥ k right points in the sparsest region of interest —
-documented contract, same as H3 kRing kNN in production systems).
+``knn_join_adaptive``: kRing expansion reduces the theta-join to an
+equi-join — each left point probes the cells of its k-ring; right
+points are keyed by their cell; exact haversine refine + row_number
+window top-k. The ring doubles per round until each point's kth
+neighbor lies provably inside the probed cells, so the result is exact
+on any density.
 
-``knn_bruteforce``: exact O(n·m) variant used as the oracle at test
-scale and for small right sides (broadcast + no cell pruning).
+``knn_topk_broadcast``: exact kNN with zero shuffle when the right side
+fits one in-memory array.
+
+``knn_bruteforce``: exact O(n·m) broadcast cross join — the adaptive
+join's fallback for points no ring round resolves, and the oracle at
+test scale.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,50 +68,6 @@ def _with_kring(df: DataFrame, res: int, ring: int, lat_col: str, lon_col: str) 
     return df.mapInPandas(add, schema)
 
 
-def knn_join(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = 5,
-    res: int = 7,
-    ring: int = 1,
-    left_id: str = "point_id",
-    right_id: str = "neighbor_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """→ (left_id, right_id, rank, dist_m), rank 1..k by exact haversine,
-    ties broken by right id (deterministic)."""
-    lt = _with_kring(
-        left.select(F.col(left_id), F.col(lat_col), F.col(lon_col)), res, ring, lat_col, lon_col
-    ).select(
-        left_id,
-        F.col(lat_col).alias("_llat"),
-        F.col(lon_col).alias("_llon"),
-        F.explode("probe_cells").alias("cell"),
-    )
-    rt = _with_cell(
-        right.select(F.col(right_id), F.col(lat_col), F.col(lon_col)), res, lat_col, lon_col,
-        "cell",
-    ).select(right_id, F.col(lat_col).alias("_rlat"), F.col(lon_col).alias("_rlon"), "cell")
-    cand = lt.join(rt, "cell", "inner")
-    if exclude_self:
-        cand = cand.filter(F.col(left_id) != F.col(right_id))
-    scored = cand.select(
-        left_id,
-        right_id,
-        haversine_col(F.col("_llat"), F.col("_llon"), F.col("_rlat"), F.col("_rlon")).alias(
-            "dist_m"
-        ),
-    ).dropDuplicates([left_id, right_id])
-    w = Window.partitionBy(left_id).orderBy(F.col("dist_m").asc(), F.col(right_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(left_id, right_id, "rank", "dist_m")
-    )
-
-
 def knn_topk_broadcast(
     left: DataFrame,
     right: DataFrame,
@@ -130,7 +89,8 @@ def knn_topk_broadcast(
     which shuffles every scored pair into the window exchange. The plan
     is scan → 1-row broadcast join → project: linear in |left| at any
     scale. Use when |right| fits one in-memory array (≲ a few hundred
-    thousand rows); otherwise use ``knn_join`` (kRing equi-join).
+    thousand rows); otherwise use ``knn_join_adaptive`` (kRing
+    equi-join).
 
     ``round_dist``: optional decimals to round the distance to BEFORE
     ranking (deterministic tie grouping, matches SQL oracles that rank
@@ -234,9 +194,9 @@ def knn_join_adaptive(
 ) -> DataFrame:
     """EXACT kNN via iterative ring expansion — no coverage contract.
 
-    ``knn_join`` requires the caller to pick a ring that covers the true
-    kNN radius (fails silently in sparse regions). This operator removes
-    that trap: each round probes a doubling ring; a left point RESOLVES
+    The caller picks no ring radius (a fixed ring that misses the true
+    kNN radius would fail silently in sparse regions): each round
+    probes a doubling ring; a left point RESOLVES
     when it has ≥ k candidates whose kth distance is within the ring's
     provably-covered radius (_covered_meters). Unresolved points carry
     to the next round; anything still unresolved after ``max_rounds``

@@ -7,8 +7,10 @@ from the reference parser's node-ref resolution"): explode refs with
 position, equi-join nodes on the int64 id (sort-merge/shuffle-hash at
 scale; broadcast when the node table is small), then re-assemble
 ordered coordinate arrays via array_sort(collect_list(struct(pos,…))).
-All JVM-side; only polyfill (covering-cell computation) runs in a
-pandas UDF.
+All JVM-side. The polygon rows (polygon_id, tags, lats, lons) from
+``closed_way_polygons`` / ``relation_multipolygons`` feed
+``spatial_join.pip_join_broadcast`` directly; only relation ring
+stitching and geometry simplification run in pandas batches.
 """
 
 from __future__ import annotations
@@ -18,9 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..functions import hexgrid
-from ..functions.pip import ring_area_deg2
 
 
 def assemble_way_geometries(
@@ -93,61 +92,6 @@ def closed_way_polygons(way_geoms: DataFrame, kinds: list[str] | None = None) ->
         F.slice("lats", 1, F.size("lats") - 1).alias("lats"),
         F.slice("lons", 1, F.size("lons") - 1).alias("lons"),
     )
-
-
-POLYGON_LAYER_SCHEMA = T.StructType(
-    [
-        T.StructField("polygon_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("lats", T.ArrayType(T.DoubleType()), False),
-        T.StructField("lons", T.ArrayType(T.DoubleType()), False),
-        T.StructField("minlat", T.DoubleType(), False),
-        T.StructField("minlon", T.DoubleType(), False),
-        T.StructField("maxlat", T.DoubleType(), False),
-        T.StructField("maxlon", T.DoubleType(), False),
-        T.StructField("covering_cells", T.ArrayType(T.LongType()), False),
-    ]
-)
-
-
-def build_polygon_layer(polygons: DataFrame, kind_expr=None, cover_res: int = 7) -> DataFrame:
-    """polygon rows (polygon_id, tags, lats, lons) → the broadcastable
-    layer with bbox + hex covering cells (coarse-join key set).
-
-    bbox is column math; covering cells (polyfill) runs vectorized in a
-    pandas batch per polygon.
-    """
-    if kind_expr is None:
-        kind_expr = F.coalesce(
-            F.when(F.map_contains_key("tags", F.lit("admin_level")), F.lit("admin")),
-            F.when(F.map_contains_key("tags", F.lit("landuse")), F.lit("landuse")),
-            F.lit("other"),
-        )
-    with_bbox = polygons.select(
-        "polygon_id",
-        kind_expr.alias("kind"),
-        "tags",
-        "lats",
-        "lons",
-        F.array_min("lats").alias("minlat"),
-        F.array_min("lons").alias("minlon"),
-        F.array_max("lats").alias("maxlat"),
-        F.array_max("lons").alias("maxlon"),
-    )
-
-    def add_cover(it):
-        for pdf in it:
-            covers = [
-                hexgrid.polyfill(
-                    np.asarray(la, dtype=np.float64), np.asarray(lo, dtype=np.float64), cover_res
-                ).tolist()
-                for la, lo in zip(pdf["lats"], pdf["lons"])
-            ]
-            pdf = pdf.assign(covering_cells=covers)
-            yield pdf
-
-    return with_bbox.mapInPandas(add_cover, POLYGON_LAYER_SCHEMA)
 
 
 def relation_multipolygons(

@@ -1,7 +1,5 @@
 """Distributed point-in-polygon joins (SURVEY.md §2.5 J4).
 
-Two physical strategies, chosen by polygon-layer size:
-
 - ``pip_join_broadcast`` — the north-star pattern: the polygon layer is
   collected through Arrow into flat CSR arrays (ids, bboxes, ring
   vertex offsets and coordinates) and broadcast once; every task lazily
@@ -9,13 +7,10 @@ Two physical strategies, chosen by polygon-layer size:
   per Arrow batch emits each (point, polygon-bbox) candidate once from
   the grid and refines all candidates in one chunked ring-edge ray cast
   — no Python loop per polygon. Zero shuffle on the fact side; scales
-  to any number of points. Right choice while polygons ≤ a few hundred MB.
-- ``pip_join_cells`` — for huge polygon layers: polygons explode their
-  hex covering cells, points compute their cell, equi-join on the cell
-  (shuffle, AQE-skew-aware), then exact ray-cast refine per matched
-  pair. Shuffles scale with candidate pairs, not |points| × |polygons|.
-
-Both refine with the same ray-cast arithmetic; results are identical.
+  to any number of points while the polygon layer fits one broadcast
+  (≤ a few hundred MB).
+- ``pip_join_with_holes`` — multipolygon outer-minus-inner containment
+  composed from two broadcast probes and an anti-join.
 """
 
 from __future__ import annotations
@@ -23,13 +18,10 @@ from __future__ import annotations
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import hexgrid
-from ..functions.pip import pairs_in_rings, points_in_ring, ring_edges
+from ..functions.pip import pairs_in_rings, ring_edges
 from .grid_index import GridIndex
 
 # Per-worker cache of broadcast-built probe indexes, keyed by a
@@ -165,86 +157,10 @@ def pip_join_broadcast(
     return proj.mapInArrow(probe, schema)
 
 
-def pip_join_cells(
-    points: DataFrame,
-    polygon_layer: DataFrame,
-    res: int = 7,
-    point_id_col: str = "point_id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    salt_buckets: int = 0,
-) -> DataFrame:
-    """Cell-coarse equi-join + exact refine → (point_id, polygon_id).
-
-    ``polygon_layer`` needs covering_cells (see build_polygon_layer).
-    ``salt_buckets`` > 0 adds an explicit salt on the cell key for
-    pathologically hot cells (dense-city skew) on top of AQE skew-join.
-    """
-    cell_schema = T.StructType(
-        [*points.select(point_id_col, lat_col, lon_col).schema.fields,
-         T.StructField("cell", T.LongType(), False)]
-    )
-
-    def add_cell(it):
-        for pdf in it:
-            cells = hexgrid.hex_cell(
-                pdf[lat_col].to_numpy(dtype=np.float64),
-                pdf[lon_col].to_numpy(dtype=np.float64),
-                res,
-            )
-            yield pdf.assign(cell=cells)
-
-    from ..session import python_parallelism
-
-    pts = (
-        points.select(point_id_col, lat_col, lon_col)
-        .repartition(python_parallelism(points.sparkSession))
-        .mapInPandas(add_cell, cell_schema)
-    )
-    poly_cells = polygon_layer.select(
-        "polygon_id", "lats", "lons", F.explode("covering_cells").alias("cell")
-    )
-    if salt_buckets > 0:
-        # replicate polygon side per salt; points pick one salt
-        pts = pts.withColumn(
-            "_salt", (F.pmod(F.hash(F.col(point_id_col)), F.lit(salt_buckets))).cast("int")
-        )
-        poly_cells = poly_cells.crossJoin(
-            pts.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("_salt"))
-        )
-        cand = pts.join(poly_cells, ["cell", "_salt"], "inner")
-    else:
-        cand = pts.join(poly_cells, "cell", "inner")
-
-    refine_schema = T.StructType(
-        [points.schema[point_id_col], T.StructField("polygon_id", T.LongType(), False)]
-    )
-
-    def refine(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ys = pdf[lat_col].to_numpy(dtype=np.float64)
-            xs = pdf[lon_col].to_numpy(dtype=np.float64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for poly_id, grp in pdf.groupby("polygon_id", sort=False):
-                idx = grp.index.to_numpy()
-                loc = pdf.index.get_indexer(idx)
-                la = np.asarray(grp["lats"].iloc[0], dtype=np.float64)
-                lo = np.asarray(grp["lons"].iloc[0], dtype=np.float64)
-                keep[loc] = points_in_ring(ys[loc], xs[loc], la, lo)
-            out = pdf.loc[keep, [point_id_col, "polygon_id"]]
-            if len(out):
-                yield out
-
-    return cand.mapInPandas(refine, refine_schema).dropDuplicates([point_id_col, "polygon_id"])
-
-
 def pip_join_with_holes(
     points: DataFrame,
     outer_layer: DataFrame,
     inner_layer: DataFrame | None,
-    strategy=None,
     **kw,
 ) -> DataFrame:
     """Hole-aware containment → (point_id, polygon_id): inside some
@@ -252,22 +168,18 @@ def pip_join_with_holes(
     (multipolygon even-odd semantics for one nesting level — the OSM
     relation outer/inner model, reference pbfParser relation roles).
 
-    Pure DataFrame composition: ``strategy`` (default
-    ``pip_join_broadcast``) runs once per ring layer, then a
-    ``left_anti`` on (point_id, polygon_id) subtracts hole hits — no
-    new refine kernel, both legs keep their plan shape (broadcast
-    grid index or cell equi-join + AQE), and the anti-join shuffles only
-    O(|matches|) narrow rows. Build the layers by role:
-    ``build_polygon_layer(rings.filter(role == 'outer'))`` /
-    ``...('inner')`` from ``relation_multipolygons`` output.
+    Pure DataFrame composition: ``pip_join_broadcast`` runs once per
+    ring layer (``kw`` is passed to it), then a ``left_anti`` on
+    (point_id, polygon_id) subtracts hole hits — no new refine kernel,
+    and the anti-join shuffles only O(|matches|) narrow rows. The layers
+    are ``relation_multipolygons`` output split by role:
+    ``rings.filter(role == 'outer')`` / ``...('inner')``.
     """
-    if strategy is None:
-        strategy = pip_join_broadcast
     point_id_col = kw.get("point_id_col", "point_id")
-    outer_hits = strategy(points, outer_layer, **kw)
+    outer_hits = pip_join_broadcast(points, outer_layer, **kw)
     if inner_layer is None:
         return outer_hits
-    inner_hits = strategy(points, inner_layer, **kw)
+    inner_hits = pip_join_broadcast(points, inner_layer, **kw)
     return outer_hits.join(
         inner_hits, [point_id_col, "polygon_id"], "left_anti"
     )

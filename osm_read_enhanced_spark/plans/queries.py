@@ -63,12 +63,6 @@ def _haversine_sql(lat1, lon1, lat2, lon2) -> str:
     )
 
 
-def _haversine_col(lat1, lon1, lat2, lon2):
-    from ..functions.geo import haversine_col
-
-    return haversine_col(lat1, lon1, lat2, lon2)
-
-
 def _sql_mulmod64(v: str, c_full: int) -> str:
     """a·c mod 2^64 in DuckDB SQL with the multiply split into 32-bit
     halves (HUGEINT is signed-127-bit; a full 64×64 product overflows):
@@ -1747,7 +1741,7 @@ def q46(spark, sf_dir):
     "composition (multipolygon outer/inner semantics, SURVEY §2.5 J4)",
 )
 def q47(spark, sf_dir):
-    from ..operators.spatial_join import pip_join_broadcast, pip_join_with_holes
+    from ..operators.spatial_join import pip_join_with_holes
 
     c = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("point_id"),
@@ -1772,7 +1766,7 @@ def q47(spark, sf_dir):
         F.col("r_regionkey").cast("long").alias("polygon_id"),
         *square(mnlat + 5.0, mnlat + 15.0, mnlon + 10.0, mnlon + 35.0),
     )
-    return pip_join_with_holes(c, outer, holes, strategy=pip_join_broadcast).select(
+    return pip_join_with_holes(c, outer, holes).select(
         F.col("point_id").alias("c_custkey"), F.col("polygon_id").alias("box_id")
     )
 

@@ -19,8 +19,8 @@ def s2_cell_l10(lat: pd.Series, lon: pd.Series) -> pd.Series:
 def hex_cell_udf(res):
     """TRUE icosahedral H3 cell id at ``res`` (functions/h3core.py) —
     the user-facing H3 surface (BASELINE north_rule). The planar
-    ``hexgrid`` lattice remains only as an internal blocking grid for
-    kNN/PIP operators."""
+    ``hexgrid`` lattice remains only as the internal blocking grid of
+    the kNN operator."""
 
     @F.pandas_udf("long")
     def cell(lat: pd.Series, lon: pd.Series) -> pd.Series:
@@ -42,27 +42,6 @@ def h3_parent_udf(cell, parent_res: int):
         .bitwiseOR(F.lit(parent_res << 52))
         .bitwiseOR(F.lit(digit7_mask))
     )
-
-
-def h3_kring_size_udf(res, k=1):
-    """Size of the H3 grid disk around each point's cell (exposes the
-    pentagon-aware kRing: 1+3k(k+1) for hexagons, smaller at the 12
-    pentagons)."""
-
-    @F.pandas_udf("long")
-    def ring(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from ..functions import h3core
-
-        cells = h3core.latlng_to_cell_vec(lat.to_numpy(), lon.to_numpy(), res)
-        uniq, inv = np.unique(cells, return_inverse=True)
-        sizes = np.array(
-            [len(h3core.grid_disk(int(c), k)) for c in uniq], dtype=np.int64
-        )
-        return pd.Series(sizes[inv])
-
-    return ring
 
 
 @F.pandas_udf("string")

@@ -6,7 +6,7 @@ Deterministic (seed folded from image index), generated distributedly:
 ``spark.range`` → one Arrow batch per task renders, encodes, and hashes
 its images — the generator itself scales like the engine (no driver
 loop). Geotags are a mixture of world-uniform + a dense urban cluster
-so the dense-city skew path (salting + AQE skew join) is actually
+so the dense-city skew path (AQE skew join) is actually
 exercised (SURVEY.md §7 risk register).
 """
 

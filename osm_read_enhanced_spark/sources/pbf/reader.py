@@ -162,7 +162,7 @@ def _select_data_blocks(
     """
     if block_index is None:
         # cache: the per-file header walk runs once, not once per action.
-        # Released via release_pbf(dfs) / open_pbf(...) — read_pbf threads
+        # Released via release_pbf(dfs) — read_pbf threads
         # the cached index through the returned dict for that purpose.
         block_index = pbf_block_index(spark, paths).cache()
     index = block_index
@@ -315,7 +315,7 @@ def read_pbf(
     for kind in kinds:
         out[kind + "s"] = union.filter(F.col("kind") == kind).select(*_KIND_COLS[kind])
     # expose the shared (possibly persisted) union + cached index so
-    # callers can release storage: release_pbf(dfs) or `with open_pbf(...)`
+    # callers can release storage with release_pbf(dfs)
     out["union"] = union
     out["_block_index"] = block_index
     return out
@@ -328,26 +328,6 @@ def release_pbf(dfs: dict) -> None:
         df = dfs.get(key)
         if df is not None:
             df.unpersist()
-
-
-class open_pbf:
-    """Context-managed ``read_pbf``: storage (persisted union + cached
-    block index) is released on exit — the ergonomic path for long-lived
-    sessions doing many reads.
-
-    >>> with open_pbf(spark, path, kinds=("node", "way")) as dfs:
-    ...     dfs["nodes"].count()
-    """
-
-    def __init__(self, spark, paths, **kwargs):
-        self._dfs = read_pbf(spark, paths, **kwargs)
-
-    def __enter__(self):
-        return self._dfs
-
-    def __exit__(self, *exc):
-        release_pbf(self._dfs)
-        return False
 
 
 def count_elements(
@@ -399,16 +379,3 @@ def count_elements(
             )
 
     return index.mapInPandas(count_partition, schema)
-
-
-
-def read_pbf_header(path: str) -> dict:
-    """Decode the OSMHeader block (bbox/features/writingprogram) —
-    driver-side, tiny."""
-    from .blocks import read_block_payload
-    from .decode import decode_header_block
-
-    for b in scan_blocks(path, max_blocks=4):
-        if b.block_type == "OSMHeader":
-            return decode_header_block(decode_blob(read_block_payload(b)))
-    raise ValueError(f"{path}: no OSMHeader block found")

@@ -1,4 +1,4 @@
-"""ANN (brute-force / LSH / IVF) and dedup operator tests."""
+"""ANN (brute-force / IVF / int8-quantized) and dedup operator tests."""
 
 import numpy as np
 import pytest
@@ -6,12 +6,10 @@ from pyspark.sql import functions as F
 
 from osm_read_enhanced_spark.operators.ann import (
     ann_bruteforce_topk,
-    ann_lsh_topk,
     ivf_assign,
     kmeans_fit,
 )
 from osm_read_enhanced_spark.operators.dedup import (
-    embedding_dup_pairs,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -47,20 +45,6 @@ def test_bruteforce_topk_exact(spark, vectors):
     assert all(cs == sorted(cs, reverse=True) for cs in by_q.values())
 
 
-def test_lsh_topk_recall(spark, vectors):
-    q = vectors.limit(5).select(F.col("vec_id").alias("query_id"), "embedding")
-    exact = {
-        (r.query_id, r.vec_id)
-        for r in ann_bruteforce_topk(vectors, q, k=4).collect()
-    }
-    approx = {
-        (r.query_id, r.vec_id)
-        for r in ann_lsh_topk(vectors, q, dim=16, k=4, n_bits=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.7  # separated clusters → same-bucket neighbors
-
-
 def test_ivf_assign_clusters(spark, vectors):
     cent = kmeans_fit(vectors, k=3, iters=8)
     assert cent.shape == (3, 16)
@@ -71,17 +55,6 @@ def test_ivf_assign_clusters(spark, vectors):
         mapping.setdefault(r.label, set()).add(r.list_id)
     assert all(len(v) == 1 for v in mapping.values())
     assert len({next(iter(v)) for v in mapping.values()}) == 3
-
-
-def test_embedding_dup_pairs(spark, vectors):
-    # append a near-duplicate of vec 0
-    v0 = vectors.filter("vec_id = 0").collect()[0].embedding
-    dup = spark.createDataFrame(
-        [(1000, [float(x) * 1.0001 for x in v0], 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    pairs = embedding_dup_pairs(vectors.unionByName(dup), threshold=0.999).collect()
-    assert any((p.id_a, p.id_b) == (0, 1000) for p in pairs)
 
 
 def test_dedup_chain_end_to_end(spark):
@@ -149,32 +122,6 @@ def test_ivf_topk_exact_when_probing_all_lists(spark, vectors):
     want = {(r.query_id, r.vec_id) for r in exact}
     recall = len(got & want) / len(want)
     assert recall >= 0.4, recall
-
-
-def test_lsh_multiprobe_raises_recall(spark, vectors):
-    """Probing the lowest-margin flip buckets must find at least as many
-    true neighbors as exact-bucket-only, and probing every flip of a
-    short sketch approaches brute force."""
-    q = vectors.filter("vec_id < 5").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {
-        (r.query_id, r.vec_id)
-        for r in ann_bruteforce_topk(vectors, q, k=4).collect()
-    }
-
-    def recall(multiprobe):
-        got = {
-            (r.query_id, r.vec_id)
-            for r in ann_lsh_topk(
-                vectors, q, dim=16, k=4, n_bits=6, multiprobe=multiprobe
-            ).collect()
-        }
-        return len(exact & got) / len(exact)
-
-    r0, r3, r6 = recall(0), recall(3), recall(6)
-    assert r0 <= r3 + 1e-9 and r3 <= r6 + 1e-9
-    assert r6 >= 0.8
 
 
 def test_quantized_ann_recall_vs_exact(spark):
@@ -255,104 +202,3 @@ def test_prefix_filter_jaccard_equals_bruteforce(spark):
             expected[(a, b)] = int(inter / union * 10000 + 0.5) / 10000
     assert got == expected and len(expected) >= 15
 
-
-def test_arrow_bruteforce_equals_jvm_bruteforce(spark):
-    """The Arrow-vectorized scorer (round 4) must produce EXACTLY the
-    JVM fold path's top-k — same rounding, same tie-break."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from osm_read_enhanced_spark.operators.ann import (
-        ann_bruteforce_topk,
-        ann_bruteforce_topk_arrow,
-    )
-
-    rng = np.random.default_rng(5)
-    M = rng.normal(size=(300, 16))
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in M[i]]) for i in range(len(M))],
-        "vec_id long, embedding array<double>",
-    ).repartition(8)
-    qs = df.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = sorted(map(tuple, ann_bruteforce_topk(df, qs, k=7).collect()))
-    b = sorted(map(tuple, ann_bruteforce_topk_arrow(df, qs, k=7).collect()))
-    assert len(a) == len(b) == 6 * 7
-    for (qa, va, ra, ca), (qb, vb, rb, cb) in zip(a, b):
-        assert (qa, va, ra) == (qb, vb, rb)
-        assert abs(ca - cb) < 1e-9
-
-
-def test_quantized_arrow_equals_quantized_jvm(spark):
-    """The Arrow quantized scorer must equal the JVM-fold quantized
-    path exactly (same int8 grid, same rounding, same tie-break)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from osm_read_enhanced_spark.operators.ann import (
-        ann_bruteforce_topk_quantized,
-        ann_bruteforce_topk_quantized_arrow,
-    )
-
-    rng = np.random.default_rng(8)
-    M = rng.normal(size=(250, 12))
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in M[i]]) for i in range(len(M))],
-        "vec_id long, embedding array<double>",
-    ).repartition(6)
-    qs = df.filter(F.col("vec_id") % 50 == 1).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = sorted(map(tuple, ann_bruteforce_topk_quantized(df, qs, k=6).collect()))
-    b = sorted(map(tuple, ann_bruteforce_topk_quantized_arrow(df, qs, k=6).collect()))
-    assert len(a) == len(b) == 5 * 6
-    for (qa, va, ra, ca), (qb, vb, rb, cb) in zip(a, b):
-        assert (qa, va, ra) == (qb, vb, rb)
-        assert abs(ca - cb) < 1e-9
-
-
-def test_distributed_lloyd_matches_cleanroom(spark):
-    """Distributed Lloyd refinement (round 4): per-partition partial
-    sums + tiny groupBy per iteration must produce EXACTLY the
-    centroids of a clean-room single-machine Lloyd run from the same
-    initialization, and must not increase the k-means objective vs the
-    sample-only fit."""
-    import numpy as np
-
-    from osm_read_enhanced_spark.operators.ann import (
-        kmeans_fit,
-        kmeans_lloyd_distributed,
-    )
-
-    rng = np.random.default_rng(21)
-    centers = rng.normal(size=(5, 8)) * 6
-    M = np.vstack([c + rng.normal(scale=0.4, size=(200, 8)) for c in centers])
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in M[i]]) for i in range(len(M))],
-        "vec_id long, embedding array<double>",
-    ).repartition(8)
-
-    got = kmeans_lloyd_distributed(df, k=5, iters=6, seed=7)
-
-    # clean-room Lloyd from the SAME init over the full data
-    cent = kmeans_fit(df, k=5, seed=7)
-    for _ in range(6):
-        d2 = (M * M).sum(1)[:, None] - 2 * (M @ cent.T) + (cent * cent).sum(1)[None, :]
-        lab = d2.argmin(1)
-        new = cent.copy()
-        for j in range(5):
-            m = lab == j
-            if m.any():
-                new[j] = M[m].mean(0)
-        if np.abs(new - cent).max() < 1e-6:
-            cent = new
-            break
-        cent = new
-    assert np.allclose(got, cent, atol=1e-9), np.abs(got - cent).max()
-
-    def objective(c):
-        d2 = (M * M).sum(1)[:, None] - 2 * (M @ c.T) + (c * c).sum(1)[None, :]
-        return float(d2.min(1).sum())
-
-    assert objective(got) <= objective(kmeans_fit(df, k=5, seed=7)) + 1e-9

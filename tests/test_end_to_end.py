@@ -1,5 +1,5 @@
-"""Full-pipeline integration: PBF decode → way assembly → multipolygon →
-polygon layer → PIP join of synthetic geotagged images → tile rollup —
+"""Full-pipeline integration: PBF decode → way assembly → multipolygon
+rings → PIP join of synthetic geotagged images → tile rollup —
 the north-star flow, plus reader budget limits (reference F2/F4)."""
 
 import numpy as np
@@ -7,15 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_read_enhanced_spark.fixtures import build_pitcairn_like
+from osm_read_enhanced_spark.functions.pip import points_in_ring
 from osm_read_enhanced_spark.operators.polygons import (
     assemble_way_geometries,
-    build_polygon_layer,
     relation_multipolygons,
 )
-from osm_read_enhanced_spark.operators.spatial_join import (
-    pip_join_broadcast,
-    pip_join_cells,
-)
+from osm_read_enhanced_spark.operators.spatial_join import pip_join_broadcast
 from osm_read_enhanced_spark.operators.tiles import assign_tiles, tile_stats
 from osm_read_enhanced_spark.sources.pbf import read_pbf
 
@@ -26,10 +23,7 @@ def pipeline(spark, tmp_path_factory):
     build_pitcairn_like(pbf)
     dfs = read_pbf(spark, pbf)
     geoms = assemble_way_geometries(dfs["ways"], dfs["nodes"], broadcast_nodes=True).cache()
-    rings = relation_multipolygons(dfs["relations"], geoms)
-    layer = build_polygon_layer(
-        rings.select("polygon_id", "tags", "lats", "lons"), cover_res=7
-    ).cache()
+    layer = relation_multipolygons(dfs["relations"], geoms).cache()
     rng = np.random.default_rng(7)
     pts = [
         (int(i), float(-25.066 + rng.uniform(-0.04, 0.04)),
@@ -45,17 +39,23 @@ def test_admin_polygon_assembled_from_relation(pipeline):
     rows = layer.collect()
     assert len(rows) == 1
     p = rows[0]
-    assert p.kind == "admin"
+    assert p.role == "outer"
     assert p.tags["boundary"] == "administrative"
-    assert len(p.covering_cells) > 0
-    assert p.minlat < -25.066 < p.maxlat
+    assert min(p.lats) < -25.066 < max(p.lats)
 
 
 def test_pip_strategies_agree_end_to_end(pipeline):
+    """The broadcast probe on the assembled ring equals a direct ray
+    cast of every point against that ring."""
     _, layer, images = pipeline
     b = {(r.point_id, r.polygon_id) for r in pip_join_broadcast(images, layer).collect()}
-    c = {(r.point_id, r.polygon_id) for r in pip_join_cells(images, layer, res=7).collect()}
-    assert b == c
+    ring = layer.collect()[0]
+    pts = images.orderBy("point_id").collect()
+    inside = points_in_ring(
+        np.array([r.lat for r in pts]), np.array([r.lon for r in pts]),
+        np.array(ring.lats), np.array(ring.lons),
+    )
+    assert b == {(pts[i].point_id, ring.polygon_id) for i in np.flatnonzero(inside)}
     assert 0 < len(b) < 800  # island polygon contains some but not all
 
 
@@ -129,14 +129,8 @@ def test_multipolygon_hole_pip_end_to_end(spark, tmp_path):
     dfs = read_pbf(spark, pbf)
     geoms = assemble_way_geometries(dfs["ways"], dfs["nodes"], broadcast_nodes=True)
     rings = relation_multipolygons(dfs["relations"], geoms).cache()
-    outer_layer = build_polygon_layer(
-        rings.filter(F.col("role") == "outer").select("polygon_id", "tags", "lats", "lons"),
-        cover_res=6,
-    )
-    inner_layer = build_polygon_layer(
-        rings.filter(F.col("role") == "inner").select("polygon_id", "tags", "lats", "lons"),
-        cover_res=6,
-    )
+    outer_layer = rings.filter(F.col("role") == "outer")
+    inner_layer = rings.filter(F.col("role") == "inner")
     pts = spark.createDataFrame(
         [
             (1, cy, cx),               # island centre — inside the hole

@@ -11,7 +11,6 @@ from osm_read_enhanced_spark.functions.geo import (
 )
 from osm_read_enhanced_spark.functions.pip import (
     pairs_in_rings,
-    points_in_polygon,
     points_in_ring,
     ring_area_deg2,
     ring_edges,
@@ -98,15 +97,6 @@ def test_hex_kring_sizes():
         assert len(np.unique(ring)) == ring.shape[1]
 
 
-def test_hex_polyfill_covers_interior():
-    sq_lat = np.array([0.0, 0.0, 0.5, 0.5])
-    sq_lon = np.array([0.0, 0.5, 0.5, 0.0])
-    cells = hexgrid.polyfill(sq_lat, sq_lon, 8)
-    p_lat = rng.uniform(0.01, 0.49, 300)
-    p_lon = rng.uniform(0.01, 0.49, 300)
-    assert np.all(np.isin(hexgrid.hex_cell(p_lat, p_lon, 8), cells))
-
-
 def test_pip_vs_independent_raycast():
     ring_lat = np.array([0, 0, 2, 2, 1, 1, 3, 3], dtype=float)
     ring_lon = np.array([0, 3, 3, 2, 2, 1, 1, 0], dtype=float)
@@ -126,15 +116,6 @@ def test_pip_vs_independent_raycast():
     got = points_in_ring(pts_lat, pts_lon, ring_lat, ring_lon)
     want = np.array([pip1(pts_lat[i], pts_lon[i]) for i in range(1000)])
     assert np.array_equal(got, want)
-
-
-def test_pip_holes():
-    outer = (np.array([0.0, 0, 1, 1]), np.array([0.0, 1, 1, 0]))
-    hole = (np.array([0.25, 0.25, 0.75, 0.75]), np.array([0.25, 0.75, 0.75, 0.25]))
-    m = points_in_polygon(
-        np.array([0.5, 0.1]), np.array([0.5, 0.1]), outer[0], outer[1], holes=[hole]
-    )
-    assert m.tolist() == [False, True]
 
 
 def test_ring_area_orientation():

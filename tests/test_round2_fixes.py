@@ -7,6 +7,7 @@
   bands silently dropped pairs at hamming 4..16)
 - broadcast-array kNN top-k ≡ brute force (the scalable q20 plan)
 - broadcast-array embedding dup scan ≡ exact quadratic (the q33 plan)
+  for string/int ids and any prefilter slice size
 - manifest commit lock: concurrent committers lose nothing
 """
 
@@ -222,18 +223,16 @@ def test_knn_topk_broadcast_matches_bruteforce(spark):
     assert np.allclose([r.dist_m for r in a], [r.dist_m for r in b])
 
 
-def test_embedding_dup_broadcast_matches_numpy(spark):
-    from osm_read_enhanced_spark.operators.dedup import embedding_dup_pairs_broadcast
-
+def _planted_dup_vectors(dups=((3, 7),)):
+    """50 random 16-d vectors with planted near-dups (row b copies row a
+    for each (a, b) in ``dups``) → the matrix and its numpy truth
+    {(i, j): cosine} for i < j at τ = 0.8."""
     rng = np.random.default_rng(11)
     n, d = 50, 16
     M = rng.normal(size=(n, d))
-    M[7] = M[3] + rng.normal(scale=0.05, size=d)  # planted near-dup
+    for a, b in dups:
+        M[b] = M[a] + rng.normal(scale=0.05, size=d)
     M[20] = M[20] / np.linalg.norm(M[20])
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in M[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
     norm = np.linalg.norm(M, axis=1)
     C = (M @ M.T) / np.outer(norm, norm)
     expected = {
@@ -242,6 +241,17 @@ def test_embedding_dup_broadcast_matches_numpy(spark):
         for j in range(i + 1, n)
         if C[i, j] >= 0.8
     }
+    return M, expected
+
+
+def test_embedding_dup_broadcast_matches_numpy(spark):
+    from osm_read_enhanced_spark.operators.dedup import embedding_dup_pairs_broadcast
+
+    M, expected = _planted_dup_vectors()
+    df = spark.createDataFrame(
+        [(int(i), [float(x) for x in M[i]]) for i in range(len(M))],
+        "vec_id long, embedding array<double>",
+    )
     got = {
         (r.id_a, r.id_b): r.cosine
         for r in embedding_dup_pairs_broadcast(df, threshold=0.8, round_to=6).collect()
@@ -250,6 +260,60 @@ def test_embedding_dup_broadcast_matches_numpy(spark):
     for k, v in expected.items():
         assert abs(got[k] - v) < 1e-5
     assert (3, 7) in got
+
+
+@pytest.mark.parametrize(
+    "id_type, key",
+    [
+        # lexicographic order differs from row order ("10" < "7")
+        ("string", lambda i: str(i)),
+        # descending ids: the pair order follows the id, not the row
+        ("int", lambda i: 1000 - 3 * i),
+    ],
+    ids=["string", "int"],
+)
+def test_embedding_dup_exact_non_long_ids(spark, id_type, key):
+    """q33's dispatcher on a small table (the broadcast leg) keeps the
+    id column's own type: string and int ids pair as long ids do,
+    ordered id_a < id_b by the id's own ordering."""
+    from osm_read_enhanced_spark.operators.dedup import embedding_dup_pairs_exact
+
+    M, expected = _planted_dup_vectors()
+    df = spark.createDataFrame(
+        [(key(i), [float(x) for x in M[i]]) for i in range(len(M))],
+        f"vec_id {id_type}, embedding array<double>",
+    )
+    want = {
+        (min(key(i), key(j)), max(key(i), key(j))): c for (i, j), c in expected.items()
+    }
+    got = {
+        (r.id_a, r.id_b): r.cosine
+        for r in embedding_dup_pairs_exact(df, threshold=0.8, round_to=6).collect()
+    }
+    assert set(got) == set(want)
+    for k, v in want.items():
+        assert abs(got[k] - v) < 1e-5
+
+
+@pytest.mark.parametrize("rows", [1, 7, 51])
+def test_embedding_dup_broadcast_slice_sizes(spark, monkeypatch, rows):
+    """The prefilter scores each Arrow batch in row slices of
+    ``_DUP_SLICE_ROWS``; the pairs do not depend on the slice size
+    (51 is larger than the whole 50-row batch)."""
+    from osm_read_enhanced_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_DUP_SLICE_ROWS", rows)
+    # near-dup pairs (i, 49 - i) put a pair in every slice
+    M, expected = _planted_dup_vectors([(i, 49 - i) for i in range(25)])
+    df = spark.createDataFrame(
+        [(int(i), [float(x) for x in M[i]]) for i in range(len(M))],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    got = {
+        (r.id_a, r.id_b)
+        for r in dedup.embedding_dup_pairs_broadcast(df, threshold=0.8).collect()
+    }
+    assert got == set(expected)
 
 
 # ------------------------------------------------------------- manifest lock

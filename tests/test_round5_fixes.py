@@ -1,4 +1,4 @@
-"""Round-5 regressions: the four ADVICE r4 fixes (Arrow/JVM rounding
+"""Round-5 regressions: the four ADVICE r4 fixes (cosine rounding
 convention, integer prefix bound, dynamic powers CTE, BM25 degenerate
 corpus) and the JPEG marker-robustness fixes."""
 
@@ -14,15 +14,11 @@ from pyspark.sql import functions as F
 # --------------------------------------------------- ADVICE #1: rounding
 
 
-def test_arrow_scorer_rounding_matches_jvm_on_midpoints(spark):
+def test_bruteforce_rounding_on_midpoints(spark):
     """Cosines landing on exact binary 6-decimal midpoints (k/2^n
-    values) must round identically in the Arrow scorer and the JVM
-    path. np.round (half-even) vs the floor convention differed on
-    exactly these inputs."""
-    from osm_read_enhanced_spark.operators.ann import (
-        ann_bruteforce_topk,
-        ann_bruteforce_topk_arrow,
-    )
+    values) round half up, floor(x·1e6 + 0.5)/1e6 — the convention the
+    SQL oracles use — not half-even as np.round would."""
+    from osm_read_enhanced_spark.operators.ann import ann_bruteforce_topk
 
     # vectors engineered so pairwise cosines hit binary-representable
     # midpoints: cos between (1,0) and (c, sqrt(1-c^2)) is exactly c
@@ -34,10 +30,7 @@ def test_arrow_scorer_rounding_matches_jvm_on_midpoints(spark):
     qs = df.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    a = sorted(map(tuple, ann_bruteforce_topk(df, qs, k=5).collect()))
-    b = sorted(map(tuple, ann_bruteforce_topk_arrow(df, qs, k=5).collect()))
-    assert a == b
-    # and the convention itself: floor(x*1e6+0.5)/1e6, not half-even
+    a = ann_bruteforce_topk(df, qs, k=5).collect()
     got = {r[1]: r[3] for r in a}
     for i, c in enumerate(mids):
         assert got[i + 1] == np.floor(c * 1e6 + 0.5) / 1e6

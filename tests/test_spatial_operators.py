@@ -1,21 +1,16 @@
-"""Spark integration tests: way assembly, polygon layer, PIP joins
-(broadcast R-tree vs cell equi-join vs brute force), kNN, tiles."""
+"""Spark integration tests: way assembly, polygon rows, PIP joins
+(broadcast grid-index probe vs brute-force ray cast), kNN, tiles."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osm_read_enhanced_spark.operators.knn import knn_bruteforce, knn_join
 from osm_read_enhanced_spark.operators.polygons import (
     assemble_way_geometries,
-    build_polygon_layer,
     closed_way_polygons,
     relation_multipolygons,
 )
-from osm_read_enhanced_spark.operators.spatial_join import (
-    pip_join_broadcast,
-    pip_join_cells,
-)
+from osm_read_enhanced_spark.operators.spatial_join import pip_join_broadcast
 from osm_read_enhanced_spark.operators.tiles import assign_tiles, tile_stats
 from osm_read_enhanced_spark.functions.pip import points_in_ring
 
@@ -87,8 +82,9 @@ def test_closed_way_polygons(spark, osm_dfs):
 @pytest.fixture(scope="module")
 def pip_setup(spark, osm_dfs):
     nodes, ways = osm_dfs
-    polys = closed_way_polygons(assemble_way_geometries(ways, nodes), kinds=["landuse"])
-    layer = build_polygon_layer(polys, cover_res=7).cache()
+    layer = closed_way_polygons(
+        assemble_way_geometries(ways, nodes), kinds=["landuse"]
+    ).cache()
     pts = [
         (int(i), float(lat), float(lon))
         for i, (lat, lon) in enumerate(
@@ -121,44 +117,6 @@ def test_pip_broadcast_matches_bruteforce(spark, pip_setup):
         for r in pip_join_broadcast(points, layer).collect()
     }
     assert got == _expected_pairs(pts)
-
-
-def test_pip_cells_matches_broadcast(spark, pip_setup):
-    points, layer, pts = pip_setup
-    got = {
-        (r.point_id, r.polygon_id)
-        for r in pip_join_cells(points, layer, res=7).collect()
-    }
-    assert got == _expected_pairs(pts)
-
-
-def test_pip_cells_salted_same_result(spark, pip_setup):
-    points, layer, pts = pip_setup
-    got = {
-        (r.point_id, r.polygon_id)
-        for r in pip_join_cells(points, layer, res=7, salt_buckets=4).collect()
-    }
-    assert got == _expected_pairs(pts)
-
-
-def test_knn_ring_matches_bruteforce_when_dense(spark):
-    # clustered points: 1-ring at res 7 (~5 km hexes here) covers k=3 easily
-    n = 120
-    lat = 10.0 + rng.uniform(-0.02, 0.02, n)
-    lon = 20.0 + rng.uniform(-0.02, 0.02, n)
-    df = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in range(n)],
-        "point_id long, lat double, lon double",
-    ).cache()
-    right = df.select(
-        F.col("point_id").alias("neighbor_id"), "lat", "lon"
-    )
-    a = knn_join(df, right, k=3, res=7, ring=1).orderBy("point_id", "rank").collect()
-    b = knn_bruteforce(df, right, k=3).orderBy("point_id", "rank").collect()
-    assert [(r.point_id, r.neighbor_id, r.rank) for r in a] == [
-        (r.point_id, r.neighbor_id, r.rank) for r in b
-    ]
-    assert np.allclose([r.dist_m for r in a], [r.dist_m for r in b])
 
 
 def test_tile_assignment_and_stats(spark):
@@ -204,8 +162,8 @@ def test_relation_multipolygon_stitching(spark):
 
 def test_knn_adaptive_matches_bruteforce_sparse_globe(spark):
     """The adaptive ring-expansion kNN must equal brute force on
-    GLOBALLY SPARSE data — exactly the regime where fixed-ring knn_join's
-    coverage contract breaks (true neighbors many cells away)."""
+    GLOBALLY SPARSE data — exactly the regime where a fixed-ring kRing
+    join's coverage contract breaks (true neighbors many cells away)."""
     from osm_read_enhanced_spark.operators.knn import (
         knn_bruteforce,
         knn_join_adaptive,
@@ -254,37 +212,6 @@ def test_knn_adaptive_matches_bruteforce_dense_cluster(spark):
     assert [(r.point_id, r.neighbor_id, r.rank) for r in a] == [
         (r.point_id, r.neighbor_id, r.rank) for r in b
     ]
-
-
-def test_salting_spreads_hot_cell_key(spark):
-    """All points in ONE hex cell (worst-case skew): salting must fan
-    the join key out to salt_buckets distinct composite keys while the
-    result stays identical to the unsalted join."""
-    from osm_read_enhanced_spark.functions import hexgrid
-    from osm_read_enhanced_spark.operators.polygons import build_polygon_layer
-
-    n = 400
-    lat = 10.0 + rng.uniform(-0.001, 0.001, n)  # ~100m spread: one res-7 cell
-    lon = 20.0 + rng.uniform(-0.001, 0.001, n)
-    pts = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in range(n)],
-        "point_id long, lat double, lon double",
-    ).cache()
-    poly = spark.createDataFrame(
-        [(1, [9.99, 9.99, 10.01, 10.01], [19.99, 20.01, 20.01, 19.99], {})],
-        "polygon_id long, lats array<double>, lons array<double>, tags map<string,string>",
-    )
-    layer = build_polygon_layer(
-        poly.selectExpr("polygon_id", "tags", "lats", "lons"), cover_res=7
-    ).cache()
-    plain = {(r.point_id, r.polygon_id)
-             for r in pip_join_cells(pts, layer, res=7).collect()}
-    salted = {(r.point_id, r.polygon_id)
-              for r in pip_join_cells(pts, layer, res=7, salt_buckets=8).collect()}
-    assert salted == plain and len(plain) == n
-    # key spread: the points' (cell, salt) composite takes many values
-    cells = hexgrid.hex_cell(lat, lon, 7)
-    assert len(set(cells.tolist())) <= 2  # genuinely hot key
 
 
 def test_pip_broadcast_keep_cols_pass_through(spark, pip_setup):
@@ -369,13 +296,7 @@ def test_auto_resolution_scales_with_density(spark):
 def test_pip_join_with_holes(spark):
     """Outer square [0,10]² with hole [3,7]²: even-odd containment via
     the left_anti composition equals the plain range predicate."""
-    from pyspark.sql import functions as F
-
-    from osm_read_enhanced_spark.operators.spatial_join import (
-        pip_join_broadcast,
-        pip_join_cells,
-        pip_join_with_holes,
-    )
+    from osm_read_enhanced_spark.operators.spatial_join import pip_join_with_holes
 
     outer = spark.createDataFrame(
         [(1, [0.0, 0.0, 10.0, 10.0], [0.0, 10.0, 10.0, 0.0])],
@@ -404,14 +325,6 @@ def test_pip_join_with_holes(spark):
     # inner_layer=None degrades to the plain join
     plain = {r.point_id for r in pip_join_with_holes(pts, outer, None).collect()}
     assert plain > got
-    # works with the cell-join strategy too (build_polygon_layer adds cells)
-    ol = build_polygon_layer(outer.withColumn("tags", F.create_map().cast("map<string,string>")), cover_res=5)
-    hl = build_polygon_layer(holes.withColumn("tags", F.create_map().cast("map<string,string>")), cover_res=5)
-    cells = {
-        r.point_id
-        for r in pip_join_with_holes(pts, ol, hl, strategy=pip_join_cells, res=5).collect()
-    }
-    assert cells == want
 
 
 def test_simplify_geometries_operator(spark):
