@@ -8,8 +8,9 @@ block 0 = dense coastline nodes (mostly untagged, nonzero coords),
 block 2 = ways with non-empty nodeRefs, plus one admin-boundary
 relation with outer ways + label/admin_centre members.
 
-``build_scale_pbf`` writes an arbitrary-size deterministic file for
-benchmarks (n_blocks × nodes_per_block dense nodes + ways).
+``build_scale_pbf_fast`` writes an arbitrary-size deterministic file for
+benchmarks and tests (n_blocks × nodes_per_block dense nodes + ways),
+encoding the dense groups straight from numpy arrays.
 """
 
 from __future__ import annotations
@@ -111,43 +112,6 @@ def build_pitcairn_like(path: str) -> dict:
     return dict(nodes=len(nodes0) + len(nodes1), ways=len(ways), relations=len(relations))
 
 
-def build_scale_pbf(
-    path: str,
-    n_blocks: int = 16,
-    nodes_per_block: int = 8000,
-    ways_per_block: int = 400,
-    seed: int = 42,
-) -> dict:
-    """Deterministic multi-block PBF for decode benchmarks; dense-node
-    blocks shaped like real planet blocks (~8k nodes, delta-friendly
-    sorted ids, clustered coords, sparse tags)."""
-    rng = np.random.default_rng(seed)
-    blocks = []
-    next_id = 1
-    for b in range(n_blocks):
-        base_lat = float(rng.uniform(-60, 60))
-        base_lon = float(rng.uniform(-170, 170))
-        lats = base_lat + rng.normal(0, 0.01, nodes_per_block)
-        lons = base_lon + rng.normal(0, 0.01, nodes_per_block)
-        nodes = [
-            dict(id=next_id + i, lat=float(lats[i]), lon=float(lons[i]),
-                 tags=({"amenity": "cafe", "name": f"poi_{b}_{i}"} if i % 50 == 0 else {}))
-            for i in range(nodes_per_block)
-        ]
-        ids = [n["id"] for n in nodes]
-        ways = [
-            dict(id=10_000_000 + b * ways_per_block + w,
-                 refs=ids[w * 10 : w * 10 + 10],
-                 tags={"highway": "residential"})
-            for w in range(ways_per_block)
-        ]
-        next_id += nodes_per_block
-        blocks.append(dict(nodes=nodes, ways=ways))
-    write_pbf(path, blocks)
-    return dict(blocks=n_blocks, nodes=n_blocks * nodes_per_block,
-                ways=n_blocks * ways_per_block)
-
-
 def build_scale_pbf_fast(
     path: str,
     n_blocks: int = 256,
@@ -157,12 +121,13 @@ def build_scale_pbf_fast(
     id_offset: int = 0,
     way_id_offset: int = 0,
 ) -> dict:
-    """Array-speed variant of build_scale_pbf: identical block SHAPE
-    (8k dense nodes with sparse tags every 50th node, 400 tagged ways of
-    10 refs, zlib blobs) built via the columnar encoder — ~20× faster
-    generation, so multi-GB bench inputs are cheap. Content matches the
-    slow builder's distribution (clustered coords, sorted ids); tag
-    values differ only in using the same deterministic naming scheme.
+    """Deterministic multi-block PBF for decode benchmarks and tests.
+
+    Each OSMData block is shaped like a real planet block: 8k dense
+    nodes (sorted ids, clustered coords, tags {amenity, name} on every
+    50th node) and 400 ways of 10 refs tagged highway=residential, in
+    zlib blobs. The dense group is encoded from numpy arrays, so
+    multi-GB bench inputs are cheap to generate.
     """
     from .sources.pbf.writer import (
         _frame_block,

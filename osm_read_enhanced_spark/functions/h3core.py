@@ -45,7 +45,6 @@ M_SIN60 = math.sqrt(3.0) / 2.0
 M_AP7_ROT_RADS = math.asin(math.sqrt(3.0 / 28.0))  # 0.333473172251832
 RES0_U_GNOMONIC = 0.38196601125010500003
 EPSILON = 1e-14
-MAX_RES = 15
 NUM_BASE_CELLS = 122
 
 # digits
@@ -824,8 +823,6 @@ def _adjust_overage_class_ii(face, i, j, k, res, pent_leading_4):
 
 # ------------------------------------------------------- H3 index bits
 
-_H3_INIT = 0x08001FFFFFFFFFFF  # mode=1, res=0, bc=0, all digits=7
-
 
 def _h3_make(res: int, base_cell: int, digits) -> int:
     h = 0x0800000000000000  # mode 1 (cell)
@@ -1072,7 +1069,6 @@ def grid_disk(h: int, k: int) -> list[int]:
 
 # ----------------------------------------------------- vectorized front
 
-_BC_HOME = np.array([d[:4] for d in BASE_CELL_DATA], dtype=np.int64)
 _IS_PENT = np.zeros(NUM_BASE_CELLS, dtype=bool)
 for _bc in PENTAGON_BASE_CELLS:
     _IS_PENT[_bc] = True
@@ -1090,7 +1086,6 @@ _ROT60CCW_POW = np.empty((6, 7), dtype=np.int64)
 _ROT60CCW_POW[0] = np.arange(7)
 for _r in range(1, 6):
     _ROT60CCW_POW[_r] = _ROT60CCW_LUT[_ROT60CCW_POW[_r - 1]]
-_ROT60CW_LUT = np.array([_ROT60CW[d] for d in range(7)], dtype=np.int64)
 _DIGIT_LUT = np.full((3, 3, 3), -1, dtype=np.int64)
 for _u, _d in _DIGIT_FROM_UNIT.items():
     _DIGIT_LUT[_u] = _d

@@ -17,15 +17,12 @@ pure integer arithmetic (identical in Spark and DuckDB):
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-PI = math.pi
 
 
 @dataclass(frozen=True)

@@ -1,28 +1,28 @@
-"""Arrow-native single-pass PrimitiveBlock decode.
+"""Arrow-native single-pass PrimitiveBlock decode — the package's only
+entity decoder, behind ``read_pbf`` / ``read_pbf_union``.
 
-The row-based ``decode.py`` path is the readable reference
-implementation (golden-tested against FIXTURES.md); this module is the
-hot path behind ``read_pbf`` / ``read_pbf_union``: each block is
-inflated and TLV-walked ONCE, emitting ALL requested entity kinds as
-pyarrow RecordBatches built directly from numpy index arrays — no
-per-row python dicts, no pandas detour:
+Each block is inflated and TLV-walked ONCE, emitting ALL requested
+entity kinds as pyarrow RecordBatches built directly from numpy index
+arrays — no per-row python dicts, no pandas detour:
 
+- one walker (``_walk``) collects, per way / relation / plain node /
+  Info message, the byte spans of the fields asked for; one value
+  decoder (``_batch_packed``) then decodes each field across all
+  messages of the block in one vectorized pass;
 - node/way/relation tags become ``pa.MapArray.from_arrays(offsets,
   keys, items)`` where keys/items are C++ ``take``s of the block's
   string table (built once per block straight from the wire bytes);
 - way refs / relation members become ListArray/StructArray from the
   packed-varint numpy decodes;
 - metadata (version/timestamp/.../user/visible) stays numpy end-to-end
-  (user resolved by the same string-table take).
+  as (values, valid) pairs (user resolved by the same string-table take).
 
 This is the engine's answer to the reference decoding each blob once
 and dispatching all groups (lib/pbfParser.js:741-759 →
 visitOSMDataBlock 319-378) instead of re-inflating per entity kind.
 
-Semantics are identical to ``decode.decode_primitive_block`` (the
-differential test in tests/test_columnar_decode.py pins columnar ≡ row
-decode over writer-built blocks including multi-group/compat/info
-variants).
+Tests pin the output to the FIXTURES.md goldens and to an independent
+decoder written from the wire format in tests/test_differential.py.
 """
 
 from __future__ import annotations
@@ -32,6 +32,8 @@ import pyarrow as pa
 
 from .decode import COMPAT, STRICT, decode_blob
 from .proto import (
+    WT_I32,
+    WT_I64,
     WT_LEN,
     WT_VARINT,
     decode_packed_svarints,
@@ -111,9 +113,11 @@ def _string_table_arrow(data: bytes, s: int, e: int, mode: str):
     return arr, clamp
 
 
-def _take_strings(table: pa.StringArray, clamp: int, idx: np.ndarray):
+def _take_strings(table: pa.StringArray, clamp: int, idx: np.ndarray, valid=None):
+    """String-table lookup; where ``valid`` is False the result is null."""
     safe = np.minimum(idx.astype(np.int64, copy=False), clamp)
-    return table.take(pa.array(safe, type=pa.int64()))
+    mask = None if valid is None else ~valid
+    return table.take(pa.array(safe, type=pa.int64(), mask=mask))
 
 
 # ------------------------------------------------------- block meta
@@ -179,7 +183,7 @@ def _kv_runs_columnar(kv: np.ndarray, n: int):
             np.cumsum(counts // 2, out=offsets[1:])
             nz = kv[kv != 0]
             return offsets, nz[0::2], nz[1::2]
-    # general path: sequential parity walk (mirrors decode._tags_from_kv_runs)
+    # general path: sequential parity walk
     keys, vals, cnt = [], [], []
     i, node = 0, 0
     m = kv.size
@@ -273,78 +277,54 @@ def _parse_dense_columnar(data, s, e, meta: _BlockMeta, want_info: bool):
     }
 
 
-# ------------------------------------------------------- ways / relations
+# ------------------------------------------------------- message walk
 
 
-def _parse_info_scalar(data: bytes, s: int, e: int, date_gran: int):
-    """Non-dense Info message → (version, ts, changeset, uid, user_sid,
-    visible) python scalars (None = absent)."""
-    version = ts = cs = uid = usid = None
-    visible = True
-    pos = s
-    while pos < e:
-        tag, pos = read_varint(data, pos)
-        fno, wt = tag >> 3, tag & 0x7
-        if wt == WT_VARINT:
-            val, pos = read_varint(data, pos)
-            if fno == 1:
-                version = val
-            elif fno == 2:
-                ts = val * date_gran
-            elif fno == 3:
-                cs = val
-            elif fno == 4:
-                uid = val
-            elif fno == 5:
-                usid = val
-            elif fno == 6:
-                visible = bool(val)
-        elif wt == WT_LEN:
-            ln, pos = read_varint(data, pos)
-            pos += ln
-        elif wt == 1:  # I64
-            pos += 8
-        elif wt == 5:  # I32
-            pos += 4
-        else:  # pragma: no cover - deprecated groups in Info
-            break
-    return version, ts, cs, uid, usid, visible
+def _walk(data, spans, tags):
+    """The per-message TLV walk: for each message span, the spans of the
+    wanted fields, keyed by wire tag (``field << 3 | wire type``).
+
+    → {tag: [per-message tuple of (s, e)]}. A length-delimited
+    occurrence yields its payload (packed values or a sub-message); a
+    varint occurrence yields the span of its own bytes — a one-value
+    packed run — so scalars, repeated varints and packed fields all
+    batch-decode through ``_batch_packed``. Other fields are skipped.
+    """
+    # tuples, grown on the rare hit, cost less than one list per message
+    out = {t: [()] * len(spans) for t in tags}
+    for mi, (s, e) in enumerate(spans):
+        pos = s
+        while pos < e:
+            tag, pos = read_varint(data, pos)
+            wt = tag & 0x7
+            if wt == WT_VARINT:
+                start = pos
+                _, pos = read_varint(data, pos)
+                span = (start, pos)
+            elif wt == WT_LEN:
+                ln, pos = read_varint(data, pos)
+                span = (pos, pos + ln)
+                pos += ln
+            elif wt == WT_I64:
+                pos += 8
+                continue
+            elif wt == WT_I32:
+                pos += 4
+                continue
+            else:  # pragma: no cover - deprecated groups
+                break
+            found = out.get(tag)
+            if found is not None:
+                found[mi] += (span,)
+    return out
 
 
-class _MsgAccumulator:
-    """Flat columnar accumulator for way/relation messages."""
+def _len_tag(fno: int) -> int:
+    return fno << 3 | WT_LEN
 
-    def __init__(self, want_info: bool):
-        self.ids = []
-        self.tag_counts = []
-        self.key_chunks = []
-        self.val_chunks = []
-        self.want_info = want_info
-        self.version = []
-        self.timestamp = []
-        self.changeset = []
-        self.uid = []
-        self.user_sid = []
-        self.visible = []
 
-    def add_info(self, data, span, date_gran):
-        if not self.want_info:
-            return
-        if span is None:
-            self.version.append(None)
-            self.timestamp.append(None)
-            self.changeset.append(None)
-            self.uid.append(None)
-            self.user_sid.append(None)
-            self.visible.append(None)
-        else:
-            v, t, c, u, us, vis = _parse_info_scalar(data, span[0], span[1], date_gran)
-            self.version.append(v)
-            self.timestamp.append(t)
-            self.changeset.append(c)
-            self.uid.append(u)
-            self.user_sid.append(us)
-            self.visible.append(vis)
+def _varint_tag(fno: int) -> int:
+    return fno << 3 | WT_VARINT
 
 
 def _batch_packed(data, msg_chunks, signed: bool, delta: bool):
@@ -395,412 +375,228 @@ def _batch_packed(data, msg_chunks, signed: bool, delta: bool):
     return vals, counts
 
 
-def _packed_chunks_u(data, chunks, repeated):
-    if chunks:
-        if len(chunks) == 1:
-            return decode_packed_uvarints(data[chunks[0][0] : chunks[0][1]])
-        return np.concatenate([decode_packed_uvarints(data[a:b]) for a, b in chunks])
-    if repeated:
-        return np.array(repeated, dtype=np.uint64)
-    return np.empty(0, dtype=np.uint64)
+def _repeated(data, walked, fno, signed=False, delta=False):
+    """Repeated field ``fno`` of every walked message → (flat int64,
+    counts). A message's packed spans win when it has any, else its
+    repeated varints are used: the reference OSM_Blob lazy path read
+    only the latter and dropped tags on real files (lib/OSM_Blob.js:1328)."""
+    chosen = [
+        packed or rep
+        for packed, rep in zip(walked[_len_tag(fno)], walked[_varint_tag(fno)])
+    ]
+    return _batch_packed(data, chosen, signed, delta)
 
 
-def _packed_chunks_s(data, chunks, repeated):
-    if chunks:
-        if len(chunks) == 1:
-            return decode_packed_svarints(data[chunks[0][0] : chunks[0][1]])
-        return np.concatenate([decode_packed_svarints(data[a:b]) for a, b in chunks])
-    if repeated:
-        return np.array([zigzag_decode(v) for v in repeated], dtype=np.int64)
-    return np.empty(0, dtype=np.int64)
+def _scalar(data, msg_spans, signed=False):
+    """Scalar varint field per message → (int64 values, present). The
+    last occurrence wins, as protobuf merges; an absent field reads 0.
+    Unsigned varints come back as int64 two's complement, so a negative
+    int64/int32 sent as a 10-byte varint decodes to its value."""
+    vals, counts = _batch_packed(data, msg_spans, signed, False)
+    present = counts > 0
+    out = np.zeros(len(counts), dtype=np.int64)
+    out[present] = vals[np.cumsum(counts)[present] - 1]
+    return out, present
 
 
-def _trim_tags(key_flat, key_counts, val_flat, val_counts):
-    """Per-message zip semantics: tag count = min(|keys|, |vals|) per
-    message (mirrors dict(zip(keys, vals)) in the row path). Returns
-    (key_idx, val_idx, tag_counts) with the longer side trimmed."""
-    if np.array_equal(key_counts, val_counts):
-        return key_flat, val_flat, key_counts
-    m = np.minimum(key_counts, val_counts)
-    k_off = np.zeros(len(key_counts) + 1, dtype=np.int64)
-    np.cumsum(key_counts, out=k_off[1:])
-    v_off = np.zeros(len(val_counts) + 1, dtype=np.int64)
-    np.cumsum(val_counts, out=v_off[1:])
-    ki = np.concatenate(
-        [key_flat[k_off[i] : k_off[i] + m[i]] for i in range(len(m))]
-    ) if m.sum() else _EMPTY_I64
-    vi = np.concatenate(
-        [val_flat[v_off[i] : v_off[i] + m[i]] for i in range(len(m))]
-    ) if m.sum() else _EMPTY_I64
-    return ki, vi, m
+def _offsets(counts) -> np.ndarray:
+    off = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=off[1:])
+    return off
 
 
-def _parse_ways_columnar(data, spans, meta, want_info, compat):
-    """Way messages → columnar dict. Lean inline TLV walk collects the
-    packed-field spans (id=1, keys=2, vals=3, info=4, refs=8); the
-    values are then batch-decoded across ALL ways in one vectorized pass
-    (_batch_packed) — no per-way numpy calls. Repeated (non-packed)
-    varint encodings fall back to the per-message path (the reference's
-    packed-keys blind spot, lib/OSM_Blob.js:1328, handled both ways)."""
-    acc = _MsgAccumulator(want_info)
-    n = len(spans)
-    refs_chunks = [[] for _ in range(n)]
-    keys_chunks = [[] for _ in range(n)]
-    vals_chunks = [[] for _ in range(n)]
-    has_repeated = False
-    rep = {2: [], 3: [], 8: []}
-    for mi, (s, e) in enumerate(spans):
-        wid = 0
-        info_span = None
-        pos = s
-        while pos < e:
-            tag, pos = read_varint(data, pos)
-            fno, wt = tag >> 3, tag & 0x7
-            if wt == WT_VARINT:
-                val, pos = read_varint(data, pos)
-                if fno == 1:
-                    wid = val
-                elif fno in (2, 3, 8):
-                    has_repeated = True
-                    rep[fno].append((mi, val))
-            elif wt == WT_LEN:
-                ln, pos = read_varint(data, pos)
-                span = (pos, pos + ln)
-                pos += ln
-                if fno == 2:
-                    keys_chunks[mi].append(span)
-                elif fno == 3:
-                    vals_chunks[mi].append(span)
-                elif fno == 8:
-                    refs_chunks[mi].append(span)
-                elif fno == 4:
-                    info_span = span
-            elif wt == 1:  # I64
-                pos += 8
-            elif wt == 5:  # I32
-                pos += 4
-            else:  # pragma: no cover - deprecated groups
-                break
-        acc.ids.append(wid)
-        acc.add_info(data, info_span, meta.date_granularity)
-    if has_repeated:
-        # rare wire layout: decode per message, mixing packed + repeated
-        refs_flat, ref_counts = _flat_mixed(
-            data, refs_chunks, rep[8], signed=True, delta=True
-        )
-        key_flat, key_counts = _flat_mixed(data, keys_chunks, rep[2], False, False)
-        val_flat, val_counts = _flat_mixed(data, vals_chunks, rep[3], False, False)
-    else:
-        refs_flat, ref_counts = _batch_packed(data, refs_chunks, signed=True, delta=True)
-        key_flat, key_counts = _batch_packed(data, keys_chunks, False, False)
-        val_flat, val_counts = _batch_packed(data, vals_chunks, False, False)
-    if compat:
-        key_idx, val_idx = _EMPTY_I64, _EMPTY_I64
-        tag_counts = np.zeros(n, dtype=np.int64)  # OSM_Blob packed-keys bug
-    else:
-        key_idx, val_idx, tag_counts = _trim_tags(
-            key_flat, key_counts, val_flat, val_counts
-        )
+def _trim(cols):
+    """Zip semantics over N parallel segmented arrays ``[(flat, counts)]``:
+    each message keeps the minimum of its counts, every array trimmed to
+    it. → ([flat, ...], counts)."""
+    m = np.minimum.reduce([counts for _, counts in cols])
+    out = []
+    for flat, counts in cols:
+        if not np.array_equal(counts, m):
+            start = np.repeat(_offsets(counts)[:-1], counts)
+            flat = flat[np.arange(flat.size) - start < np.repeat(m, counts)]
+        out.append(flat)
+    return out, m
+
+
+# ------------------------------------------------------- Info
+
+# Info / DenseInfo field number, name and column dtype
+_INFO_FIELDS = (
+    (1, "version", np.int32),
+    (2, "timestamp", np.int64),
+    (3, "changeset", np.int64),
+    (4, "uid", np.int64),
+    (5, "user_sid", np.int64),
+    (6, "visible", bool),
+)
+
+
+def _null_info(n):
     return {
-        "acc": acc,
-        "refs_flat": refs_flat,
-        "ref_counts": ref_counts,
-        "key_idx": key_idx,
-        "val_idx": val_idx,
-        "tag_counts": tag_counts,
+        name: (np.zeros(n, dtype=dtype), np.zeros(n, dtype=bool))
+        for _, name, dtype in _INFO_FIELDS
     }
 
 
-def _flat_mixed(data, msg_chunks, repeated_pairs, signed: bool, delta: bool):
-    """Per-message decode path for the rare repeated-varint wire layout:
-    merges packed chunks and repeated scalar values in field order
-    (packed first, matching decode._packed_or_repeated precedence)."""
-    n = len(msg_chunks)
-    rep_by_msg: dict[int, list] = {}
-    for mi, v in repeated_pairs:
-        rep_by_msg.setdefault(mi, []).append(v)
-    out, counts = [], np.zeros(n, dtype=np.int64)
-    for mi in range(n):
-        if signed:
-            vals = _packed_chunks_s(data, msg_chunks[mi], rep_by_msg.get(mi, []))
-            if delta:
-                vals = delta_decode(vals)
-        else:
-            vals = _packed_chunks_u(data, msg_chunks[mi], rep_by_msg.get(mi, [])).astype(
-                np.int64
-            )
-        out.append(vals)
-        counts[mi] = len(vals)
-    return (np.concatenate(out) if out else _EMPTY_I64), counts
+def _info(data, walked, date_gran):
+    """Info sub-messages (field 4) of the walked messages → {name:
+    (values, valid)}, or None when no message has one. A message without
+    Info is null in every column; inside an Info a missing field is null,
+    except ``visible``, which defaults to True."""
+    info_spans = walked[_len_tag(4)]
+    if not any(info_spans):
+        return None
+    has = np.array([bool(sp) for sp in info_spans], dtype=bool)
+    fields = _walk(
+        data,
+        [sp[-1] if sp else (0, 0) for sp in info_spans],
+        [_varint_tag(fno) for fno, _, _ in _INFO_FIELDS],
+    )
+    info = {}
+    for fno, name, dtype in _INFO_FIELDS:
+        vals, valid = _scalar(data, fields[_varint_tag(fno)])
+        info[name] = (vals.astype(dtype), valid)
+    ts, valid = info["timestamp"]
+    info["timestamp"] = (ts * date_gran, valid)
+    vis, valid = info["visible"]
+    info["visible"] = (vis | ~valid, has)
+    return info
 
 
-def _trim_members(roles, r_cnt, memids, m_cnt, types, t_cnt):
-    """Per-message member count = min of the three parallel arrays
-    (mirrors zip() in the row path); trims each to that count."""
-    m = np.minimum(np.minimum(r_cnt, m_cnt), t_cnt)
-    if (
-        np.array_equal(r_cnt, m)
-        and np.array_equal(m_cnt, m)
-        and np.array_equal(t_cnt, m)
-    ):
-        return roles, memids, types, m
-
-    def trim(flat, cnt):
-        off = np.zeros(len(cnt) + 1, dtype=np.int64)
-        np.cumsum(cnt, out=off[1:])
-        if not m.sum():
-            return _EMPTY_I64
-        return np.concatenate([flat[off[i] : off[i] + m[i]] for i in range(len(m))])
-
-    return trim(roles, r_cnt), trim(memids, m_cnt), trim(types, t_cnt), m
+def _dense_info_pairs(info, n):
+    """``_dense_info_columnar``'s arrays (None for an absent field) →
+    the (values, valid) form."""
+    if info is None:
+        return None
+    pairs = _null_info(n)
+    for _, name, _ in _INFO_FIELDS:
+        if info[name] is not None:
+            pairs[name] = (info[name], np.ones(n, dtype=bool))
+    return pairs
 
 
-def _parse_relations_columnar(data, spans, meta, want_info, compat):
-    """Relation messages → columnar dict. roles_sid=8, memids=9 (field 9
-    per spec — NOT 8, the OSM_Blob fastParse bug, lib/OSM_Blob.js:962),
-    types=10; member wire order preserved. Packed fields batch-decoded
-    across all relations (one vectorized pass per field)."""
-    acc = _MsgAccumulator(want_info)
+# ------------------------------------------------------- messages
+
+
+def _messages(data, spans, kind_tags, meta, want_info, compat, signed_id=False):
+    """Walk the way / relation / plain-node messages of a block → (walked
+    spans, the columnar dict every kind shares: id=1, tags from keys=2 /
+    vals=3, Info=4). ``kind_tags`` adds the kind's own fields.
+    compat: no tags (OSM_Blob packed-keys bug, lib/OSM_Blob.js:1328)."""
+    common = (_len_tag(2), _varint_tag(2), _len_tag(3), _varint_tag(3), _len_tag(4))
+    w = _walk(data, spans, (_varint_tag(1),) + common + kind_tags)
     n = len(spans)
-    chunks = {f: [[] for _ in range(n)] for f in (2, 3, 8, 9, 10)}
-    rep = {f: [] for f in (2, 3, 8, 9, 10)}
-    has_repeated = False
-    for mi, (s, e) in enumerate(spans):
-        rid = 0
-        info_span = None
-        pos = s
-        while pos < e:
-            tag, pos = read_varint(data, pos)
-            fno, wt = tag >> 3, tag & 0x7
-            if wt == WT_VARINT:
-                val, pos = read_varint(data, pos)
-                if fno == 1:
-                    rid = val
-                elif fno in rep:
-                    has_repeated = True
-                    rep[fno].append((mi, val))
-            elif wt == WT_LEN:
-                ln, pos = read_varint(data, pos)
-                span = (pos, pos + ln)
-                pos += ln
-                if fno in chunks:
-                    chunks[fno][mi].append(span)
-                elif fno == 4:
-                    info_span = span
-            elif wt == 1:  # I64
-                pos += 8
-            elif wt == 5:  # I32
-                pos += 4
-            else:  # pragma: no cover - deprecated groups
-                break
-        acc.ids.append(rid)
-        acc.add_info(data, info_span, meta.date_granularity)
-    dec = _flat_mixed if has_repeated else (
-        lambda d, c, r, signed, delta: _batch_packed(d, c, signed, delta)
-    )
-    roles, r_cnt = dec(data, chunks[8], rep[8], False, False)
-    memids, m_cnt = dec(data, chunks[9], rep[9], True, True)
-    types, t_cnt = dec(data, chunks[10], rep[10], False, False)
-    roles, memids, types, mem_counts = _trim_members(
-        roles, r_cnt, memids, m_cnt, types, t_cnt
-    )
     if compat:
-        key_idx, val_idx = _EMPTY_I64, _EMPTY_I64
-        tag_counts = np.zeros(n, dtype=np.int64)
+        tag_offsets, keys, vals = np.zeros(n + 1, dtype=np.int64), _EMPTY_I64, _EMPTY_I64
     else:
-        key_flat, key_counts = dec(data, chunks[2], rep[2], False, False)
-        val_flat, val_counts = dec(data, chunks[3], rep[3], False, False)
-        key_idx, val_idx, tag_counts = _trim_tags(
-            key_flat, key_counts, val_flat, val_counts
-        )
-    return {
-        "acc": acc,
-        "roles": roles,
-        "memids": memids,
-        "types": types.astype(np.int32),
-        "mem_counts": mem_counts,
-        "key_idx": key_idx,
-        "val_idx": val_idx,
-        "tag_counts": tag_counts,
+        (keys, vals), counts = _trim([_repeated(data, w, 2), _repeated(data, w, 3)])
+        tag_offsets = _offsets(counts)
+    return w, {
+        "n": n,
+        "ids": _scalar(data, w[_varint_tag(1)], signed_id)[0],
+        "tag_offsets": tag_offsets,
+        "key_idx": keys,
+        "val_idx": vals,
+        "info": _info(data, w, meta.date_granularity) if want_info else None,
     }
-
-
-# ------------------------------------------------------- plain nodes
 
 
 def _parse_plain_nodes_columnar(data, spans, meta, want_info, compat):
-    """Non-dense Node messages (rare) → same columnar dict as dense."""
-    ids, lats, lons = [], [], []
-    acc = _MsgAccumulator(want_info)
-    for s, e in spans:
-        nid = lat_raw = lon_raw = 0
-        keys_p, vals_p = [], []
-        keys_r, vals_r = [], []
-        info_span = None
-        pos = s
-        while pos < e:
-            tag, pos = read_varint(data, pos)
-            fno, wt = tag >> 3, tag & 0x7
-            if wt == WT_VARINT:
-                val, pos = read_varint(data, pos)
-                if fno == 1:
-                    nid = zigzag_decode(val)
-                elif fno == 2:
-                    keys_r.append(val)
-                elif fno == 3:
-                    vals_r.append(val)
-                elif fno == 8:
-                    lat_raw = zigzag_decode(val)
-                elif fno == 9:
-                    lon_raw = zigzag_decode(val)
-            elif wt == WT_LEN:
-                ln, pos = read_varint(data, pos)
-                span = (pos, pos + ln)
-                pos += ln
-                if fno == 2:
-                    keys_p.append(span)
-                elif fno == 3:
-                    vals_p.append(span)
-                elif fno == 4:
-                    info_span = span
-            elif wt == 1:  # I64
-                pos += 8
-            elif wt == 5:  # I32
-                pos += 4
-            else:  # pragma: no cover - deprecated groups
-                break
-        ids.append(nid)
-        lats.append((meta.lat_offset + meta.granularity * lat_raw) / 1e9)
-        lons.append((meta.lon_offset + meta.granularity * lon_raw) / 1e9)
-        if compat:
-            acc.tag_counts.append(0)
-        else:
-            k = _packed_chunks_u(data, keys_p, keys_r).astype(np.int64)
-            v = _packed_chunks_u(data, vals_p, vals_r).astype(np.int64)
-            m = min(len(k), len(v))
-            acc.tag_counts.append(m)
-            acc.key_chunks.append(k[:m])
-            acc.val_chunks.append(v[:m])
-        acc.add_info(data, info_span, meta.date_granularity)
-    n = len(ids)
-    tag_offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(acc.tag_counts, out=tag_offsets[1:])
-    info = None
-    if want_info:
-        info = {
-            "version": _np_nullable(acc.version, np.int32),
-            "timestamp": _np_nullable(acc.timestamp, np.int64),
-            "changeset": _np_nullable(acc.changeset, np.int64),
-            "uid": _np_nullable(acc.uid, np.int64),
-            "user_sid": _np_nullable(acc.user_sid, np.int64),
-            "visible": _np_nullable(acc.visible, bool),
-        }
-        if all(v is None for v in info.values()):
-            info = None
-    return {
-        "n": n,
-        "ids": np.array(ids, dtype=np.int64),
-        "lat": np.array(lats, dtype=np.float64),
-        "lon": np.array(lons, dtype=np.float64),
-        "tag_offsets": tag_offsets,
-        "key_idx": np.concatenate(acc.key_chunks) if acc.key_chunks else _EMPTY_I64,
-        "val_idx": np.concatenate(acc.val_chunks) if acc.val_chunks else _EMPTY_I64,
-        "info": info,
-    }
+    """Non-dense Node messages (rare; reference classic parser refuses
+    them, lib/pbfParser.js:519-521 — supported per spec, like OSM_Blob's
+    individual-node path lib/OSM_Blob.js:1209-1262) → the dense dict.
+    id=1, lat=8 and lon=9 are sint64."""
+    w, nodes = _messages(
+        data, spans, (_varint_tag(8), _varint_tag(9)), meta, want_info, compat, signed_id=True
+    )
+    for fno, coord, offset in ((8, "lat", meta.lat_offset), (9, "lon", meta.lon_offset)):
+        raw, _ = _scalar(data, w[_varint_tag(fno)], signed=True)
+        nodes[coord] = (offset + meta.granularity * raw.astype(np.float64)) / 1e9
+    return nodes
 
 
-def _np_nullable(values: list, dtype):
-    """list (with Nones) → (np array, valid mask) pair or None if empty."""
-    if not values:
-        return None
-    mask = np.array([v is not None for v in values], dtype=bool)
-    if not mask.any():
-        return None
-    filled = np.array([v if v is not None else 0 for v in values])
-    return filled.astype(dtype), mask
+def _parse_ways_columnar(data, spans, meta, want_info, compat):
+    """Way messages → (columnar dict, refs ListArray); refs=8 are
+    delta-coded sint64, batch-decoded across all ways in one pass."""
+    w, ways = _messages(data, spans, (_len_tag(8), _varint_tag(8)), meta, want_info, compat)
+    refs, ref_counts = _repeated(data, w, 8, signed=True, delta=True)
+    return ways, pa.ListArray.from_arrays(
+        pa.array(_offsets(ref_counts).astype(np.int32), type=pa.int32()),
+        pa.array(refs, type=pa.int64()),
+    )
+
+
+def _parse_relations_columnar(data, spans, meta, want_info, compat, table, clamp):
+    """Relation messages → (columnar dict, members ListArray). roles_sid=8,
+    memids=9 (field 9 per spec — NOT 8, the OSM_Blob fastParse bug,
+    lib/OSM_Blob.js:962), types=10; member wire order preserved."""
+    member_tags = tuple(t for f in (8, 9, 10) for t in (_len_tag(f), _varint_tag(f)))
+    w, rels = _messages(data, spans, member_tags, meta, want_info, compat)
+    (roles, memids, types), mem_counts = _trim(
+        [
+            _repeated(data, w, 8),
+            _repeated(data, w, 9, signed=True, delta=True),
+            _repeated(data, w, 10),
+        ]
+    )
+    struct = pa.StructArray.from_arrays(
+        [
+            pa.array(memids, type=pa.int64()),
+            _take_strings(table, clamp, roles),
+            pa.array(types.astype(np.int32), type=pa.int32()),
+        ],
+        fields=list(MEMBER_ARROW),
+    )
+    return rels, pa.ListArray.from_arrays(
+        pa.array(_offsets(mem_counts).astype(np.int32), type=pa.int32()), struct
+    )
 
 
 # ------------------------------------------------------- Arrow assembly
 
 
-def _pa_maybe(pair_or_arr, n, pa_type):
-    """numpy array / (values, mask) pair / None → pa.Array of length n."""
-    if pair_or_arr is None:
-        return pa.nulls(n, pa_type)
-    if isinstance(pair_or_arr, tuple):
-        values, mask = pair_or_arr
-        return pa.array(values, type=pa_type, mask=~mask)
-    return pa.array(pair_or_arr, type=pa_type)
-
-
-def _user_array(info, n, table, clamp):
-    if info is None:
-        return pa.nulls(n, pa.string())
-    usid = info.get("user_sid")
-    if usid is None:
-        return pa.nulls(n, pa.string())
-    if isinstance(usid, tuple):
-        values, mask = usid
-        taken = _take_strings(table, clamp, values)
-        # null out the absent entries
-        return pa.array(
-            [t if m else None for t, m in zip(taken.to_pylist(), mask)], type=pa.string()
-        )
-    return _take_strings(table, clamp, usid)
-
-
-def _map_array(n, offsets, key_idx, val_idx, table, clamp):
-    keys = _take_strings(table, clamp, key_idx)
-    vals = _take_strings(table, clamp, val_idx)
-    return pa.MapArray.from_arrays(
-        pa.array(offsets.astype(np.int32), type=pa.int32()), keys, vals
-    )
-
-
-def _info_columns(info, n, table, clamp):
-    if info is None:
-        return {
-            "version": pa.nulls(n, pa.int32()),
-            "timestamp": pa.nulls(n, pa.int64()),
-            "changeset": pa.nulls(n, pa.int64()),
-            "uid": pa.nulls(n, pa.int64()),
-            "user": pa.nulls(n, pa.string()),
-            "visible": pa.nulls(n, pa.bool_()),
-        }
-    return {
-        "version": _pa_maybe(info.get("version"), n, pa.int32()),
-        "timestamp": _pa_maybe(info.get("timestamp"), n, pa.int64()),
-        "changeset": _pa_maybe(info.get("changeset"), n, pa.int64()),
-        "uid": _pa_maybe(info.get("uid"), n, pa.int64()),
-        "user": _user_array(info, n, table, clamp),
-        "visible": _pa_maybe(info.get("visible"), n, pa.bool_()),
-    }
-
-
-def _union_batch(kind, n, ids, lat, lon, tags, refs, members, info_cols, block_id):
+def _union_batch(kind, part, table, clamp, block_id, refs=None, members=None):
+    """One kind's columnar dict → a UNION_ARROW_SCHEMA RecordBatch."""
+    n = part["n"]
     cols = [
         pa.array([kind] * n, type=pa.string()),
-        pa.array(ids, type=pa.int64()),
-        lat if lat is not None else pa.nulls(n, pa.float64()),
-        lon if lon is not None else pa.nulls(n, pa.float64()),
-        tags,
-        refs if refs is not None else pa.nulls(n, pa.list_(pa.int64())),
-        members if members is not None else pa.nulls(n, pa.list_(MEMBER_ARROW)),
-        info_cols["version"],
-        info_cols["timestamp"],
-        info_cols["changeset"],
-        info_cols["uid"],
-        info_cols["user"],
-        info_cols["visible"],
-        pa.array(np.full(n, block_id, dtype=np.int32), type=pa.int32()),
+        pa.array(part["ids"], type=pa.int64()),
     ]
+    for coord in ("lat", "lon"):
+        vals = part.get(coord)
+        cols.append(
+            pa.nulls(n, pa.float64()) if vals is None else pa.array(vals, type=pa.float64())
+        )
+    cols.append(
+        pa.MapArray.from_arrays(
+            pa.array(part["tag_offsets"].astype(np.int32), type=pa.int32()),
+            _take_strings(table, clamp, part["key_idx"]),
+            _take_strings(table, clamp, part["val_idx"]),
+        )
+    )
+    cols.append(refs if refs is not None else pa.nulls(n, pa.list_(pa.int64())))
+    cols.append(members if members is not None else pa.nulls(n, pa.list_(MEMBER_ARROW)))
+    info = part["info"]
+    for _, name, _ in _INFO_FIELDS:
+        column = "user" if name == "user_sid" else name
+        if info is None:
+            cols.append(pa.nulls(n, UNION_ARROW_SCHEMA.field(column).type))
+        elif column == "user":
+            cols.append(_take_strings(table, clamp, *info[name]))
+        else:
+            vals, valid = info[name]
+            cols.append(
+                pa.array(vals, type=UNION_ARROW_SCHEMA.field(column).type, mask=~valid)
+            )
+    cols.append(pa.array(np.full(n, block_id, dtype=np.int32), type=pa.int32()))
     return pa.RecordBatch.from_arrays(cols, schema=UNION_ARROW_SCHEMA)
 
 
-def _merge_dense_groups(parts: list[dict]) -> dict:
-    """Concatenate several node groups of one block, info row-aligned
-    (null-padded where a group lacks a field) — columnar twin of
-    decode._merge_node_info."""
+def _merge_node_parts(parts: list[dict]) -> dict:
+    """Concatenate the node groups of one block (several DenseNodes
+    groups, or dense + plain), info row-aligned and null where a group
+    has none."""
     if len(parts) == 1:
         return parts[0]
     n = sum(p["n"] for p in parts)
@@ -821,30 +617,14 @@ def _merge_dense_groups(parts: list[dict]) -> dict:
         "info": None,
     }
     if any(p["info"] is not None for p in parts):
-        info = {}
-        for key, dtype in (
-            ("version", np.int32), ("timestamp", np.int64), ("changeset", np.int64),
-            ("uid", np.int64), ("user_sid", np.int64), ("visible", bool),
-        ):
-            vals = np.zeros(n, dtype=dtype)
-            mask = np.zeros(n, dtype=bool)
-            pos = 0
-            any_set = False
-            for p in parts:
-                k = p["n"]
-                pi = p["info"]
-                v = None if pi is None else pi.get(key)
-                if v is not None:
-                    if isinstance(v, tuple):
-                        vals[pos : pos + k] = v[0]
-                        mask[pos : pos + k] = v[1]
-                    else:
-                        vals[pos : pos + k] = v
-                        mask[pos : pos + k] = True
-                    any_set = True
-                pos += k
-            info[key] = (vals, mask) if any_set else None
-        merged["info"] = info
+        infos = [p["info"] or _null_info(p["n"]) for p in parts]
+        merged["info"] = {
+            name: (
+                np.concatenate([i[name][0] for i in infos]),
+                np.concatenate([i[name][1] for i in infos]),
+            )
+            for _, name, _ in _INFO_FIELDS
+        }
     return merged
 
 
@@ -874,9 +654,9 @@ def decode_block_arrow(
             if fno == 1 and KIND_NODE in kinds:
                 plain_spans.append(val)
             elif fno == 2 and KIND_NODE in kinds:
-                node_parts.append(
-                    _parse_dense_columnar(payload, val[0], val[1], meta, want_info)
-                )
+                dense = _parse_dense_columnar(payload, val[0], val[1], meta, want_info)
+                dense["info"] = _dense_info_pairs(dense["info"], dense["n"])
+                node_parts.append(dense)
             elif fno == 3 and KIND_WAY in kinds:
                 way_spans.append(val)
             elif fno == 4 and KIND_RELATION in kinds:
@@ -888,83 +668,18 @@ def decode_block_arrow(
 
     out = []
     if node_parts:
-        nd = _merge_dense_groups(node_parts)
-        if nd["n"]:
-            tags = _map_array(
-                nd["n"], nd["tag_offsets"], nd["key_idx"], nd["val_idx"], table, clamp
-            )
-            out.append(
-                _union_batch(
-                    KIND_NODE, nd["n"], nd["ids"],
-                    pa.array(nd["lat"], type=pa.float64()),
-                    pa.array(nd["lon"], type=pa.float64()),
-                    tags, None, None,
-                    _info_columns(nd["info"], nd["n"], table, clamp),
-                    block_id,
-                )
-            )
+        nodes = _merge_node_parts(node_parts)
+        if nodes["n"]:
+            out.append(_union_batch(KIND_NODE, nodes, table, clamp, block_id))
     if way_spans:
-        w = _parse_ways_columnar(payload, way_spans, meta, want_info, compat)
-        acc = w["acc"]
-        n = len(acc.ids)
-        tag_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(w["tag_counts"], out=tag_off[1:])
-        tags = _map_array(n, tag_off, w["key_idx"], w["val_idx"], table, clamp)
-        ref_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(w["ref_counts"], out=ref_off[1:])
-        refs = pa.ListArray.from_arrays(
-            pa.array(ref_off.astype(np.int32), type=pa.int32()),
-            pa.array(w["refs_flat"], type=pa.int64()),
-        )
-        out.append(
-            _union_batch(
-                KIND_WAY, n, np.array(acc.ids, dtype=np.int64), None, None,
-                tags, refs, None, _acc_info_columns(acc, n, table, clamp), block_id,
-            )
-        )
+        ways, refs = _parse_ways_columnar(payload, way_spans, meta, want_info, compat)
+        out.append(_union_batch(KIND_WAY, ways, table, clamp, block_id, refs=refs))
     if rel_spans:
-        r = _parse_relations_columnar(payload, rel_spans, meta, want_info, compat)
-        acc = r["acc"]
-        n = len(acc.ids)
-        tag_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(r["tag_counts"], out=tag_off[1:])
-        tags = _map_array(n, tag_off, r["key_idx"], r["val_idx"], table, clamp)
-        mem_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(r["mem_counts"], out=mem_off[1:])
-        struct = pa.StructArray.from_arrays(
-            [
-                pa.array(r["memids"], type=pa.int64()),
-                _take_strings(table, clamp, r["roles"]),
-                pa.array(r["types"], type=pa.int32()),
-            ],
-            fields=list(MEMBER_ARROW),
+        rels, members = _parse_relations_columnar(
+            payload, rel_spans, meta, want_info, compat, table, clamp
         )
-        members = pa.ListArray.from_arrays(
-            pa.array(mem_off.astype(np.int32), type=pa.int32()), struct
-        )
-        out.append(
-            _union_batch(
-                KIND_RELATION, n, np.array(acc.ids, dtype=np.int64), None, None,
-                tags, None, members, _acc_info_columns(acc, n, table, clamp), block_id,
-            )
-        )
+        out.append(_union_batch(KIND_RELATION, rels, table, clamp, block_id, members=members))
     return out
-
-
-def _acc_info_columns(acc: _MsgAccumulator, n: int, table, clamp):
-    if not acc.want_info:
-        return _info_columns(None, n, table, clamp)
-    info = {
-        "version": _np_nullable(acc.version, np.int32),
-        "timestamp": _np_nullable(acc.timestamp, np.int64),
-        "changeset": _np_nullable(acc.changeset, np.int64),
-        "uid": _np_nullable(acc.uid, np.int64),
-        "user_sid": _np_nullable(acc.user_sid, np.int64),
-        "visible": _np_nullable(acc.visible, bool),
-    }
-    if all(v is None for v in info.values()):
-        return _info_columns(None, n, table, clamp)
-    return _info_columns(info, n, table, clamp)
 
 
 def decode_blob_to_batches(

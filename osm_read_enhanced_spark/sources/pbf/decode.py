@@ -1,6 +1,12 @@
-"""Spec-correct OSM PBF block decode (pure python + numpy, zero deps).
+"""OSM PBF framing and block-level decode (pure python + numpy).
 
-Semantics grafted from the reference parser (SURVEY.md §1):
+This module holds what surrounds the entity decode: Blob inflate
+(``decode_blob``/``decompress``), BlobHeader and OSMHeader parsing, the
+value-free element count of a PrimitiveBlock, and the two decode modes.
+Entities themselves are decoded by ``columnar.decode_block_arrow``, the
+package's only PrimitiveBlock entity decoder.
+
+Decode semantics grafted from the reference parser (SURVEY.md §1):
 
 - coordinate formula ``degrees = (offset + granularity × Σdeltas) / 1e9``
   (reference README.md:120-124, lib/pbfParser.js:613-614,
@@ -10,36 +16,24 @@ Semantics grafted from the reference parser (SURVEY.md §1):
 - relation member order preserved (reference ChangeLog:1-27)
 - string table index 0 reserved empty (osmformat.proto:125-133)
 
-``mode="strict"`` is the canonical wire-correct decode (matches the
-reference classic parser's way/relation tags — its self-designated
-ground truth, generate-pbf-reference.js:5-10, and the raw-wire goldens
-in FIXTURES.md). ``mode="osm-read-compat"`` reproduces the reference
-OSM_Blob string-cache off-by-one (cache seeded [''] then re-appends
-entry 0, lib/OSM_Blob.js:360-367): every tag string index resolves one
-entry late, and way/relation tags come back empty (packed-keys bug,
-lib/OSM_Blob.js:1328). See SURVEY.md §5.3 for the verified goldens.
+``STRICT`` is the canonical wire-correct decode (matches the reference
+classic parser's way/relation tags — its self-designated ground truth,
+generate-pbf-reference.js:5-10, and the raw-wire goldens in
+FIXTURES.md). ``COMPAT`` (``"osm-read-compat"``) reproduces the
+reference OSM_Blob string-cache off-by-one (cache seeded [''] then
+re-appends entry 0, lib/OSM_Blob.js:360-367): every string index
+resolves one entry late, and way/relation tags come back empty
+(packed-keys bug, lib/OSM_Blob.js:1328). See SURVEY.md §5.3 for the
+verified goldens.
 """
 
 from __future__ import annotations
 
 import zlib
-from dataclasses import dataclass, field
 
 import numpy as np
 
-from .proto import (
-    WT_LEN,
-    WT_VARINT,
-    decode_packed_svarints,
-    decode_packed_uvarints,
-    delta_decode,
-    iter_fields,
-    read_varint,
-    zigzag_decode,
-)
-
-MEMBER_NODE, MEMBER_WAY, MEMBER_RELATION = 0, 1, 2
-MEMBER_TYPE_NAMES = {0: "node", 1: "way", 2: "relation"}
+from .proto import WT_LEN, WT_VARINT, iter_fields, zigzag_decode
 
 STRICT = "strict"
 COMPAT = "osm-read-compat"
@@ -168,369 +162,6 @@ def decode_header_block(data: bytes) -> dict:
 
 # ---------------------------------------------------------------- Primitive block
 
-NODE_META = ("version", "timestamp", "changeset", "uid", "user", "visible")
-
-
-@dataclass
-class DecodedBlock:
-    """Columnar decode result for one PrimitiveBlock."""
-
-    granularity: int = 100
-    date_granularity: int = 1000
-    lat_offset: int = 0
-    lon_offset: int = 0
-    strings: list = field(default_factory=list)
-    # nodes (columnar)
-    node_id: np.ndarray = None
-    node_lat: np.ndarray = None
-    node_lon: np.ndarray = None
-    node_tags: list = None
-    node_info: dict = None  # name → array/list or None
-    ways: list = field(default_factory=list)  # dict rows
-    relations: list = field(default_factory=list)  # dict rows
-    n_changesets_skipped: int = 0  # changeset groups seen but not decoded
-
-    @property
-    def n_nodes(self) -> int:
-        return 0 if self.node_id is None else len(self.node_id)
-
-
-def _parse_string_table(data: bytes, s: int, e: int) -> list[str]:
-    strings = []
-    for fno, wt, val in iter_fields(data, s, e):
-        if fno == 1 and wt == WT_LEN:
-            strings.append(data[val[0] : val[1]].decode("utf-8", errors="replace"))
-    return strings
-
-
-def _string_lookup(strings: list[str], mode: str):
-    """Return idx→str resolver per decode mode.
-
-    compat: reference OSM_Blob cache = [''] + table (entry 0 appended
-    twice, lib/OSM_Blob.js:360-367) → index i resolves to table[i-1].
-    """
-    if mode == COMPAT:
-        shifted = [""] + strings
-
-        def lookup(i: int) -> str:
-            return shifted[i] if i < len(shifted) else ""
-
-    else:
-
-        def lookup(i: int) -> str:
-            return strings[i] if i < len(strings) else ""
-
-    return lookup
-
-
-def _merge_node_info(old, n_old: int, new, n_new: int):
-    """Concatenate per-group node info dicts, null-padding fields only
-    one group carries — a block may hold several dense groups (or dense
-    + plain nodes) and metadata must stay row-aligned, not be dropped.
-    Returns None only when neither group had any info."""
-    if old is None and new is None:
-        return None
-
-    def as_list(info, key, n):
-        v = None if info is None else info.get(key)
-        if v is None:
-            return [None] * n
-        return v.tolist() if isinstance(v, np.ndarray) else list(v)
-
-    return {k: as_list(old, k, n_old) + as_list(new, k, n_new) for k in NODE_META}
-
-
-def _tags_from_kv_runs(keys_vals: np.ndarray, n_nodes: int, lookup) -> list[dict]:
-    """Split the 0-terminated flattened ((k,v)* 0)* runs into per-node tag
-    dicts (osmformat.proto DenseNodes.keys_vals; spec-correct run split —
-    NOT the reference classic parser's kv-pointer bug, pbfParser.js:529).
-
-    Vectorized: zeros delimit nodes (string index 0 is the reserved empty
-    key, never a real key)."""
-    if keys_vals.size == 0:
-        return [{} for _ in range(n_nodes)]
-    kv = keys_vals.astype(np.int64)
-    # walk: positions alternate key/value within a run; zero at a key
-    # position terminates the node. A zero can only be a terminator when
-    # it appears at key position, so track parity per run.
-    tags: list[dict] = []
-    i = 0
-    n = kv.size
-    # fast path: locate all zeros; if count == n_nodes and no zero ever
-    # lands at a value position, every zero is a terminator → vector split
-    zero_pos = np.flatnonzero(kv == 0)
-    if len(zero_pos) == n_nodes:
-        starts = np.empty(n_nodes, dtype=np.int64)
-        starts[0] = 0
-        starts[1:] = zero_pos[:-1] + 1
-        if bool(np.all((zero_pos - starts) % 2 == 0)):
-            for s, z in zip(starts, zero_pos):
-                if z == s:
-                    tags.append({})
-                else:
-                    run = kv[s:z]
-                    tags.append(
-                        {lookup(int(k)): lookup(int(v)) for k, v in zip(run[::2], run[1::2])}
-                    )
-            return tags
-    # general path (value index 0 present): sequential parity walk
-    while i < n and len(tags) < n_nodes:
-        d = {}
-        while i < n and kv[i] != 0:
-            k = lookup(int(kv[i]))
-            v = lookup(int(kv[i + 1])) if i + 1 < n else ""
-            d[k] = v
-            i += 2
-        i += 1  # skip terminator
-        tags.append(d)
-    while len(tags) < n_nodes:
-        tags.append({})
-    return tags
-
-
-def _parse_dense_info(data: bytes, s: int, e: int, n: int, date_granularity: int, strings, mode):
-    """DenseInfo: delta-coded version/timestamp/changeset/uid/user_sid
-    (osmformat.proto:155-171; reference cumsum at pbfParser.js:560-607)."""
-    info = {k: None for k in NODE_META}
-    lookup = _string_lookup(strings, mode)
-    for fno, wt, val in iter_fields(data, s, e):
-        if wt != WT_LEN:
-            continue
-        sl = data[val[0] : val[1]]
-        if fno == 1:
-            info["version"] = decode_packed_uvarints(sl).astype(np.int64)
-        elif fno == 2:
-            info["timestamp"] = delta_decode(decode_packed_svarints(sl)) * date_granularity
-        elif fno == 3:
-            info["changeset"] = delta_decode(decode_packed_svarints(sl))
-        elif fno == 4:
-            info["uid"] = delta_decode(decode_packed_svarints(sl))
-        elif fno == 5:
-            sids = delta_decode(decode_packed_svarints(sl))
-            info["user"] = [lookup(int(i)) for i in sids]
-        elif fno == 6:
-            info["visible"] = decode_packed_uvarints(sl).astype(bool)
-    if info["visible"] is None and n:
-        info["visible"] = np.ones(n, dtype=bool)
-    return info
-
-
-def _parse_info(data: bytes, s: int, e: int, date_granularity: int, strings, mode) -> dict:
-    """Non-dense Info message (ways/relations/plain nodes)."""
-    out = dict.fromkeys(NODE_META)
-    lookup = _string_lookup(strings, mode)
-    for fno, wt, val in iter_fields(data, s, e):
-        if wt != WT_VARINT:
-            continue
-        if fno == 1:
-            out["version"] = val
-        elif fno == 2:
-            out["timestamp"] = val * date_granularity
-        elif fno == 3:
-            out["changeset"] = val
-        elif fno == 4:
-            out["uid"] = val
-        elif fno == 5:
-            out["user"] = lookup(val)
-        elif fno == 6:
-            out["visible"] = bool(val)
-    if out["visible"] is None:
-        out["visible"] = True
-    return out
-
-
-def _packed_or_repeated_u(data, entries, key):
-    """keys/vals/refs may arrive packed (wiretype 2) or repeated (wiretype
-    0); the reference OSM_Blob lazy path only handled unpacked and silently
-    dropped tags on real files (bug, lib/OSM_Blob.js:1328) — we handle both."""
-    packed = entries.get((key, WT_LEN))
-    if packed:
-        return np.concatenate([decode_packed_uvarints(data[s:e]) for s, e in packed])
-    rep = entries.get((key, WT_VARINT))
-    if rep:
-        return np.array(rep, dtype=np.uint64)
-    return np.empty(0, dtype=np.uint64)
-
-
-def _packed_or_repeated_s(data, entries, key):
-    packed = entries.get((key, WT_LEN))
-    if packed:
-        return np.concatenate([decode_packed_svarints(data[s:e]) for s, e in packed])
-    rep = entries.get((key, WT_VARINT))
-    if rep:
-        return np.array([zigzag_decode(v) for v in rep], dtype=np.int64)
-    return np.empty(0, dtype=np.int64)
-
-
-def _collect_entries(data: bytes, s: int, e: int) -> dict:
-    entries: dict = {}
-    for fno, wt, val in iter_fields(data, s, e):
-        entries.setdefault((fno, wt), []).append(val)
-    return entries
-
-
-def _tags_from_keys_vals(data, entries, strings, mode) -> dict:
-    """Way/relation tags from parallel keys[]/vals[] (reference
-    createTagsObject, pbfParser.js:686-700 — the repo's only spec-correct
-    tag path). compat mode: {} (OSM_Blob packed-keys bug)."""
-    if mode == COMPAT:
-        return {}
-    keys = _packed_or_repeated_u(data, entries, 2)
-    vals = _packed_or_repeated_u(data, entries, 3)
-    lookup = _string_lookup(strings, mode)
-    return {lookup(int(k)): lookup(int(v)) for k, v in zip(keys, vals)}
-
-
-def _parse_dense(blk: DecodedBlock, data: bytes, s: int, e: int, mode: str, want_info: bool):
-    dense = _collect_entries(data, s, e)
-
-    def packed(key):
-        sl = dense.get((key, WT_LEN))
-        return sl[0] if sl else None
-
-    def packed_all_s(key):
-        # protobuf allows a packed field split over several length-
-        # delimited occurrences — concatenate them all before the
-        # delta cumsum (fields 1/8/9/10 alike)
-        sl = dense.get((key, WT_LEN))
-        if not sl:
-            return np.empty(0, dtype=np.int64)
-        if len(sl) == 1:
-            return decode_packed_svarints(data[sl[0][0] : sl[0][1]])
-        return np.concatenate([decode_packed_svarints(data[a:b]) for a, b in sl])
-
-    ids = delta_decode(packed_all_s(1))
-    lats = delta_decode(packed_all_s(8))
-    lons = delta_decode(packed_all_s(9))
-    n = len(ids)
-    # degrees = (offset + granularity × Σdeltas) / 1e9
-    lat_deg = (blk.lat_offset + blk.granularity * lats.astype(np.float64)) / 1e9
-    lon_deg = (blk.lon_offset + blk.granularity * lons.astype(np.float64)) / 1e9
-    kv_spans = dense.get((10, WT_LEN))
-    if not kv_spans:
-        kv = np.empty(0, dtype=np.uint64)
-    elif len(kv_spans) == 1:
-        kv = decode_packed_uvarints(data[kv_spans[0][0] : kv_spans[0][1]])
-    else:
-        kv = np.concatenate([decode_packed_uvarints(data[a:b]) for a, b in kv_spans])
-    lookup = _string_lookup(blk.strings, mode)
-    tags = _tags_from_kv_runs(kv, n, lookup)
-    info = None
-    if want_info and packed(5):
-        s5, e5 = packed(5)
-        info = _parse_dense_info(
-            data, s5, e5, n, blk.date_granularity, blk.strings, mode
-        )
-    # append (a block may hold several dense groups)
-    if blk.node_id is None:
-        blk.node_id, blk.node_lat, blk.node_lon, blk.node_tags = ids, lat_deg, lon_deg, tags
-        blk.node_info = info
-    else:
-        n_old = len(blk.node_id)
-        blk.node_id = np.concatenate([blk.node_id, ids])
-        blk.node_lat = np.concatenate([blk.node_lat, lat_deg])
-        blk.node_lon = np.concatenate([blk.node_lon, lon_deg])
-        blk.node_tags.extend(tags)
-        blk.node_info = _merge_node_info(blk.node_info, n_old, info, n)
-    return blk
-
-
-def _parse_plain_nodes(blk: DecodedBlock, data: bytes, nodes: list, mode: str, want_info: bool):
-    """Non-dense Node messages (rare; reference classic parser refuses them,
-    lib/pbfParser.js:519-521 — we support them per spec,
-    like OSM_Blob's individual-node path lib/OSM_Blob.js:1209-1262)."""
-    ids, lats, lons, tags_l = [], [], [], []
-    infos = {k: [] for k in NODE_META} if want_info else None
-    lookup = _string_lookup(blk.strings, mode)
-    for s, e in nodes:
-        entries = _collect_entries(data, s, e)
-        nid = entries.get((1, WT_VARINT), [0])[0]
-        ids.append(zigzag_decode(nid))
-        lat = entries.get((8, WT_VARINT), [0])[0]
-        lon = entries.get((9, WT_VARINT), [0])[0]
-        lats.append((blk.lat_offset + blk.granularity * zigzag_decode(lat)) / 1e9)
-        lons.append((blk.lon_offset + blk.granularity * zigzag_decode(lon)) / 1e9)
-        if mode == COMPAT:
-            tags_l.append({})
-        else:
-            keys = _packed_or_repeated_u(data, entries, 2)
-            vals = _packed_or_repeated_u(data, entries, 3)
-            tags_l.append({lookup(int(k)): lookup(int(v)) for k, v in zip(keys, vals)})
-        if want_info:
-            isl = entries.get((4, WT_LEN))
-            info = (
-                _parse_info(data, isl[0][0], isl[0][1], blk.date_granularity, blk.strings, mode)
-                if isl
-                else dict.fromkeys(NODE_META)
-            )
-            for k in NODE_META:
-                infos[k].append(info[k])
-    new_ids = np.array(ids, dtype=np.int64)
-    if blk.node_id is None:
-        blk.node_id = new_ids
-        blk.node_lat = np.array(lats)
-        blk.node_lon = np.array(lons)
-        blk.node_tags = tags_l
-        blk.node_info = infos
-    else:
-        n_old = len(blk.node_id)
-        blk.node_id = np.concatenate([blk.node_id, new_ids])
-        blk.node_lat = np.concatenate([blk.node_lat, np.array(lats)])
-        blk.node_lon = np.concatenate([blk.node_lon, np.array(lons)])
-        blk.node_tags.extend(tags_l)
-        blk.node_info = _merge_node_info(blk.node_info, n_old, infos, len(new_ids))
-    return blk
-
-
-def _parse_way(blk: DecodedBlock, data: bytes, s: int, e: int, mode: str, want_info: bool) -> dict:
-    entries = _collect_entries(data, s, e)
-    wid = entries.get((1, WT_VARINT), [0])[0]
-    refs = delta_decode(_packed_or_repeated_s(data, entries, 8))
-    way = {
-        "id": int(wid),
-        "refs": refs.tolist(),
-        "tags": _tags_from_keys_vals(data, entries, blk.strings, mode),
-    }
-    if want_info:
-        isl = entries.get((4, WT_LEN))
-        way.update(
-            _parse_info(data, isl[0][0], isl[0][1], blk.date_granularity, blk.strings, mode)
-            if isl
-            else dict.fromkeys(NODE_META)
-        )
-    return way
-
-
-def _parse_relation(
-    blk: DecodedBlock, data: bytes, s: int, e: int, mode: str, want_info: bool
-) -> dict:
-    """Relation: members = zip(Σmemids, roles_sid→string, types) with wire
-    order preserved (reference pbfParser.js:659-684; memids are field 9 —
-    NOT field 8, the OSM_Blob fastParse bug, lib/OSM_Blob.js:962-972)."""
-    entries = _collect_entries(data, s, e)
-    rid = entries.get((1, WT_VARINT), [0])[0]
-    roles_sid = _packed_or_repeated_u(data, entries, 8)
-    memids = delta_decode(_packed_or_repeated_s(data, entries, 9))
-    types = _packed_or_repeated_u(data, entries, 10)
-    lookup = _string_lookup(blk.strings, mode)
-    members = [
-        {"ref": int(m), "role": lookup(int(r)), "type": int(t)}
-        for m, r, t in zip(memids, roles_sid, types)
-    ]
-    rel = {
-        "id": int(rid),
-        "tags": _tags_from_keys_vals(data, entries, blk.strings, mode),
-        "members": members,
-    }
-    if want_info:
-        isl = entries.get((4, WT_LEN))
-        rel.update(
-            _parse_info(data, isl[0][0], isl[0][1], blk.date_granularity, blk.strings, mode)
-            if isl
-            else dict.fromkeys(NODE_META)
-        )
-    return rel
-
 
 def count_block_elements(data: bytes) -> tuple[int, int, int, int]:
     """Exact (n_nodes, n_ways, n_relations, n_changesets) WITHOUT value
@@ -541,8 +172,8 @@ def count_block_elements(data: bytes) -> tuple[int, int, int, int]:
     numpy comparison, no delta/tag/coordinate decode; ways/relations/
     changesets count message occurrences only. Changesets (PrimitiveGroup
     field 5, osmformat.proto:116-122) are counted — not silently invisible
-    — even though neither engine decodes their payload (spec-gap parity
-    with the reference, which also skips them)."""
+    — even though their payload is not decoded (spec-gap parity with the
+    reference, which also skips them)."""
     n_nodes = n_ways = n_rels = n_changesets = 0
     for fno, wt, val in iter_fields(data):
         if fno != 2 or wt != WT_LEN:
@@ -564,59 +195,3 @@ def count_block_elements(data: bytes) -> tuple[int, int, int, int]:
             elif gf == 5:
                 n_changesets += 1
     return n_nodes, n_ways, n_rels, n_changesets
-
-
-def decode_primitive_block(
-    data: bytes,
-    mode: str = STRICT,
-    kinds: tuple = ("node", "way", "relation"),
-    want_info: bool = True,
-) -> DecodedBlock:
-    """Decode one decompressed PrimitiveBlock → columnar DecodedBlock.
-
-    Entity kinds not in ``kinds`` are skipped without decoding their
-    group payloads (plan-level pruning — the working version of the
-    reference's abandoned per-row "decode modes", SURVEY.md §4 O3).
-    """
-    if mode not in (STRICT, COMPAT):
-        raise ValueError(f"unknown decode mode {mode!r}")
-    blk = DecodedBlock()
-    groups = []
-    for fno, wt, val in iter_fields(data):
-        if fno == 1 and wt == WT_LEN:
-            blk.strings = _parse_string_table(data, val[0], val[1])
-        elif fno == 2 and wt == WT_LEN:
-            groups.append(val)
-        elif fno == 17 and wt == WT_VARINT:
-            blk.granularity = val
-        elif fno == 18 and wt == WT_VARINT:
-            blk.date_granularity = val
-        elif fno == 19 and wt == WT_VARINT:
-            blk.lat_offset = zigzag_decode(val)
-        elif fno == 20 and wt == WT_VARINT:
-            blk.lon_offset = zigzag_decode(val)
-    for gs, ge in groups:
-        plain_nodes = []
-        for fno, wt, val in iter_fields(data, gs, ge):
-            if wt != WT_LEN:
-                continue
-            if fno == 1 and "node" in kinds:
-                plain_nodes.append(val)
-            elif fno == 2 and "node" in kinds:
-                _parse_dense(blk, data, val[0], val[1], mode, want_info)
-            elif fno == 3 and "way" in kinds:
-                blk.ways.append(_parse_way(blk, data, val[0], val[1], mode, want_info))
-            elif fno == 4 and "relation" in kinds:
-                blk.relations.append(_parse_relation(blk, data, val[0], val[1], mode, want_info))
-            elif fno == 5:
-                # ChangeSet group (osmformat.proto:116-122): not decoded
-                # (reference parity) but counted, never invisible
-                blk.n_changesets_skipped += 1
-        if plain_nodes:
-            _parse_plain_nodes(blk, data, plain_nodes, mode, want_info)
-    if blk.node_id is None:
-        blk.node_id = np.empty(0, dtype=np.int64)
-        blk.node_lat = np.empty(0, dtype=np.float64)
-        blk.node_lon = np.empty(0, dtype=np.float64)
-        blk.node_tags = []
-    return blk

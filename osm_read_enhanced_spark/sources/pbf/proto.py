@@ -148,6 +148,10 @@ def delta_decode(deltas: np.ndarray) -> np.ndarray:
 
 
 def encode_varint(v: int) -> bytes:
+    """LEB128. A negative value is sent as its 64-bit two's complement
+    (10 bytes), as protobuf does for int32/int64 fields."""
+    if v < 0:
+        v += 1 << 64
     out = bytearray()
     while True:
         b = v & 0x7F

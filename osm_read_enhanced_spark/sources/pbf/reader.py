@@ -2,10 +2,10 @@
 
 Scale design (SURVEY.md §3.1 "Spark lifecycle equivalent"): the block
 index — not raw byte ranges — is what gets distributed. Each task seeks
-to its blocks' exact offsets, inflates, and decodes with the vectorized
-kernels in ``columnar.py``; one PrimitiveBlock never spans partitions,
-so the block-local delta decode (prefix sums) stays inside one Arrow
-batch. On a real cluster the ``open()`` below is an HDFS/S3 stream via
+to its blocks' exact offsets, inflates, and decodes with
+``columnar.decode_block_arrow`` (the package's one entity decoder); one
+PrimitiveBlock never spans partitions, so the block-local delta decode
+(prefix sums) stays inside one Arrow batch. On a real cluster the ``open()`` below is an HDFS/S3 stream via
 the executor-local filesystem client; the plan shape is identical.
 
 SINGLE-PASS decode: each block is read, inflated, and TLV-walked ONCE,
@@ -28,11 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .blocks import scan_blocks
-from .decode import (
-    NODE_META,
-    count_block_elements,
-    decode_blob,
-)
+from .decode import count_block_elements, decode_blob
 
 BLOCK_INDEX_SCHEMA = T.StructType(
     [
@@ -53,27 +49,6 @@ _META_FIELDS = [
     T.StructField("visible", T.BooleanType(), True),
 ]
 
-NODES_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("lat", T.DoubleType(), False),
-        T.StructField("lon", T.DoubleType(), False),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
-        *_META_FIELDS,
-        T.StructField("block_id", T.IntegerType(), False),
-    ]
-)
-
-WAYS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("refs", T.ArrayType(T.LongType()), True),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
-        *_META_FIELDS,
-        T.StructField("block_id", T.IntegerType(), False),
-    ]
-)
-
 MEMBER_TYPE = T.StructType(
     [
         T.StructField("ref", T.LongType(), False),
@@ -92,16 +67,6 @@ UNION_SCHEMA = T.StructType(
         T.StructField("lon", T.DoubleType(), True),
         T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
         T.StructField("refs", T.ArrayType(T.LongType()), True),
-        T.StructField("members", T.ArrayType(MEMBER_TYPE), True),
-        *_META_FIELDS,
-        T.StructField("block_id", T.IntegerType(), False),
-    ]
-)
-
-RELATIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
         T.StructField("members", T.ArrayType(MEMBER_TYPE), True),
         *_META_FIELDS,
         T.StructField("block_id", T.IntegerType(), False),
@@ -263,10 +228,11 @@ def read_pbf_union(
     return data_blocks.mapInArrow(decode_partition, UNION_SCHEMA)
 
 
+_META_NAMES = [f.name for f in _META_FIELDS]
 _KIND_COLS = {
-    "node": ["id", "lat", "lon", "tags", *NODE_META, "block_id"],
-    "way": ["id", "refs", "tags", *NODE_META, "block_id"],
-    "relation": ["id", "tags", "members", *NODE_META, "block_id"],
+    "node": ["id", "lat", "lon", "tags", *_META_NAMES, "block_id"],
+    "way": ["id", "refs", "tags", *_META_NAMES, "block_id"],
+    "relation": ["id", "tags", "members", *_META_NAMES, "block_id"],
 }
 
 

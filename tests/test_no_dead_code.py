@@ -1,12 +1,13 @@
 """Guard against dead top-level code in the package.
 
-Every undecorated top-level function or class under
-``osm_read_enhanced_spark/`` must be named somewhere in the checkout's
-``.py`` files other than at its own definition: as an identifier, an
-attribute or an imported name. Decorated definitions (the ``@q``-
-registered catalog queries, Spark UDFs) are reached through their
-decorator and are exempt. There is no allowlist: a name nothing uses
-is deleted, not excused.
+Every undecorated top-level function or class, and every name a
+module-level assignment binds, under ``osm_read_enhanced_spark/`` must
+be named somewhere in the checkout's ``.py`` files other than at its
+own definition: as an identifier, an attribute or an imported name.
+Decorated definitions (the ``@q``-registered catalog queries, Spark
+UDFs) are reached through their decorator, and dunder names such as
+``__all__`` through the interpreter; both are exempt. There is no
+allowlist: a name nothing uses is deleted, not excused.
 """
 
 from __future__ import annotations
@@ -40,6 +41,24 @@ def _names(tree) -> Counter:
     return names
 
 
+def _assigned(node):
+    """Names a module-level assignment binds (tuple targets unpacked)."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name)
+        and isinstance(n.ctx, ast.Store)
+        and not (n.id.startswith("__") and n.id.endswith("__"))
+    ]
+
+
 def test_every_top_level_definition_is_used():
     used = Counter()
     defs = []
@@ -48,16 +67,16 @@ def test_every_top_level_definition_is_used():
             tree = ast.parse(fh.read(), filename=path)
         used += _names(tree)
         if path.startswith(PACKAGE + os.sep):
-            defs += [
-                (os.path.relpath(path, ROOT), node)
-                for node in tree.body
-                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not node.decorator_list
-            ]
-    # a name used only inside its own definition (recursion) is unused
+            rel = os.path.relpath(path, ROOT)
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    if not node.decorator_list:
+                        defs.append((rel, node.name, node))
+                else:
+                    defs += [(rel, name, node) for name in _assigned(node)]
+    # a name used only inside its own definition (recursion, or the
+    # assignment's own target) is unused
     dead = sorted(
-        f"{path}::{node.name}"
-        for path, node in defs
-        if used[node.name] == _names(node)[node.name]
+        f"{path}::{name}" for path, name, node in defs if used[name] == _names(node)[name]
     )
     assert not dead, "top-level definitions named nowhere else:\n" + "\n".join(dead)

@@ -6,19 +6,23 @@ OSMHeader carrying OsmSchema-V0.6 + DenseNodes, dense nodes in block 0,
 ways with nodeRefs in block 2 — FIXTURES.md §A3).
 """
 
-import os
-
 import pytest
 
+from osm_read_enhanced_spark.fixtures import build_pitcairn_like
 from osm_read_enhanced_spark.sources.pbf import (
     decode_blob,
     decode_header_block,
-    decode_primitive_block,
     scan_blocks,
     write_pbf,
 )
 from osm_read_enhanced_spark.sources.pbf.blocks import read_block_payload
-from osm_read_enhanced_spark.fixtures import build_pitcairn_like
+
+# sibling test module: the decoder's output as rows
+from test_differential import engine_rows
+
+
+def _rows(block, kind):
+    return engine_rows(decode_blob(read_block_payload(block)), kinds=(kind,))
 
 
 @pytest.fixture(scope="module")
@@ -33,9 +37,33 @@ def test_roundtrip_uncompressed(tmp_path):
     nodes = [dict(id=2**53 + i, lat=-25.066, lon=-130.1, tags={}) for i in range(3)]
     write_pbf(path, [dict(nodes=nodes)], compress=False)
     blocks = scan_blocks(path)
-    blk = decode_primitive_block(decode_blob(read_block_payload(blocks[1])))
     # ids beyond JS 53-bit hazard survive exactly (int64 end-to-end)
-    assert blk.node_id.tolist() == [2**53, 2**53 + 1, 2**53 + 2]
+    assert [r["id"] for r in _rows(blocks[1], "node")] == [2**53, 2**53 + 1, 2**53 + 2]
+
+
+def test_roundtrip_negative_ids(tmp_path):
+    """Negative int64 ids and int32 uids are written as 10-byte varints
+    (64-bit two's complement) and read back unchanged."""
+    path = str(tmp_path / "neg.pbf")
+    info = dict(version=1, timestamp=7, changeset=3, uid=-1, user="anon")
+    write_pbf(
+        path,
+        [
+            dict(
+                ways=[dict(id=-5, refs=[1, 2], tags={"a": "b"}, info=info)],
+                relations=[
+                    dict(id=-7, members=[dict(ref=-5, role="outer", type=1)], info=info)
+                ],
+            )
+        ],
+    )
+    block = scan_blocks(path)[1]
+    (way,) = _rows(block, "way")
+    (rel,) = _rows(block, "relation")
+    assert (way["id"], way["uid"], way["user"], way["refs"]) == (-5, -1, "anon", [1, 2])
+    assert (rel["id"], rel["uid"], rel["members"]) == (
+        -7, -1, [{"ref": -5, "role": "outer", "type": 1}]
+    )
 
 
 def test_pitcairn_header(pitcairn):
@@ -50,21 +78,19 @@ def test_pitcairn_header(pitcairn):
 def test_pitcairn_block_composition(pitcairn):
     blocks = scan_blocks(pitcairn)
     data = [b for b in blocks if b.block_type == "OSMData"]
-    b0 = decode_primitive_block(decode_blob(read_block_payload(data[0])))
-    assert b0.n_nodes > 0
-    assert int(b0.node_id[0]) != 0 and b0.node_lat[0] != 0 and b0.node_lon[0] != 0
-    b2 = decode_primitive_block(decode_blob(read_block_payload(data[2])))
-    assert len(b2.ways) > 0
-    assert all(len(w["refs"]) > 0 for w in b2.ways)
+    nodes0 = _rows(data[0], "node")
+    assert nodes0
+    assert nodes0[0]["id"] != 0 and nodes0[0]["lat"] != 0 and nodes0[0]["lon"] != 0
+    ways2 = _rows(data[2], "way")
+    assert ways2
+    assert all(len(w["refs"]) > 0 for w in ways2)
 
 
 def test_pitcairn_relation_structure(pitcairn):
     blocks = scan_blocks(pitcairn)
     data = [b for b in blocks if b.block_type == "OSMData"]
-    rels = []
-    for b in data:
-        rels += decode_primitive_block(decode_blob(read_block_payload(b))).relations
-    admin = [r for r in rels if r["tags"].get("boundary") == "administrative"]
+    rels = [r for b in data for r in _rows(b, "relation")]
+    admin = [r for r in rels if dict(r["tags"]).get("boundary") == "administrative"]
     assert admin, "expected an admin boundary relation"
     roles = {m["role"] for m in admin[0]["members"]}
     assert {"outer", "label", "admin_centre"} <= roles

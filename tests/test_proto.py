@@ -25,6 +25,13 @@ def test_varint_known_values():
     assert read_varint(b"\x80\x80\x01", 0) == (16384, 3)
 
 
+def test_encode_varint_negative_is_twos_complement():
+    # protobuf sends negative int32/int64 as 10-byte two's complement
+    assert encode_varint(-1) == b"\xff" * 9 + b"\x01"
+    assert read_varint(encode_varint(-5), 0) == (2**64 - 5, 10)
+    assert encode_varint(300) == b"\xac\x02"
+
+
 def test_zigzag_known_values():
     # spec table: 0→0, -1→1, 1→2, -2→3, 2147483647→4294967294
     for dec, enc in [(0, 0), (-1, 1), (1, 2), (-2, 3), (2, 4), (2147483647, 4294967294)]:

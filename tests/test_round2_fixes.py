@@ -21,11 +21,11 @@ from pyspark.sql import functions as F
 from osm_read_enhanced_spark.sources.pbf import (
     decode_blob,
     decode_header_block,
-    decode_primitive_block,
     scan_blocks,
     write_pbf,
 )
 from osm_read_enhanced_spark.sources.pbf.blocks import read_block_payload
+from osm_read_enhanced_spark.sources.pbf.columnar import decode_block_arrow
 from osm_read_enhanced_spark.sources.pbf.decode import count_block_elements
 from osm_read_enhanced_spark.sources.pbf.writer import build_primitive_block
 
@@ -36,6 +36,11 @@ def _data_payloads(path):
         for b in scan_blocks(path)
         if b.block_type == "OSMData"
     ]
+
+
+def _node_columns(payload):
+    (nodes,) = decode_block_arrow(payload, 1, kinds=("node",))
+    return nodes.to_pydict()
 
 
 def test_multi_dense_group_keeps_info(tmp_path):
@@ -55,17 +60,13 @@ def test_multi_dense_group_keeps_info(tmp_path):
         for i in range(5)
     ]
     write_pbf(path, [dict(nodes=nodes, dense_group_size=2)])  # 3 dense groups
-    blk = decode_primitive_block(_data_payloads(path)[0])
-    assert blk.n_nodes == 5
-    assert blk.node_id.tolist() == [100, 101, 102, 103, 104]
+    nodes = _node_columns(_data_payloads(path)[0])
+    assert nodes["id"] == [100, 101, 102, 103, 104]
     # the fix: info must survive the multi-group merge, row-aligned
-    assert blk.node_info is not None
-    assert [int(v) for v in blk.node_info["version"]] == [1, 2, 3, 4, 5]
-    assert [int(t) for t in blk.node_info["timestamp"]] == [
-        1_600_000_000_000 + i * 1000 for i in range(5)
-    ]
-    assert list(blk.node_info["user"]) == [f"u{i}" for i in range(5)]
-    assert [t.get("n") for t in blk.node_tags] == ["0", "1", "2", "3", "4"]
+    assert nodes["version"] == [1, 2, 3, 4, 5]
+    assert nodes["timestamp"] == [1_600_000_000_000 + i * 1000 for i in range(5)]
+    assert nodes["user"] == [f"u{i}" for i in range(5)]
+    assert [dict(t).get("n") for t in nodes["tags"]] == ["0", "1", "2", "3", "4"]
 
 
 def test_multi_group_partial_info_null_padded(tmp_path):
@@ -83,12 +84,10 @@ def test_multi_group_partial_info_null_padded(tmp_path):
     # over a mixed list where only the first node has version
     mixed = with_info + without
     payload = build_primitive_block(mixed, (), (), 100, 0, 0, 1000, dense_group_size=1)
-    blk = decode_primitive_block(payload)
-    assert blk.n_nodes == 2
-    assert blk.node_info is not None
-    assert int(blk.node_info["version"][0]) == 9
-    assert blk.node_info["version"][1] is None
-    assert blk.node_info["user"][0] == "a"
+    nodes = _node_columns(payload)
+    assert nodes["id"] == [1, 2]
+    assert nodes["version"] == [9, None]
+    assert nodes["user"] == ["a", None]
     del p1  # (first block unused beyond exercising the builder)
 
 
@@ -123,8 +122,6 @@ def test_changesets_counted(tmp_path, spark):
     )
     payload = _data_payloads(path)[0]
     assert count_block_elements(payload) == (3, 0, 0, 2)
-    blk = decode_primitive_block(payload)
-    assert blk.n_changesets_skipped == 2
     from osm_read_enhanced_spark.sources.pbf.reader import count_elements
 
     row = count_elements(spark, path).collect()[0]

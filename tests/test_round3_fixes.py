@@ -2,7 +2,6 @@
 
 - packed DenseNodes fields split across multiple length-delimited
   occurrences (protobuf-legal) decode identically to single-span packing
-  in BOTH the row path (decode.py) and the columnar path (columnar.py)
   — fields 1/8/9 AND the previously-dropped field 10 (tags)
 - encode_packed_uvarints raises on negative input instead of routing to
   a scalar loop that would spin forever
@@ -14,7 +13,6 @@ import pytest
 from osm_read_enhanced_spark.sources.pbf.columnar import (
     decode_blob_to_batches,
 )
-from osm_read_enhanced_spark.sources.pbf.decode import decode_primitive_block
 from osm_read_enhanced_spark.sources.pbf.proto import (
     encode_len_field,
     encode_packed_svarints,
@@ -53,19 +51,6 @@ def _split_packed_dense_block() -> bytes:
     return encode_len_field(1, st) + encode_len_field(2, group)
 
 
-def test_split_packed_fields_row_path():
-    blk = decode_primitive_block(_split_packed_dense_block())
-    assert blk.node_id.tolist() == [10, 20, 30, 40]
-    assert blk.node_lat.tolist() == [
-        pytest.approx(1000 * 100 * k / 1e9) for k in (1, 2, 3, 4)
-    ]
-    assert blk.node_lon.tolist() == [
-        pytest.approx(2000 * 100 * k / 1e9) for k in (1, 2, 3, 4)
-    ]
-    assert blk.node_tags[0] == {"a": "b"}
-    assert all(t == {} for t in blk.node_tags[1:])
-
-
 def test_split_packed_fields_columnar_path():
     import zlib
 
@@ -77,11 +62,16 @@ def test_split_packed_fields_columnar_path():
         3, zlib.compress(payload)
     )
     batches = list(decode_blob_to_batches(blob, 0, kinds=("node",)))
-    tbl = batches[0] if len(batches) == 1 else None
     import pyarrow as pa
 
     t = pa.Table.from_batches(batches)
     assert t.column("id").to_pylist() == [10, 20, 30, 40]
+    assert t.column("lat").to_pylist() == [
+        pytest.approx(1000 * 100 * k / 1e9) for k in (1, 2, 3, 4)
+    ]
+    assert t.column("lon").to_pylist() == [
+        pytest.approx(2000 * 100 * k / 1e9) for k in (1, 2, 3, 4)
+    ]
     tags = t.column("tags").to_pylist()
     assert (dict(tags[0]) if tags[0] is not None else {}) == {"a": "b"}
     for tg in tags[1:]:
