@@ -12,6 +12,8 @@
 - embedding_dup_pairs_exact — exact cosine near-dup over embedding
                        vectors: a broadcast matmul scan for small
                        tables, a banded equi-join beyond
+- best_match         — pair or stream match rows → per-id dup flags
+                       (best earlier match)
 
 All heavy text kernels run vectorized in Arrow batches
 (functions.text); joins/groupBys stay JVM-side.
@@ -105,18 +107,39 @@ def minhash_lsh_pairs(
     sub-quadratic; AQE splits hot buckets.
     """
     sigs = _signature_df(docs, id_col, text_col, n_hashes, bands, shingle_k).cache()
-    buckets = sigs.select(
-        F.col(id_col), F.col("sig"), F.posexplode("band_hashes").alias("band", "bucket")
+    rows = _band_rows(sigs, id_col)
+    return _band_pairs(rows, rows, id_col, n_hashes, threshold).select(
+        "id_a", "id_b", F.round("est", 6).alias("est_jaccard")
     )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+
+
+def _band_rows(sigs: DataFrame, id_col: str) -> DataFrame:
+    """Signature rows (id, sig, band_hashes) → one row per LSH band:
+    (id, sig, band, bucket), the persisted ``minhash_index`` format."""
+    return sigs.select(
+        F.col(id_col), "sig", F.posexplode("band_hashes").alias("band", "bucket")
+    )
+
+
+def _band_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    id_col: str,
+    n_hashes: int,
+    threshold: float,
+    ordered: bool = True,
+) -> DataFrame:
+    """Verified band-bucket equi-join of two band-row frames →
+    (id_a, id_b, est): each id pair sharing any (band, bucket) once,
+    kept iff est (the matching-signature fraction) ≥ threshold.
+    ``ordered`` keeps only id_a < id_b, the self-join orientation; the
+    probe of a batch against a committed index runs unordered."""
+    cond = (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
+    if ordered:
+        cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return (
+        a.alias("a")
+        .join(b.alias("b"), cond)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -124,31 +147,77 @@ def minhash_lsh_pairs(
             F.col("b.sig").alias("sig_b"),
         )
         .dropDuplicates(["id_a", "id_b"])
+        .withColumn("est", _sig_match_frac(F.col("sig_a"), F.col("sig_b"), n_hashes))
+        .filter(F.col("est") >= threshold)
+        .select("id_a", "id_b", "est")
     )
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
+
+
+def _sig_match_frac(sig_a, sig_b, n_hashes: int):
+    """Matching-signature fraction Column: the unbiased MinHash
+    estimator."""
+    return F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda acc, v: acc + v,
     ) / F.lit(float(1 if n_hashes == 0 else n_hashes))
+
+
+def best_match(
+    rows: DataFrame, key: str, match: str, score: str, higher_is_better: bool
+) -> DataFrame:
+    """Match rows (key, match, score) → one row per key:
+    (key, is_dup, dup_of, score). ``dup_of`` is the best non-null match:
+    the highest score if ``higher_is_better``, else the lowest; ties go
+    to the smallest match id. A key whose rows all have a null match
+    gets is_dup = False."""
+    s = -F.col(score) if higher_is_better else F.col(score)
+    # collect_list + array_min, not min(struct): a struct buffer is not
+    # hash-aggregatable, so min() would plan a sort per key
+    best = F.array_min(
+        F.collect_list(
+            F.when(F.col(match).isNotNull(), F.struct(s.alias("s"), F.col(match).alias("m")))
+        )
+    )
+    out_score = -F.col("_b.s") if higher_is_better else F.col("_b.s")
     return (
-        cand.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
+        rows.groupBy(key)
+        .agg(best.alias("_b"))
+        .select(
+            key,
+            F.col("_b").isNotNull().alias("is_dup"),
+            F.col("_b.m").alias("dup_of"),
+            out_score.alias(score),
+        )
     )
 
 
-def _simhash_band_bounds(n_bands: int) -> list[tuple[int, int]]:
-    """Split the 64-bit hash into ``n_bands`` near-equal contiguous bands
-    → [(shift, width), ...]. Pigeonhole: a pair at hamming distance
-    d < n_bands must agree exactly on at least one band."""
+def _hamming_band_keys(col, max_hamming: int) -> list:
+    """Band keys of a 64-bit hash Column: ``max_hamming + 1`` near-equal
+    contiguous bit bands. Pigeonhole: a pair at hamming distance
+    d ≤ max_hamming must agree exactly on at least one band."""
+    n_bands = max_hamming + 1
     if not 1 <= n_bands <= 64:
         raise ValueError(f"n_bands must be in [1, 64], got {n_bands}")
-    bounds = []
+    keys = []
     for i in range(n_bands):
-        lo = i * 64 // n_bands
-        hi = (i + 1) * 64 // n_bands
-        bounds.append((lo, hi - lo))
-    return bounds
+        lo, hi = i * 64 // n_bands, (i + 1) * 64 // n_bands
+        # width 64 (radius 0, one band) would overflow a Java long;
+        # an all-ones mask is the identity, expressed as -1
+        mask = -1 if hi - lo >= 64 else (1 << (hi - lo)) - 1
+        keys.append(F.shiftrightunsigned(col, lo).bitwiseAND(F.lit(mask)))
+    return keys
+
+
+def _hamming_band_rows(df: DataFrame, hash_col: str, max_hamming: int) -> DataFrame:
+    """``df`` → each row once per hamming band of ``hash_col``, plus
+    (band, key) columns: the blocking rows of ``pairs_within_hamming``
+    and of the image stream."""
+    keys = _hamming_band_keys(F.col(hash_col), max_hamming)
+    bk = F.explode(
+        F.array(*[F.struct(F.lit(i).alias("band"), k.alias("key")) for i, k in enumerate(keys)])
+    )
+    return df.select("*", bk.alias("_bk")).select(*df.columns, "_bk.band", "_bk.key")
 
 
 def simhash_df(
@@ -224,15 +293,6 @@ def pairs_within_hamming(
     - the hamming filter is part of the join predicate, so candidates
       are evaluated inside the join (codegen'd bit math per candidate)
       and only true ≤-radius pairs ever materialize."""
-    band_bounds = _simhash_band_bounds(max_hamming + 1)
-
-    def band_key(col, i):
-        lo, width = band_bounds[i]
-        # width 64 (radius 0, one band) would overflow a Java long;
-        # an all-ones mask is the identity, expressed as -1
-        mask = -1 if width >= 64 else (1 << width) - 1
-        return F.shiftrightunsigned(col, lo).bitwiseAND(F.lit(mask))
-
     # explicit repartition after the distinct: its output is a few
     # hundred KB, so AQE's partition coalescing otherwise folds it to
     # ONE partition — and the explode + banded-join candidate loop
@@ -245,20 +305,7 @@ def pairs_within_hamming(
         .distinct()
         .repartition(sh.sparkSession.sparkContext.defaultParallelism)
     )
-    bands = distinct.select(
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        band_key(F.col("simhash"), i).alias("key"),
-                    )
-                    for i in range(len(band_bounds))
-                ]
-            )
-        ).alias("bk"),
-    ).select("simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    bands = _hamming_band_rows(distinct, "simhash", max_hamming)
     a, b = bands.alias("a"), bands.alias("b")
     sha, shb = F.col("a.simhash"), F.col("b.simhash")
     cond = (
@@ -267,10 +314,10 @@ def pairs_within_hamming(
         & (sha < shb)
         & (F.bit_count(sha.bitwiseXOR(shb)) <= max_hamming)
     )
-    for u in range(len(band_bounds)):
-        cond = cond & (
-            (F.col("a.band") <= u) | (band_key(sha, u) != band_key(shb, u))
-        )
+    keys_a = _hamming_band_keys(sha, max_hamming)
+    keys_b = _hamming_band_keys(shb, max_hamming)
+    for u in range(max_hamming + 1):
+        cond = cond & ((F.col("a.band") <= u) | (keys_a[u] != keys_b[u]))
     hash_pairs = a.join(b, cond).select(
         sha.alias("sh_a"),
         shb.alias("sh_b"),
@@ -856,16 +903,6 @@ def prefix_filter_jaccard_pairs(
 # every prior run, then folds the survivors back into the index.)
 
 
-def _sig_match_frac(sig_a, sig_b, n_hashes: int):
-    """Matching-signature fraction Column (the unbiased MinHash
-    estimator shared by minhash_lsh_pairs)."""
-    return F.aggregate(
-        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(float(1 if n_hashes == 0 else n_hashes))
-
-
 def minhash_index(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -880,11 +917,7 @@ def minhash_index(
     rides along so candidates can be VERIFIED (est ≥ τ), not just
     band-matched."""
     sigs = _signature_df(docs, id_col, text_col, n_hashes, bands, shingle_k)
-    return sigs.select(
-        F.col(id_col),
-        "sig",
-        F.posexplode("band_hashes").alias("band", "bucket"),
-    )
+    return _band_rows(sigs, id_col)
 
 
 def append_minhash_index(
@@ -938,11 +971,12 @@ def incremental_dedup(
 
     → (id, dup_of_corpus, dup_in_batch, keep) for every new doc:
       - dup_of_corpus: verified est ≥ τ match with any indexed doc
-        (candidates from the band-bucket equi-join against the index —
-        sub-quadratic, AQE-splittable, the index side partition-pruned
-        by band);
-      - dup_in_batch: verified match with any SMALLER-id doc of the
-        same batch (deterministic and order-free, so the result is
+        (the band-bucket pair join of ``minhash_lsh_pairs``, run
+        unordered against the index — sub-quadratic, AQE-splittable,
+        the index side partition-pruned by band);
+      - dup_in_batch: the doc is the larger id of a within-batch
+        ``minhash_lsh_pairs`` pair, i.e. it matches a SMALLER-id doc of
+        the same batch (deterministic and order-free, so the result is
         reproducible under any partitioning AND expressible in the SQL
         oracle — deliberately NOT the sequential greedy rule);
       - keep = neither.
@@ -958,69 +992,26 @@ def incremental_dedup(
     # (spark.catalog.clearCache() between batches, as tests do) — a
     # single dedup run reads it exactly as many times as needed.
     sigs_new = sigs_new.persist()
-    b_new = sigs_new.select(
-        F.col(id_col), F.col("sig"), F.posexplode("band_hashes").alias("band", "bucket")
+    rows = _band_rows(sigs_new, id_col)
+
+    def flagged(pairs, side, name):
+        return pairs.select(F.col(side).alias(id_col)).distinct().withColumn(name, F.lit(True))
+
+    out = new_docs.select(id_col).join(
+        flagged(_band_pairs(rows, rows, id_col, n_hashes, threshold), "id_b", "_db"),
+        id_col,
+        "left",
     )
-    est = _sig_match_frac(F.col("sig_n"), F.col("sig_o"), n_hashes)
     if index is None:
         # first run — no committed corpus; skip the probe join entirely
-        dup_corpus = (
-            new_docs.select(F.col(id_col).alias("nid"))
-            .limit(0)
-            .withColumn("_dc", F.lit(True))
-        )
+        out = out.withColumn("_dc", F.lit(None))
     else:
-        dup_corpus = (
-            b_new.alias("n")
-            .join(
-                index.alias("o"),
-                (F.col("n.band") == F.col("o.band"))
-                & (F.col("n.bucket") == F.col("o.bucket")),
-            )
-            .select(
-                F.col(f"n.{id_col}").alias("nid"),
-                F.col("n.sig").alias("sig_n"),
-                F.col(f"o.{id_col}").alias("oid"),
-                F.col("o.sig").alias("sig_o"),
-            )
-            .dropDuplicates(["nid", "oid"])
-            .filter(est >= threshold)
-            .select("nid")
-            .distinct()
-            .withColumn("_dc", F.lit(True))
-        )
-    dup_batch = (
-        b_new.alias("a")
-        .join(
-            b_new.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"b.{id_col}").alias("nid"),
-            F.col("b.sig").alias("sig_n"),
-            F.col(f"a.{id_col}").alias("aid"),
-            F.col("a.sig").alias("sig_o"),
-        )
-        .dropDuplicates(["nid", "aid"])
-        .filter(est >= threshold)
-        .select("nid")
-        .distinct()
-        .withColumn("_db", F.lit(True))
-    )
-    return (
-        new_docs.select(id_col)
-        .join(dup_corpus, F.col(id_col) == F.col("nid"), "left")
-        .drop("nid")
-        .join(dup_batch, F.col(id_col) == F.col("nid"), "left")
-        .drop("nid")
-        .select(
-            id_col,
-            F.coalesce("_dc", F.lit(False)).alias("dup_of_corpus"),
-            F.coalesce("_db", F.lit(False)).alias("dup_in_batch"),
-            (
-                ~(F.coalesce("_dc", F.lit(False)) | F.coalesce("_db", F.lit(False)))
-            ).alias("kept"),
-        )
+        probe = _band_pairs(rows, index, id_col, n_hashes, threshold, ordered=False)
+        out = out.join(flagged(probe, "id_a", "_dc"), id_col, "left")
+    dc, db = F.coalesce("_dc", F.lit(False)), F.coalesce("_db", F.lit(False))
+    return out.select(
+        id_col,
+        dc.alias("dup_of_corpus"),
+        db.alias("dup_in_batch"),
+        (~(dc | db)).alias("kept"),
     )

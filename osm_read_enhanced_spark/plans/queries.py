@@ -1951,18 +1951,25 @@ def q50(spark, sf_dir):
            CAST(CASE WHEN mh <= 6 THEN mh END AS BIGINT) AS hamming
     FROM imgs i LEFT JOIN d ON d.image_id = i.image_id
     """,
-    "streaming-order image near-dup flags (batch twin of the stateful "
-    "banded stream operator; min-hamming-vs-earlier live in DuckDB)",
+    "streaming-order image near-dup flags (the batch answer of the "
+    "stateful banded stream operator: best earlier match over the banded "
+    "pHash pair join; min-hamming-vs-earlier live in DuckDB)",
 )
 def q51(spark, sf_dir):
+    from ..operators.dedup import best_match
+    from ..operators.multimodal import image_neardup_pairs
     from ..sources.images import build_images_with_variants
-    from ..streaming.images import image_neardup_batch, neardup_flags_from_band_rows
 
+    # cached: the pair join and the id side read the rendered fixture
+    # seven times
     imgs = build_images_with_variants(spark, n_base=72, every=3, partitions=4)
-    flags = neardup_flags_from_band_rows(
-        image_neardup_batch(imgs.select("image_id", "phash"), max_hamming=6)
+    imgs = imgs.select("image_id", "phash").cache()
+    pairs = image_neardup_pairs(imgs, max_hamming=6).select(
+        F.col("image_b").alias("image_id"), F.col("image_a").alias("matched_id"), "hamming"
     )
-    return flags.select("image_id", "is_dup", F.col("hamming").cast("long").alias("hamming"))
+    rows = imgs.select("image_id").join(pairs, "image_id", "left")
+    flags = best_match(rows, "image_id", "matched_id", "hamming", higher_is_better=False)
+    return flags.select("image_id", "is_dup", "hamming")
 
 
 # --- q52/q53: A/V multimodal legs ---------------------------------------
@@ -2832,16 +2839,22 @@ def _q69_oracle() -> str:
 @q_ext(
     "q69_text_neardup_stream_flags",
     _q69_oracle(),
-    "streaming-order text near-dup flags (round 5: batch twin of the "
-    "stateful per-bucket MinHash stream operator — dup-of-any-earlier "
-    "at est >= 0.5, best match by est then id; LIVE SQL oracle via the "
-    "nested MinHash pipeline)",
+    "streaming-order text near-dup flags (the batch answer of the "
+    "stateful per-bucket MinHash stream operator: best earlier match over "
+    "the MinHash pair join — dup-of-any-earlier at est >= 0.5, best match "
+    "by est then id; LIVE SQL oracle via the nested MinHash pipeline)",
 )
 def q69(spark, sf_dir):
-    from ..streaming.text import dup_flags_from_band_rows, text_neardup_batch
+    from ..operators.dedup import best_match, minhash_lsh_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return dup_flags_from_band_rows(text_neardup_batch(docs, threshold=0.5))
+    pairs = minhash_lsh_pairs(docs, threshold=0.5).select(
+        F.col("id_b").alias("doc_id"),
+        F.col("id_a").alias("matched_id"),
+        F.col("est_jaccard").alias("est"),
+    )
+    rows = docs.select("doc_id").join(pairs, "doc_id", "left")
+    return best_match(rows, "doc_id", "matched_id", "est", higher_is_better=True)
 
 
 # ------------------------------------------------- apply pinned oracles

@@ -5,13 +5,19 @@ the streaming leg of the image dedup family (batch leg:
 
 Shape (SURVEY §2.10/§2.11 stateful surface, same machinery as
 ``events.sessionize_stateful``): images explode to their hamming bands
-(identical banding to ``dedup.pairs_within_hamming`` — recall-complete
+with the band builder of ``dedup.pairs_within_hamming`` (recall-complete
 by pigeonhole), ``applyInPandasWithState`` keyed by (band, key) holds
 the phashes seen in that band and emits one row per (image, band) with
 the matched earlier image (or null). An image is a duplicate iff ANY
-band row matched — a plain downstream aggregation
-(``neardup_flags_from_band_rows``), kept out of the stateful op so the
-streaming query stays single-stateful-stage.
+band row matched — ``dedup.best_match(rows, "image_id", "matched_id",
+"hamming", higher_is_better=False)`` folds the rows into flags
+downstream, kept out of the stateful op so the streaming query stays
+single-stateful-stage.
+
+Batch answers come from the pair join, not from this operator
+(``applyInPandasWithState`` is streaming-only): over a single
+micro-batch with no prior state, the flags equal ``best_match`` over
+the earlier side of ``image_neardup_pairs`` (the q51 catalog entry).
 
 State growth is the honest cost of exact dedup-against-all-history:
 per-band state is the band's phash list (16 bytes/image/band).
@@ -24,7 +30,6 @@ exact-vs-all-history must survive an unbounded stream.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 BAND_OUT_SCHEMA = T.StructType(
@@ -41,31 +46,6 @@ BAND_STATE_SCHEMA = T.StructType(
         T.StructField("ids", T.ArrayType(T.StringType()), False),
     ]
 )
-
-
-def explode_phash_bands(images: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """(image_id, phash) → one row per hamming band, identical band
-    bounds to the batch ``pairs_within_hamming`` banding."""
-    from ..operators.dedup import _simhash_band_bounds
-
-    bounds = _simhash_band_bounds(max_hamming + 1)
-    return images.select(
-        "image_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("phash", lo)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("key"),
-                    )
-                    for i, (lo, width) in enumerate(bounds)
-                ]
-            )
-        ).alias("bk"),
-    ).select("image_id", "phash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
 def _band_group_scan(pdf, seen_ph, seen_ids, max_hamming, max_state=None):
@@ -117,9 +97,6 @@ def image_neardup_stream(
 
     "Earlier" = previous micro-batches, plus image_id order within a
     batch (deterministic; arrival order is not stable inside a batch).
-    ``image_neardup_batch`` is the batch twin running the same core
-    (PySpark's applyInPandasWithState is streaming-only) — the
-    stream≡batch test pins their agreement.
 
     ``max_state_per_band`` switches exact-vs-all-history semantics to
     bounded sliding-recency dedup: each band keeps only its most recent
@@ -128,6 +105,8 @@ def image_neardup_stream(
     recent" is the semantics the pipeline actually needs.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from ..operators.dedup import _hamming_band_rows
 
     def check(key, pdf_iter, state: GroupState):
         import pandas as pd
@@ -142,47 +121,11 @@ def image_neardup_stream(
         state.update((seen_ph, seen_ids))
         yield out
 
-    bands = explode_phash_bands(images, max_hamming)
+    bands = _hamming_band_rows(images.select("image_id", "phash"), "phash", max_hamming)
     return bands.groupBy("band", "key").applyInPandasWithState(
         check,
         BAND_OUT_SCHEMA,
         BAND_STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def image_neardup_batch(images: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Batch twin of ``image_neardup_stream``: one ``applyInPandas``
-    invocation per (band, key) group with empty initial state — exactly
-    a single-micro-batch run of the streaming operator."""
-
-    def scan(pdf):
-        return _band_group_scan(pdf, [], [], max_hamming)
-
-    bands = explode_phash_bands(images, max_hamming)
-    return bands.groupBy("band", "key").applyInPandas(scan, BAND_OUT_SCHEMA)
-
-
-def neardup_flags_from_band_rows(band_rows: DataFrame) -> DataFrame:
-    """Band rows → one row per image: (image_id, is_dup, dup_of,
-    hamming). ``dup_of`` is the match with the smallest hamming
-    (ties: smallest id) for determinism."""
-    best = F.array_sort(
-        F.collect_list(
-            F.when(
-                F.col("matched_id").isNotNull(),
-                F.struct("hamming", F.col("matched_id")),
-            )
-        )
-    )
-    return (
-        band_rows.groupBy("image_id")
-        .agg(best.alias("_m"))
-        .select(
-            "image_id",
-            (F.size("_m") > 0).alias("is_dup"),
-            F.try_element_at("_m", F.lit(1))["matched_id"].alias("dup_of"),
-            F.try_element_at("_m", F.lit(1))["hamming"].alias("hamming"),
-        )
     )

@@ -11,6 +11,7 @@ Each test pins an internals change from OPTIMIZATION_r06.md:
   batch probes only the most recent N entries).
 - widen: fires only under the partition AND byte gates; streaming
   inputs pass through untouched.
+- get_spark: the default driver heap fits the host's physical RAM.
 """
 
 from __future__ import annotations
@@ -129,3 +130,15 @@ def test_widen_gates(spark, tmp_path):
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
     )
     assert widen(sdf, min_bytes=0) is sdf
+
+
+def test_spark_fixture_driver_heap_fits_host(spark):
+    """The session's driver heap must not exceed the host's physical
+    RAM (the default derives it as at most half of RAM, capped at 24g)."""
+    import os
+
+    mem = spark.sparkContext.getConf().get("spark.driver.memory").lower().removesuffix("b")
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    n = int(mem[:-1]) * units[mem[-1]] if mem[-1] in units else int(mem) << 20
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert n <= phys, (mem, phys)

@@ -160,23 +160,72 @@ def test_progress_ticker_listener(spark, sf_dir, tmp_path):
         ticker.detach(spark)
 
 
-def test_streaming_image_neardup_matches_history_bruteforce(spark, tmp_path):
-    """Stateful banded near-dup over a 3-micro-batch image stream must
-    flag exactly the images with an EARLIER image within hamming ≤ 6
-    (clean-room numpy expectation), with the true min hamming; batch
-    mode of the same operator must agree with the stream."""
+IMAGE_SCHEMA = "image_id string, phash long"
+
+
+def _image_stream_flags(spark, tmp_path, name, batches, **kw):
+    """Run ``image_neardup_stream`` with one micro-batch per entry of
+    ``batches`` → {image_id: (is_dup, dup_of, hamming)} from best_match
+    over its band rows."""
     import os
     import shutil
     import time
 
-    import numpy as np
+    from osm_read_enhanced_spark.operators.dedup import best_match
+    from osm_read_enhanced_spark.streaming.images import image_neardup_stream
 
+    d = tmp_path / name
+    d.mkdir()
+    now = time.time()
+    for i, chunk in enumerate(batches):
+        tmp = tmp_path / f"{name}_w{i}"
+        spark.createDataFrame(chunk, IMAGE_SCHEMA).coalesce(1).write.parquet(str(tmp))
+        for f in tmp.glob("*.parquet"):
+            dest = d / f"batch-{i}.parquet"
+            shutil.copy(f, dest)
+            os.utime(dest, (now - 100 + i * 30, now - 100 + i * 30))
+    stream = (
+        spark.readStream.schema(IMAGE_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(d))
+    )
+    q = (
+        image_neardup_stream(stream, **kw)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    flags = best_match(
+        spark.sql(f"SELECT * FROM {name}"), "image_id", "matched_id", "hamming", False
+    )
+    return {r.image_id: (r.is_dup, r.dup_of, r.hamming) for r in flags.collect()}
+
+
+def _image_pair_flags(spark, rows, max_hamming=6):
+    """Best earlier match over image_neardup_pairs (the q51 rule) →
+    {image_id: (is_dup, dup_of, hamming)}: the batch JVM answer."""
+    from osm_read_enhanced_spark.operators.dedup import best_match
+    from osm_read_enhanced_spark.operators.multimodal import image_neardup_pairs
+
+    imgs = spark.createDataFrame(rows, IMAGE_SCHEMA)
+    pairs = image_neardup_pairs(imgs, max_hamming).selectExpr(
+        "image_b AS image_id", "image_a AS matched_id", "hamming"
+    )
+    flags = best_match(
+        imgs.select("image_id").join(pairs, "image_id", "left"),
+        "image_id", "matched_id", "hamming", False,
+    )
+    return {r.image_id: (r.is_dup, r.dup_of, r.hamming) for r in flags.collect()}
+
+
+def test_streaming_image_neardup_matches_history_bruteforce(spark, tmp_path):
+    """Stateful banded near-dup over a 3-micro-batch image stream must
+    flag exactly the images with an EARLIER image within hamming ≤ 6
+    (clean-room numpy expectation), with the true min hamming and the
+    best match of the banded pair join."""
     from osm_read_enhanced_spark.functions.codecs import phash64
     from osm_read_enhanced_spark.sources.images import render_image, variant_image
-    from osm_read_enhanced_spark.streaming.images import (
-        image_neardup_stream,
-        neardup_flags_from_band_rows,
-    )
 
     ph = {}
     for idx in range(36):
@@ -194,92 +243,57 @@ def test_streaming_image_neardup_matches_history_bruteforce(spark, tmp_path):
         m = min(dists)
         expect[a] = (m <= 6, m if m <= 6 else None)
 
-    schema = "image_id string, phash long"
     rows = [(i, ph[i]) for i in ids]
-    d = tmp_path / "img_stream"
-    d.mkdir()
-    thirds = [rows[:16], rows[16:32], rows[32:]]
-    now = time.time()
-    for i, chunk in enumerate(thirds):
-        tmp = tmp_path / f"w{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(str(tmp))
-        for f in tmp.glob("*.parquet"):
-            dest = d / f"batch-{i}.parquet"
-            shutil.copy(f, dest)
-            os.utime(dest, (now - 100 + i * 30, now - 100 + i * 30))
-
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(d))
-    q = (
-        image_neardup_stream(stream, max_hamming=6)
-        .writeStream.format("memory")
-        .queryName("img_neardup_bands")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    got = _image_stream_flags(
+        spark, tmp_path, "img_neardup_bands", [rows[:16], rows[16:32], rows[32:]],
+        max_hamming=6,
     )
-    q.awaitTermination(120)
-    flags = neardup_flags_from_band_rows(spark.sql("SELECT * FROM img_neardup_bands"))
-    got = {r.image_id: (r.is_dup, r.hamming) for r in flags.collect()}
-    assert got == expect
+    assert {k: (v[0], v[2]) for k, v in got.items()} == expect
     assert sum(1 for v in got.values() if v[0]) >= 10  # the planted variants
 
-    # the batch twin (same core, applyInPandas, empty initial state)
-    # must agree
-    from osm_read_enhanced_spark.streaming.images import image_neardup_batch
-
-    batch_df = spark.createDataFrame(rows, schema)
-    bflags = neardup_flags_from_band_rows(image_neardup_batch(batch_df, max_hamming=6))
-    bgot = {r.image_id: (r.is_dup, r.hamming) for r in bflags.collect()}
-    assert bgot == expect
+    # the batch answer: best earlier match over the banded pHash pair
+    # join, an independent JVM implementation
+    assert got == _image_pair_flags(spark, rows)
 
 
 def test_streaming_image_neardup_bounded_state_evicts_oldest(spark, tmp_path):
     """max_state_per_band=1 keeps only the most recent entry per band:
     with identical phashes A→B→C across micro-batches, C must match B —
-    unbounded mode would match A (argmin picks the FIRST entry), so a
+    unbounded mode would match A (ties go to the first entry), so a
     B-match proves A was evicted."""
-    import os
-    import shutil
-    import time
-
-    from osm_read_enhanced_spark.streaming.images import (
-        image_neardup_batch,
-        image_neardup_stream,
-        neardup_flags_from_band_rows,
-    )
-
-    schema = "image_id string, phash long"
     P = 0x123456789ABCDEF
     batches = [[("a", P)], [("b", P)], [("c", P)]]
-    d = tmp_path / "bounded"
-    d.mkdir()
-    now = time.time()
-    for i, chunk in enumerate(batches):
-        tmp = tmp_path / f"bw{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(str(tmp))
-        for f in tmp.glob("*.parquet"):
-            dest = d / f"batch-{i}.parquet"
-            shutil.copy(f, dest)
-            os.utime(dest, (now - 100 + i * 30, now - 100 + i * 30))
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(d))
-    q = (
-        image_neardup_stream(stream, max_hamming=6, max_state_per_band=1)
-        .writeStream.format("memory")
-        .queryName("bounded_neardup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    got = _image_stream_flags(
+        spark, tmp_path, "bounded_neardup", batches, max_hamming=6, max_state_per_band=1
     )
-    q.awaitTermination(120)
-    flags = neardup_flags_from_band_rows(spark.sql("SELECT * FROM bounded_neardup"))
-    got = {r.image_id: (r.is_dup, r.dup_of) for r in flags.collect()}
-    assert got == {"a": (False, None), "b": (True, "a"), "c": (True, "b")}
-    # batch twin honors the same cap within one invocation
-    bflags = neardup_flags_from_band_rows(
-        image_neardup_batch(
-            spark.createDataFrame([r for b in batches for r in b], schema),
-            max_hamming=6,
-        )
-    )
-    bgot = {r.image_id: r.dup_of for r in bflags.collect()}
-    assert bgot == {"a": None, "b": "a", "c": "a"}  # unbounded: argmin → first
+    assert {k: (v[0], v[1]) for k, v in got.items()} == {
+        "a": (False, None), "b": (True, "a"), "c": (True, "b")
+    }
+    # the unbounded reference: best earlier match over the pair join
+    bgot = {k: v[1] for k, v in _image_pair_flags(spark, [r for b in batches for r in b]).items()}
+    assert bgot == {"a": None, "b": "a", "c": "a"}  # unbounded: ties → first
+
+
+def test_streaming_image_neardup_radius_zero(spark, tmp_path):
+    """max_hamming=0 is one 64-bit band whose key is the whole phash:
+    the stream flags exactly the images whose phash equals an EARLIER
+    one (1-bit neighbours stay unflagged), including phashes with the
+    sign bit set."""
+    neg = -0x123456789ABCDEF
+    batches = [
+        [("a", 7), ("b", neg), ("c", 7 ^ 1)],
+        [("d", 7), ("e", neg), ("f", neg ^ (1 << 40))],
+        [("g", neg ^ (1 << 40)), ("h", 1 << 62)],
+    ]
+    got = _image_stream_flags(spark, tmp_path, "radius_zero", batches, max_hamming=0)
+    assert got == {
+        "a": (False, None, None),
+        "b": (False, None, None),
+        "c": (False, None, None),
+        "d": (True, "a", 0),
+        "e": (True, "b", 0),
+        "f": (False, None, None),
+        "g": (True, "f", 0),
+        "h": (False, None, None),
+    }
+    assert got == _image_pair_flags(spark, [r for b in batches for r in b], 0)

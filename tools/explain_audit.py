@@ -83,6 +83,11 @@ AUDITS = {
     "q67_incremental_dedup": ["Join"],
     # composed corpus pipeline: aggregates + equi-joins end-to-end
     "q68_corpus_pipeline": ["HashAggregate", "Join"],
+    # streaming-order near-dup flags: best earlier match aggregated over
+    # the family's band pair join — no per-(band, bucket) Python group
+    # call in the batch plan
+    "q51_image_neardup_flags": ["Join", "HashAggregate"],
+    "q69_text_neardup_stream_flags": ["Join", "HashAggregate"],
 }
 
 # plan fragments that must NOT appear (scale-killers)
@@ -102,6 +107,8 @@ FORBID = {
     "q66_shuffle_shard": ["CartesianProduct", "NestedLoop", "rangepartitioning", "MapInPandas"],
     "q67_incremental_dedup": ["CartesianProduct", "NestedLoop"],
     "q68_corpus_pipeline": ["CartesianProduct", "NestedLoop"],
+    "q51_image_neardup_flags": ["FlatMapGroupsInPandas", "CartesianProduct"],
+    "q69_text_neardup_stream_flags": ["FlatMapGroupsInPandas", "CartesianProduct"],
 }
 FORBID_ALL = ["CartesianProduct"]
 
