@@ -1706,8 +1706,9 @@ def q46(spark, sf_dir):
     from ..operators.multimodal import image_neardup_pairs
     from ..sources.images import build_images_with_variants
 
+    # cached: the banded pair join reads the rendered fixture six times
     imgs = build_images_with_variants(spark, n_base=72, every=3, partitions=4)
-    return image_neardup_pairs(imgs, max_hamming=6)
+    return image_neardup_pairs(imgs.select("image_id", "phash").cache(), max_hamming=6)
 
 
 @q(
@@ -2221,7 +2222,9 @@ def q56(spark, sf_dir):
     from ..operators.multimodal import image_dedup_keep_list
     from ..sources.images import build_images_with_variants
 
+    # cached, as in q46: the pair join and the id side reuse the render
     imgs = build_images_with_variants(spark, n_base=72, every=3, partitions=4)
+    imgs = imgs.select("image_id", "phash").cache()
     return image_dedup_keep_list(imgs, max_hamming=6).withColumnRenamed(
         "doc_id", "image_id"
     )

@@ -120,9 +120,11 @@ def python_parallelism(spark: SparkSession) -> int:
     """Partition count for Python-heavy (pandas UDF / mapInPandas)
     stages: task-slot count capped at 16.
 
-    Measured on this 32-core host: 32 concurrent Python workers collapse
-    Arrow stage throughput ~4× (JVM task threads + 32 interpreters
-    oversubscribe the cores); 16 workers run at full speed. JVM-only
-    stages keep full width — only the Python stages are capped. On a
-    real cluster executors have few cores each, so the cap never binds."""
+    Measured on a 32-core host in the round-6 tuning (not on the 4-CPU
+    host the later benchmarks use): 32 concurrent Python workers
+    collapse Arrow stage throughput ~4× (JVM task threads + 32
+    interpreters oversubscribe the cores); 16 workers run at full speed.
+    JVM-only stages keep full width — only the Python stages are capped.
+    Below 16 task slots, and on a real cluster whose executors have few
+    cores each, the cap never binds."""
     return min(spark.sparkContext.defaultParallelism, 16)

@@ -1,13 +1,15 @@
-"""PBF file-block index scan.
+"""PBF file-block index scan and payload fetch.
 
 FileBlock framing = [4-byte BE length][BlobHeader][Blob] (reference
 lib/pbfParser.js:10-19, lib/OSM_PBF_Parser_Core_Read.js:219). The scan
 reads only the tiny BlobHeaders and seeks over blob payloads, producing
 a block index — the Parquet-footer analogue (SURVEY.md §2.1 S1). The
-index, not raw byte ranges, is what gets partitioned across executors
-(the reference's byte-range splitter mis-aligns mid-block and recovers
-heuristically, lib/parallel-worker.js:98-102 — partitioning the index
-makes that hack unnecessary and exact).
+reader walks it on the driver and deals the indexed blocks, not raw
+byte ranges, to the decode tasks (the reference's byte-range splitter
+mis-aligns mid-block and recovers heuristically,
+lib/parallel-worker.js:98-102 — dealing whole blocks makes that hack
+unnecessary and exact). ``read_block_payload`` is the one
+truncation-guarded payload read.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ HEADER_SIZE_CAP = 64 * 1024  # reference caps at 4096 (Core_Read.js:220-224)
 ELEMENT_SIZE_CAP = 64 * 1024 * 1024  # reference 32 MB (lib/nodejs/fsReader.js:25-27)
 
 
-@dataclass(frozen=True)
+@dataclass(frozen=True, order=True)  # ordered by (path, block_id) first
 class BlockMeta:
     path: str
     block_id: int
@@ -30,12 +32,8 @@ class BlockMeta:
     size: int  # Blob payload byte length
 
 
-def scan_blocks(path: str, max_blocks: int | None = None) -> list[BlockMeta]:
-    """Walk FileBlock framing, return the block index.
-
-    ``max_blocks`` implements the reference's maxBlobLimit
-    (Core_Read.js:288-292) as a scan cap.
-    """
+def scan_blocks(path: str) -> list[BlockMeta]:
+    """Walk FileBlock framing, return the block index."""
     blocks: list[BlockMeta] = []
     with open(path, "rb") as f:
         block_id = 0
@@ -54,8 +52,6 @@ def scan_blocks(path: str, max_blocks: int | None = None) -> list[BlockMeta]:
             blocks.append(BlockMeta(path, block_id, btype, offset, datasize))
             f.seek(offset + datasize)
             block_id += 1
-            if max_blocks is not None and block_id >= max_blocks:
-                break
     return blocks
 
 

@@ -1,12 +1,15 @@
-"""Spark reader: block-index DataFrame → Arrow-batched decode → entity DFs.
+"""Spark reader: driver-side block plan → Arrow-batched decode → entity DFs.
 
 Scale design (SURVEY.md §3.1 "Spark lifecycle equivalent"): the block
-index — not raw byte ranges — is what gets distributed. Each task seeks
-to its blocks' exact offsets, inflates, and decodes with
-``columnar.decode_block_arrow`` (the package's one entity decoder); one
+index — not raw byte ranges — is what gets distributed. The driver walks
+the block headers, slices the OSMData blocks for ``max_blocks`` and
+``byte_budget``, and deals them to tasks by compressed size; the plan
+reaches the decode ``mapInArrow`` as one row per task, with no exchange.
+Each task seeks to its blocks' offsets, inflates, and decodes with
+``columnar.decode_block_arrow`` (the package's one entity decoder); a
 PrimitiveBlock never spans partitions, so the block-local delta decode
-(prefix sums) stays inside one Arrow batch. On a real cluster the ``open()`` below is an HDFS/S3 stream via
-the executor-local filesystem client; the plan shape is identical.
+stays inside one Arrow batch. On a real cluster the ``open()`` in
+``blocks.read_block_payload`` is an HDFS/S3 stream; the plan is the same.
 
 SINGLE-PASS decode: each block is read, inflated, and TLV-walked ONCE,
 emitting every requested entity kind into one tagged-union DataFrame
@@ -22,12 +25,17 @@ the reference's abandoned per-row "decode modes" — SURVEY.md §4 O3).
 
 from __future__ import annotations
 
-import pandas as pd
+import heapq
+import itertools
+from dataclasses import asdict
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .blocks import scan_blocks
+from .blocks import BlockMeta, read_block_payload, scan_blocks
 from .decode import count_block_elements, decode_blob
 
 BLOCK_INDEX_SCHEMA = T.StructType(
@@ -74,83 +82,64 @@ UNION_SCHEMA = T.StructType(
 )
 
 
+def _scan(paths: str | list[str]) -> list[BlockMeta]:
+    return [b for p in ([paths] if isinstance(paths, str) else paths) for b in scan_blocks(p)]
+
+
+def _local_df(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """A LocalRelation: from an Arrow table, Spark scans the rows in the
+    JVM, one row per partition up to the default parallelism; a Python
+    list would go through a Python worker first."""
+    return spark.createDataFrame(pa.Table.from_pylist(rows, to_arrow_schema(schema)), schema)
+
+
 def pbf_block_index(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """Build the block index as a DataFrame (one scan per file, headers
-    only — the Parquet-footer analogue; reference readFileBlocks,
-    lib/pbfParser.js:418-456).
+    """The block index as a local DataFrame over the driver's header walk
+    (the Parquet-footer analogue; reference readFileBlocks,
+    lib/pbfParser.js:418-456). No payload is read; a missing path raises
+    ``FileNotFoundError`` here."""
+    return _local_df(spark, [asdict(b) for b in _scan(paths)], BLOCK_INDEX_SCHEMA)
 
-    The header walk per file is sequential by nature (framing has no
-    central index), so it is parallelized per *file*: each task scans one
-    file's headers. Block payloads are NOT read here.
+
+def _block_plan(spark, paths, block_index, partitions, max_blocks, byte_budget) -> DataFrame:
+    """One row per decode task holding the blocks it reads.
+
+    The OSMData blocks in (path, block_id) order are cut to the first
+    ``max_blocks`` (reference maxBlobLimit, Core_Read.js:288-292), then
+    to the longest prefix whose running size fits ``byte_budget``
+    (reference read_threshold, Core_Read.js:431-459). They are dealt
+    largest first, each onto the least-loaded of ``min(partitions,
+    n_blocks)`` tasks (LPT; Assignment of Different-Sized Inputs in
+    MapReduce, EDBT'15), and each task reads its blocks in file order.
     """
-    if isinstance(paths, str):
-        paths = [paths]
-    files_df = spark.createDataFrame([(p,) for p in paths], "path: string")
-
-    def scan_partition(it):
-        for pdf in it:
-            for p in pdf["path"]:
-                rows = [
-                    (b.path, b.block_id, b.block_type, b.offset, b.size)
-                    for b in scan_blocks(p)
-                ]
-                yield pd.DataFrame(
-                    rows, columns=["path", "block_id", "block_type", "offset", "size"]
-                )
-
-    return files_df.repartition(len(paths)).mapInPandas(scan_partition, BLOCK_INDEX_SCHEMA)
-
-
-def _read_block_checked(path: str, block_id, offset, size) -> bytes:
-    """Seek+read one blob payload with the truncation guard (shared by
-    the decode and count paths)."""
-    with open(path, "rb") as f:
-        f.seek(int(offset))
-        raw = f.read(int(size))
-    if len(raw) < int(size):
-        raise ValueError(
-            f"{path}: truncated blob {block_id} (expected {size} bytes "
-            f"at offset {offset}, got {len(raw)})"
-        )
-    return raw
-
-
-def _select_data_blocks(
-    spark, paths, block_index, partitions, max_blocks, byte_budget
-) -> DataFrame:
-    """Shared index plumbing: filter/budget/partition the block index.
-
-    ``max_blocks`` = reference maxBlobLimit (Core_Read.js:288-292);
-    ``byte_budget`` = reference read_threshold (Core_Read.js:431-459):
-    both expressed as LIMIT / running-total window on the tiny block
-    index — no data is scanned for skipped blocks.
-    """
-    if block_index is None:
-        # cache: the per-file header walk runs once, not once per action.
-        # Released via release_pbf(dfs) — read_pbf threads
-        # the cached index through the returned dict for that purpose.
-        block_index = pbf_block_index(spark, paths).cache()
-    index = block_index
+    if block_index is not None:
+        index = [BlockMeta(**r.asDict()) for r in block_index.collect()]
+    else:
+        index = _scan(paths)
+    blocks = sorted(b for b in index if b.block_type == "OSMData")[:max_blocks]
+    if byte_budget is not None:
+        running = itertools.accumulate(b.size for b in blocks)
+        blocks = [b for b, total in zip(blocks, running) if total <= byte_budget]
     if partitions is None:
         from ...session import python_parallelism
 
         partitions = python_parallelism(spark)
-    data_blocks = index.filter(index.block_type == "OSMData")
-    if max_blocks is not None:
-        data_blocks = data_blocks.orderBy("path", "block_id").limit(max_blocks)
-    if byte_budget is not None:
-        from pyspark.sql import Window
+    tasks = [[] for _ in range(min(partitions, len(blocks)))]
+    loads = [(0, i) for i in range(len(tasks))]
+    for b in sorted(blocks, key=lambda b: -b.size):
+        load, i = heapq.heappop(loads)
+        tasks[i].append(b)
+        heapq.heappush(loads, (load + b.size, i))
+    rows = [{"blocks": [asdict(b) for b in sorted(t)]} for t in tasks]
+    schema = T.StructType([T.StructField("blocks", T.ArrayType(BLOCK_INDEX_SCHEMA, False), False)])
+    return _local_df(spark, rows, schema)
 
-        w = (
-            Window.orderBy("path", "block_id")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        data_blocks = (
-            data_blocks.withColumn("_cum_bytes", F.sum("size").over(w))
-            .filter(F.col("_cum_bytes") <= byte_budget)
-            .drop("_cum_bytes")
-        )
-    return data_blocks.repartition(partitions, "block_id")
+
+def _task_blocks(batches):
+    """The BlockMeta entries of a plan partition's Arrow batches."""
+    for batch in batches:
+        for task in batch.column("blocks").to_pylist():
+            yield from (BlockMeta(**b) for b in task)
 
 
 def read_pbf_union(
@@ -174,15 +163,15 @@ def read_pbf_union(
     arrays and C++ string-table takes — no per-row python objects, no
     pandas detour. This is the hot path; per-kind plan pruning still
     applies via ``kinds``.
+
+    The driver walks the block headers when this is called (a missing
+    path raises ``FileNotFoundError`` here, not at the first action) and
+    deals the blocks to at most ``partitions`` tasks by compressed size.
     """
-    data_blocks = _select_data_blocks(
-        spark, paths, block_index, partitions, max_blocks, byte_budget
-    )
+    plan = _block_plan(spark, paths, block_index, partitions, max_blocks, byte_budget)
     kinds = tuple(kinds)
 
     def decode_partition(batches):
-        import pyarrow as pa
-
         from .columnar import decode_blob_to_batches
 
         # coalesce small per-block batches (ways/relations are a few
@@ -206,26 +195,21 @@ def read_pbf_union(
             pending, pending_rows = [], 0
             return out
 
-        for batch in batches:
-            d = batch.to_pydict()
-            for path, block_id, offset, size in zip(
-                d["path"], d["block_id"], d["offset"], d["size"]
+        for b in _task_blocks(batches):
+            for rb in decode_blob_to_batches(
+                read_block_payload(b), b.block_id, mode=mode, kinds=kinds, want_info=want_info
             ):
-                raw = _read_block_checked(path, block_id, offset, size)
-                for rb in decode_blob_to_batches(
-                    raw, int(block_id), mode=mode, kinds=kinds, want_info=want_info
-                ):
-                    if rb.num_rows >= 4096:
+                if rb.num_rows >= 4096:
+                    yield from flush()
+                    yield rb
+                else:
+                    pending.append(rb)
+                    pending_rows += rb.num_rows
+                    if pending_rows >= 16384:
                         yield from flush()
-                        yield rb
-                    else:
-                        pending.append(rb)
-                        pending_rows += rb.num_rows
-                        if pending_rows >= 16384:
-                            yield from flush()
         yield from flush()
 
-    return data_blocks.mapInArrow(decode_partition, UNION_SCHEMA)
+    return plan.mapInArrow(decode_partition, UNION_SCHEMA)
 
 
 _META_NAMES = [f.name for f in _META_FIELDS]
@@ -258,15 +242,12 @@ def read_pbf(
     each blob once for all visitors. Pass ``persist=False`` for
     fire-once pipelines that already combine the kinds in one action.
 
-    ``partitions`` spreads blocks across tasks (defaults to the capped
-    Python parallelism). Repartitioning by block_id balances work; AQE
-    coalescing mitigates stragglers.
+    ``partitions`` caps the decode tasks (defaults to the capped Python
+    parallelism); the driver deals the blocks to them by compressed
+    size, largest first. The block headers are walked when this is
+    called, so a missing path raises ``FileNotFoundError`` here, not at
+    the first action.
     """
-    if block_index is None:
-        # create the cached index HERE (not inside _select_data_blocks) so
-        # it can be handed back for release — long-lived sessions doing
-        # many reads must not accumulate storage (ADVICE r2)
-        block_index = pbf_block_index(spark, paths).cache()
     union = read_pbf_union(
         spark, paths, kinds, mode, want_info, partitions,
         block_index, max_blocks, byte_budget,
@@ -280,20 +261,16 @@ def read_pbf(
     out = {}
     for kind in kinds:
         out[kind + "s"] = union.filter(F.col("kind") == kind).select(*_KIND_COLS[kind])
-    # expose the shared (possibly persisted) union + cached index so
-    # callers can release storage with release_pbf(dfs)
+    # expose the shared (possibly persisted) union so callers can
+    # release its storage with release_pbf(dfs)
     out["union"] = union
-    out["_block_index"] = block_index
     return out
 
 
 def release_pbf(dfs: dict) -> None:
-    """Release all storage held by a ``read_pbf`` result: the persisted
-    decoded union and the cached block index. Safe to call twice."""
-    for key in ("union", "_block_index"):
-        df = dfs.get(key)
-        if df is not None:
-            df.unpersist()
+    """Release the storage held by a ``read_pbf`` result: the persisted
+    decoded union. Safe to call twice."""
+    dfs["union"].unpersist()
 
 
 def count_elements(
@@ -310,38 +287,18 @@ def count_elements(
     n_changesets). Changeset groups are counted (never silently
     invisible) though their payload is not decoded — reference parity.
     """
-    index = pbf_block_index(spark, paths).filter(F.col("block_type") == "OSMData")
-    if partitions is None:
-        from ...session import python_parallelism
-
-        partitions = python_parallelism(spark)
-    index = index.repartition(partitions, "block_id")
-
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType(), False),
-            T.StructField("block_id", T.IntegerType(), False),
-            T.StructField("n_nodes", T.LongType(), False),
-            T.StructField("n_ways", T.LongType(), False),
-            T.StructField("n_relations", T.LongType(), False),
-            T.StructField("n_changesets", T.LongType(), False),
-        ]
+    schema = T.StructType.fromDDL(
+        "path string not null, block_id int not null, n_nodes long not null, "
+        "n_ways long not null, n_relations long not null, n_changesets long not null"
     )
+    arrow = to_arrow_schema(schema)
 
-    def count_partition(it):
-        for pdf in it:
-            rows = []
-            for path, block_id, offset, size in zip(
-                pdf["path"], pdf["block_id"], pdf["offset"], pdf["size"]
-            ):
-                raw = _read_block_checked(path, block_id, offset, size)
-                n_nodes, n_ways, n_rels, n_cs = count_block_elements(decode_blob(raw))
-                rows.append((path, int(block_id), n_nodes, n_ways, n_rels, n_cs))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "block_id", "n_nodes", "n_ways", "n_relations", "n_changesets",
-                ],
-            )
+    def count_partition(batches):
+        rows = [
+            (b.path, b.block_id, *count_block_elements(decode_blob(read_block_payload(b))))
+            for b in _task_blocks(batches)
+        ]
+        yield pa.RecordBatch.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=arrow)
 
-    return index.mapInPandas(count_partition, schema)
+    plan = _block_plan(spark, paths, None, partitions, None, None)
+    return plan.mapInArrow(count_partition, schema)

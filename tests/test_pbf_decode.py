@@ -11,6 +11,8 @@ documented wire contents, so the goldens run on any host. The
 reference's own files are checked too where they are present.
 """
 
+import zlib
+
 import pytest
 
 from osm_read_enhanced_spark.sources.pbf import (
@@ -135,6 +137,36 @@ def a2_block() -> bytes:
         + encode_varint_field(17, 100)
         + encode_varint_field(18, 1000)
     )
+
+
+# the §A1/§A2 OSMHeader: required_features + writingprogram, 37 B
+HEADER_BLOCK = (
+    encode_len_field(4, b"OsmSchema-V0.6")
+    + encode_len_field(4, b"DenseNodes")
+    + encode_len_field(16, b"0.40.1")
+)
+
+
+def _file_block(block_type: str, blob: bytes) -> bytes:
+    header = encode_len_field(1, block_type.encode()) + encode_varint_field(3, len(blob))
+    return len(header).to_bytes(4, "big") + header + blob
+
+
+def encoded_pbf(path: str, data_block: bytes | None) -> int:
+    """Frame a whole file by hand: the raw OSMHeader blob, then
+    ``data_block`` (if any) as a zlib blob. Returns the data blob's
+    length (0 for a header-only file)."""
+    raw = encode_len_field(1, HEADER_BLOCK) + encode_varint_field(2, len(HEADER_BLOCK))
+    blob = b""
+    if data_block is not None:
+        blob = encode_varint_field(2, len(data_block)) + encode_len_field(
+            3, zlib.compress(data_block)
+        )
+    with open(path, "wb") as f:
+        f.write(_file_block("OSMHeader", raw))
+        if blob:
+            f.write(_file_block("OSMData", blob))
+    return len(blob)
 
 
 def _kind(rows, kind):
@@ -262,6 +294,20 @@ def test_encoded_a2():
         (1, 1, 1, "x", True)
     }
     assert {r["timestamp"] for r in nodes} == {1229476722000}
+
+
+def test_encoded_file_framing(tmp_path):
+    path = str(tmp_path / "a1.pbf")
+    blob_len = encoded_pbf(path, a1_block())
+    blocks = scan_blocks(path)
+    assert [b.block_type for b in blocks] == ["OSMHeader", "OSMData"]
+    assert blocks[1].size == blob_len
+    header = decode_blob(read_block_payload(blocks[0]))
+    assert len(header) == 37  # FIXTURES §A1
+    hdr = decode_header_block(header)
+    assert hdr["required_features"] == ["OsmSchema-V0.6", "DenseNodes"]
+    assert hdr["writingprogram"] == "0.40.1"
+    assert decode_blob(read_block_payload(blocks[1])) == a1_block()
 
 
 # ------------------------------------------------- reference files

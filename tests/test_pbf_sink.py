@@ -1,12 +1,15 @@
 """Distributed PBF sink: DataFrames → part files → read back identical
-(sink → source round-trip over the reference fixture and a multi-block
-generated file)."""
+(sink → source round-trip over the reference fixture, its hand-encoded
+twin and a multi-block generated file)."""
 
 import pytest
 
 from osm_read_enhanced_spark.fixtures import build_scale_pbf_fast
 from osm_read_enhanced_spark.sources.pbf import read_pbf
 from osm_read_enhanced_spark.sources.pbf.sink import write_pbf_dataset
+
+# sibling test module: the hand-encoded §A1 block and its file framing
+from test_pbf_decode import a1_block, encoded_pbf
 
 REF_PBF = "/root/reference/test/test.pbf"
 
@@ -19,9 +22,8 @@ def _collect_nodes(df):
     }
 
 
-@pytest.mark.parametrize("compress", [True, False])
-def test_roundtrip_reference_fixture(spark, tmp_path, compress):
-    src = read_pbf(spark, REF_PBF)
+def _assert_roundtrip(spark, tmp_path, src_path, compress):
+    src = read_pbf(spark, src_path)
     out_dir = str(tmp_path / f"sinked_{compress}")
     manifest = write_pbf_dataset(
         out_dir,
@@ -44,6 +46,18 @@ def test_roundtrip_reference_fixture(spark, tmp_path, compress):
     r1 = back["relations"].collect()[0]
     assert r1.id == r0.id and dict(r1.tags) == dict(r0.tags)
     assert [tuple(m) for m in r1.members] == [tuple(m) for m in r0.members]
+
+
+@pytest.mark.parametrize("compress", [True, False])
+def test_roundtrip_reference_fixture(spark, tmp_path, compress):
+    _assert_roundtrip(spark, tmp_path, REF_PBF, compress)
+
+
+@pytest.mark.parametrize("compress", [True, False])
+def test_roundtrip_reference_fixture_encoded(spark, tmp_path, compress):
+    path = str(tmp_path / "test.pbf")
+    encoded_pbf(path, a1_block())
+    _assert_roundtrip(spark, tmp_path, path, compress)
 
 
 def test_roundtrip_multiblock_counts_and_ranges(spark, tmp_path):
