@@ -133,7 +133,12 @@ def _band_pairs(
     (id_a, id_b, est): each id pair sharing any (band, bucket) once,
     kept iff est (the matching-signature fraction) ≥ threshold.
     ``ordered`` keeps only id_a < id_b, the self-join orientation; the
-    probe of a batch against a committed index runs unordered."""
+    probe of a batch against a committed index runs unordered.
+
+    est is computed and filtered on every joined row, before the
+    dedup: a pair's est is the same on each of its rows, and the dedup
+    then keys on primitive columns only, so it plans a HashAggregate
+    instead of sorting every candidate row with its two signatures."""
     cond = (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
     if ordered:
         cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -143,13 +148,10 @@ def _band_pairs(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
+            _sig_match_frac(F.col("a.sig"), F.col("b.sig"), n_hashes).alias("est"),
         )
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("est", _sig_match_frac(F.col("sig_a"), F.col("sig_b"), n_hashes))
         .filter(F.col("est") >= threshold)
-        .select("id_a", "id_b", "est")
+        .dropDuplicates(["id_a", "id_b", "est"])
     )
 
 

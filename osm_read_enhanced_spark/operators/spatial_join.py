@@ -2,13 +2,15 @@
 
 - ``pip_join_broadcast`` — the north-star pattern: the polygon layer is
   collected through Arrow into flat CSR arrays (ids, bboxes, ring
-  vertex offsets and coordinates) and broadcast once; every task lazily
-  builds a uniform-grid bbox index and the concatenated ring edges, then
-  per Arrow batch emits each (point, polygon-bbox) candidate once from
-  the grid and refines all candidates in one chunked ring-edge ray cast
-  — no Python loop per polygon. Zero shuffle on the fact side; scales
-  to any number of points while the polygon layer fits one broadcast
-  (≤ a few hundred MB).
+  vertex offsets and coordinates) and broadcast once; every Python
+  worker lazily builds, and caches, a uniform-grid bbox index and the
+  concatenated ring edges bucketed into per-ring y-bands, then per Arrow
+  batch emits each (point, polygon-bbox) candidate once from the grid
+  and refines all candidates in one chunked ray cast against only the
+  edges of each candidate's band — no Python loop per polygon. The
+  bands live only in the worker, so the broadcast does not grow. Zero
+  shuffle on the fact side; scales to any number of points while the
+  polygon layer fits one broadcast (≤ a few hundred MB).
 - ``pip_join_with_holes`` — multipolygon outer-minus-inner containment
   composed from two broadcast probes and an anti-join.
 """

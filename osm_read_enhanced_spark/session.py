@@ -4,6 +4,14 @@ Local testing runs one JVM (``local[N]``); the same configuration is what
 we would ship to a 1000-executor cluster via ``spark-submit --py-files``:
 AQE on (runtime re-plan + skew-join splitting), Arrow enabled for every
 pandas-UDF exchange, shuffle partitions sized to the parallelism level.
+
+Python workers fork from ``worker_daemon`` rather than ``pyspark.daemon``:
+the same manager, but a worker no longer re-reads the directory of
+``pyspark.zip`` before every task. That re-read cost a reused worker
+about 0.2 s per task (16 reads of 26,672 entries, cProfile of
+``pyspark.worker`` on CPython 3.11.7). A trivial 4-partition
+``mapInArrow`` in a warm local[4] session on a 4-CPU VM dropped from
+0.36-0.45 s to 0.17-0.22 s (medians of 8 runs, six sessions a side).
 """
 
 from __future__ import annotations
@@ -11,6 +19,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the package: the daemon's import root
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -24,6 +35,13 @@ def get_spark(
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores. On a
     real cluster the master/deploy settings come from spark-submit; only
     the tuning confs below matter there.
+
+    The package's parent directory goes on the workers' ``PYTHONPATH``
+    so they can start ``worker_daemon`` from any working directory. A
+    cluster whose executors cannot import this package (``--py-files``
+    arrive only after the daemon starts) should pass
+    ``{"spark.python.daemon.module": "pyspark.daemon"}`` in
+    ``extra_conf``.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -46,6 +64,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "osm_read_enhanced_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

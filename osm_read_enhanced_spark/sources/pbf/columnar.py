@@ -39,9 +39,9 @@ from .proto import (
     decode_packed_svarints,
     decode_packed_uvarints,
     delta_decode,
+    int64_decode,
     iter_fields,
     read_varint,
-    zigzag_decode,
 )
 
 KIND_NODE, KIND_WAY, KIND_RELATION = "node", "way", "relation"
@@ -151,10 +151,10 @@ def _scan_block(data: bytes):
             meta.granularity = val
         elif fno == 18 and wt == WT_VARINT:
             meta.date_granularity = val
-        elif fno == 19 and wt == WT_VARINT:
-            meta.lat_offset = zigzag_decode(val)
+        elif fno == 19 and wt == WT_VARINT:  # int64, not sint64
+            meta.lat_offset = int64_decode(val)
         elif fno == 20 and wt == WT_VARINT:
-            meta.lon_offset = zigzag_decode(val)
+            meta.lon_offset = int64_decode(val)
     return st_span, groups, meta
 
 
@@ -205,27 +205,33 @@ def _kv_runs_columnar(kv: np.ndarray, n: int):
 
 
 def _dense_info_columnar(data: bytes, s: int, e: int, n: int, date_gran: int):
-    """DenseInfo → dict of numpy arrays (user kept as sid indices)."""
-    info = {
-        "version": None, "timestamp": None, "changeset": None,
-        "uid": None, "user_sid": None, "visible": None,
-    }
+    """DenseInfo → dict of numpy arrays (user kept as sid indices). A
+    field split over several packed runs is their concatenation, delta
+    decoded across the runs."""
+    runs: dict[int, list] = {}
     for fno, wt, val in iter_fields(data, s, e):
-        if wt != WT_LEN:
-            continue
-        sl = data[val[0] : val[1]]
-        if fno == 1:
-            info["version"] = decode_packed_uvarints(sl).astype(np.int32)
-        elif fno == 2:
-            info["timestamp"] = delta_decode(decode_packed_svarints(sl)) * date_gran
-        elif fno == 3:
-            info["changeset"] = delta_decode(decode_packed_svarints(sl))
-        elif fno == 4:
-            info["uid"] = delta_decode(decode_packed_svarints(sl))
-        elif fno == 5:
-            info["user_sid"] = delta_decode(decode_packed_svarints(sl))
-        elif fno == 6:
-            info["visible"] = decode_packed_uvarints(sl).astype(bool)
+        if wt == WT_LEN:
+            runs.setdefault(fno, []).append(data[val[0] : val[1]])
+
+    def packed(fno, decode):
+        sl = runs.get(fno)
+        return np.concatenate([decode(b) for b in sl]) if sl else None
+
+    def delta(fno):
+        vals = packed(fno, decode_packed_svarints)
+        return None if vals is None else delta_decode(vals)
+
+    version = packed(1, decode_packed_uvarints)
+    timestamp = delta(2)
+    visible = packed(6, decode_packed_uvarints)
+    info = {
+        "version": None if version is None else version.astype(np.int32),
+        "timestamp": None if timestamp is None else timestamp * date_gran,
+        "changeset": delta(3),
+        "uid": delta(4),
+        "user_sid": delta(5),
+        "visible": None if visible is None else visible.astype(bool),
+    }
     if info["visible"] is None and n:
         info["visible"] = np.ones(n, dtype=bool)
     return info

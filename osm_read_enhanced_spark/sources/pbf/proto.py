@@ -39,6 +39,12 @@ def zigzag_decode(v: int) -> int:
     return (v >> 1) ^ -(v & 1)
 
 
+def int64_decode(v: int) -> int:
+    """A varint read as unsigned → the int64/int32 it carries (protobuf
+    sends those as their 64-bit two's complement)."""
+    return v - (1 << 64) if v >> 63 else v
+
+
 def zigzag_encode(v: int) -> int:
     return (v << 1) ^ (v >> 63) if v < 0 else v << 1
 

@@ -211,10 +211,10 @@ def build_primitive_block(
         body += encode_varint_field(17, granularity)
     if date_granularity != 1000:
         body += encode_varint_field(18, date_granularity)
-    if lat_offset:
-        body += encode_varint_field(19, zigzag_encode(lat_offset))
+    if lat_offset:  # int64, not sint64: a negative one takes 10 bytes
+        body += encode_varint_field(19, lat_offset)
     if lon_offset:
-        body += encode_varint_field(20, zigzag_encode(lon_offset))
+        body += encode_varint_field(20, lon_offset)
     return body
 
 

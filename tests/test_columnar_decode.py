@@ -299,8 +299,47 @@ def _plain_and_repeated_block():
              _pu(8, 1, 2, 3), _pz(9, 31, 1), _pu(10, 1, 1, 2))
         + _msg(4, _vs(1, 42), _vs(8, 1), _zs(9, 5), _vs(10, 0))
     )
-    properties = _vs(17, 1000) + _vs(18, 10) + _zs(19, 300) + _zs(20, -300)
+    properties = _vs(17, 1000) + _vs(18, 10) + _vs(19, 300) + _vs(20, -300)
     return _block(["", "k", "v", "u"], plain + dense, ways, relations, extra=properties)
+
+
+def test_offsets_are_int64():
+    """lat_offset / lon_offset (fields 19, 20) are int64, not sint64: a
+    negative offset arrives as a 10-byte two's complement varint."""
+    dense = _msg(2, _pz(1, 1, 1), _pz(8, 10, -3), _pz(9, -20, 5))
+    plain = _msg(1, _zs(1, 3), _zs(8, 7), _zs(9, -7))
+    properties = (
+        _vs(17, 1000)
+        + b"\x98\x01" + b"\x95\x9a\xef\x3a"  # field 19, varint 123456789
+        + b"\xa0\x01" + _twos_varint(-987654321)  # field 20, 10-byte varint
+    )
+    payload = _block([""], dense + plain, extra=properties)
+    assert_matches_oracle(payload)
+    rows = engine_rows(payload)
+    lat_off, lon_off = 123456789, -987654321
+    assert [(r["id"], r["lat"], r["lon"]) for r in rows] == [
+        (1, (lat_off + 1000 * 10) / 1e9, (lon_off + 1000 * -20) / 1e9),
+        (2, (lat_off + 1000 * 7) / 1e9, (lon_off + 1000 * -15) / 1e9),
+        (3, (lat_off + 1000 * 7) / 1e9, (lon_off + 1000 * -7) / 1e9),
+    ]
+
+
+def test_dense_info_fields_split_over_packed_runs():
+    """A DenseInfo field split over several packed runs is their
+    concatenation, delta decoded across the runs."""
+    dense_info = _msg(
+        5,
+        _pu(1, 3), _pu(1, 4, 5),  # version: runs [3] and [4, 5]
+        _pz(2, 10, 1), _pz(2, 2),  # timestamp deltas: runs [10, 1] and [2]
+        _pz(3, 7, 0, 0), _pz(4, 2, 0, 0), _pz(5, 1, 0, 0),
+    )
+    dense = _msg(2, _pz(1, 1, 1, 1), _pz(8, 0, 0, 0), _pz(9, 0, 0, 0), dense_info)
+    payload = _block(["", "u"], dense)
+    assert_matches_oracle(payload)
+    rows = engine_rows(payload)
+    assert [(r["version"], r["timestamp"]) for r in rows] == [
+        (3, 10_000), (4, 11_000), (5, 13_000)
+    ]
 
 
 @pytest.mark.parametrize("mode", ["strict", "osm-read-compat"])

@@ -257,10 +257,10 @@ def independent_decode(payload: bytes, mode: str = "strict") -> list[dict]:
             blk["gran"] = v
         elif f == 18:
             blk["date_gran"] = v
-        elif f == 19:  # the engine's writer and reader zigzag the offsets
-            blk["lat_off"] = _zz(v)
+        elif f == 19:  # int64 in osmformat.proto, not sint64
+            blk["lat_off"] = _int64(v)
         elif f == 20:
-            blk["lon_off"] = _zz(v)
+            blk["lon_off"] = _int64(v)
     compat = mode == "osm-read-compat"
     table = [""] + strings if compat else strings
 

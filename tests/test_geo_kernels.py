@@ -175,6 +175,65 @@ def test_pairs_in_rings_equals_points_in_ring(monkeypatch):
         assert np.array_equal(pairs_in_rings(plat, plon, ring, edges), want)
 
 
+def _want(plat, plon, ring, rings):
+    return np.array(
+        [points_in_ring(plat[k : k + 1], plon[k : k + 1], *rings[ring[k]])[0]
+         for k in range(len(ring))]
+    )
+
+
+def test_pairs_in_rings_band_boundaries(monkeypatch):
+    r = np.random.default_rng(12)
+    rings = [(r.uniform(-1, 1, k), r.uniform(-1, 1, k)) for k in (3, 7, 30, 64)]
+    # a comb: every edge spans the ring's full height
+    teeth = 40
+    comb_lat = np.tile([0.0, 1.0], teeth)
+    comb_lon = np.repeat(np.arange(teeth, dtype=float), 2) + np.tile([0.0, 0.5], teeth)
+    rings.append((comb_lat, comb_lon))
+    # a flat-topped ring whose ymax - 1 ulp rounds to band index n_bands:
+    # only clipping keeps the points just under its top edge
+    side = np.linspace(-41.438391522503345, 24.653103717861768, 4)
+    rings.append((np.r_[side, side[::-1]], np.repeat([0.0, 1.0], 4)))
+    # a star ring: many bands of about 2 edges each
+    ang = 2 * np.pi * np.arange(48) / 48
+    rings.append((np.sin(ang) * (1 + 0.3 * (np.arange(48) % 2)), np.cos(ang)))
+    plat, plon, ring = [], [], []
+    for i, (la, lo) in enumerate(rings):
+        # each ring's ymin and ymax at its mean x, and every vertex y at
+        # x values spread over the ring, each also one ulp either side
+        ys = np.r_[la.min(), la.max(), la]
+        ys = np.r_[ys, np.nextafter(ys, -np.inf), np.nextafter(ys, np.inf)]
+        xs = r.uniform(lo.min() - 0.1, lo.max() + 0.1, len(ys)).reshape(3, -1)
+        xs[:, :2] = lo.mean()
+        xs = xs.ravel()
+        plat += [ys, r.uniform(la.min(), la.max(), 200)]
+        plon += [xs, r.uniform(lo.min(), lo.max(), 200)]
+        ring += [np.full(len(ys) + 200, i)]
+    plat, plon, ring = np.concatenate(plat), np.concatenate(plon), np.concatenate(ring)
+    plat[::17] = np.nan  # NaN points are inside nothing
+    plon[5::19] = np.nan
+    want = _want(plat, plon, ring, rings)
+    assert want.any() and not want[np.isnan(plat)].any()
+    edges = _ring_csr(rings)
+    for chunk in (1, 7, 64, 1 << 16):
+        monkeypatch.setattr(pip, "_EDGE_CHUNK", chunk)
+        assert np.array_equal(pairs_in_rings(plat, plon, ring, edges), want)
+    # the band build in chunks of rings gives the same bands
+    for chunk in (1, 7, 64):
+        monkeypatch.setattr(pip, "_BAND_BUILD_EDGES", chunk)
+        chunked = _ring_csr(rings)
+        assert all(np.array_equal(a, b) and a.dtype == b.dtype for a, b in zip(chunked, edges))
+    # slot cap: at most 4 × edges + bands slots per ring, the comb included
+    n_bands = np.diff(edges.band_start)
+    for i in range(len(rings)):
+        bands = slice(edges.band_start[i], edges.band_start[i + 1] + 1)
+        n_slots = np.ptp(edges.slot_start[bands])
+        assert n_slots <= 4 * len(rings[i][0]) + n_bands[i]
+    assert n_bands[-1] > 1  # the star ring is banded
+    assert np.ptp(edges.slot_start[edges.band_start[-4] : edges.band_start[-3] + 1]) < (
+        2 * teeth * ((2 * teeth + 1) // 2))  # the comb did not cost edges × bands
+
+
 def test_pairs_in_rings_empty_inputs():
     edges = _ring_csr([])
     assert pairs_in_rings(np.empty(0), np.empty(0), np.empty(0, dtype=np.int64), edges).size == 0

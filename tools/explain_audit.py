@@ -108,7 +108,10 @@ FORBID = {
     "q67_incremental_dedup": ["CartesianProduct", "NestedLoop"],
     "q68_corpus_pipeline": ["CartesianProduct", "NestedLoop"],
     "q51_image_neardup_flags": ["FlatMapGroupsInPandas", "CartesianProduct"],
-    "q69_text_neardup_stream_flags": ["FlatMapGroupsInPandas", "CartesianProduct"],
+    # SortAggregate: a dedup keyed with the signature arrays, which are
+    # not hash-aggregatable, sorts every candidate row
+    "q69_text_neardup_stream_flags": ["FlatMapGroupsInPandas", "CartesianProduct",
+                                      "SortAggregate"],
 }
 FORBID_ALL = ["CartesianProduct"]
 
