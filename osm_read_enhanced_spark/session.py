@@ -12,16 +12,76 @@ about 0.2 s per task (16 reads of 26,672 entries, cProfile of
 ``pyspark.worker`` on CPython 3.11.7). A trivial 4-partition
 ``mapInArrow`` in a warm local[4] session on a 4-CPU VM dropped from
 0.36-0.45 s to 0.17-0.22 s (medians of 8 runs, six sessions a side).
+
+Most of a session's set-up is the driver JVM loading and verifying
+about 14,600 Spark classes from jars, so ``get_spark`` gives the JVM a
+dynamic class-data-sharing (AppCDS) archive of them. The first session
+under a key (the java binary, every Spark jar's name, size and mtime,
+the conf directory and any classpath or module flag) runs with
+``-XX:ArchiveClassesAtExit`` into a temp directory of its own under
+``.cds/``; once that JVM has exited and a ``-Xshare:on`` map of the
+file succeeds, the file is adopted under the key, and every later
+session maps it with ``-XX:SharedArchiveFile``. Measured with perfbench
+``pip_tiles`` (4-CPU VM, OpenJDK 17.0.20, local[4], traced runs of two
+seeds a side): ``session.start_s`` 6.7-7.9 → 3.3-4.2 s and
+``session.jvm_warm_s`` (the first JVM job) 3.3-3.7 → 1.7 s, while the
+first Python job stayed at 1.5-2.6 s; ``setup_s`` medians over ten
+interleaved pairs 15.8 → 10.4 s. The dump costs the first session once:
+``setup_s`` 17.5 → 21.1 s and a JVM exit of 13.6 s instead of 1.2 s
+while it writes the ~150 MB archive. Where no archive can be used (a
+caller's own CDS flag, a conf directory holding more than
+``*.template`` files, a non-empty ``$HADOOP_CONF_DIR`` or
+``$YARN_CONF_DIR``, an unwritable ``.cds/``) the JVM starts with the
+caller's flags only, and the reason is logged. A JVM that rejects an
+adopted archive runs on without it (``-Xshare:auto``, the default), and
+the session logs a warning.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
+import json
+import logging
 import os
+import shlex
+import shutil
+import subprocess
+import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # the directory holding the package: the daemon's import root
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the driver JVM's class-data-sharing archives, one directory per key
+_CDS_DIR = os.path.join(_PACKAGE_ROOT, ".cds")
+# flags through which a caller manages class data sharing itself
+_CDS_FLAGS = (
+    "-Xshare", "-XX:SharedArchiveFile", "-XX:ArchiveClassesAtExit",
+    "-XX:SharedClassListFile", "-XX:DumpLoadedClassList",
+    "-XX:+AutoCreateSharedArchive", "-XX:+RecordDynamicDumpInfo",
+)
+# flags that change the classpath or the module graph: part of the key.
+# The first set takes its value as the next token.
+_PATH_FLAGS_SPLIT = {
+    "-cp", "-classpath", "--class-path", "-p", "--module-path",
+    "--upgrade-module-path", "--add-modules", "--limit-modules", "--patch-module",
+}
+_PATH_FLAGS_JOINED = (
+    "-Djava.class.path=", "-Xbootclasspath", "--class-path=", "--module-path=",
+    "--upgrade-module-path=", "--add-modules=", "--limit-modules=", "--patch-module=",
+)
+# environment the launcher reads when it builds the classpath
+_CLASSPATH_ENV = ("SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_PREPEND_CLASSES")
+# where JVM options come from besides spark.driver.extraJavaOptions
+_JAVA_OPTS_ENV = ("SPARK_SUBMIT_OPTS", "JDK_JAVA_OPTIONS", "JAVA_TOOL_OPTIONS")
+# the JVM writes CDS log lines (626 "Skipping ...: Signed JAR" warnings
+# per dump) to its stdout, which is the Python process's stdout
+_CDS_QUIET = "-Xlog:cds=off,cds+dynamic=off"
 
 
 def get_spark(
@@ -42,6 +102,10 @@ def get_spark(
     arrive only after the daemon starts) should pass
     ``{"spark.python.daemon.module": "pyspark.daemon"}`` in
     ``extra_conf``.
+
+    A session that starts the driver JVM appends class-data-sharing
+    flags to the caller's ``spark.driver.extraJavaOptions`` (see the
+    module docstring); it adds none where no archive can be used.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -67,11 +131,260 @@ def get_spark(
         .config("spark.python.daemon.module", "osm_read_enhanced_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    java_opts = conf.pop("spark.driver.extraJavaOptions", "")
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # only a session that starts a new driver JVM can give it an archive
+    plan = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        plan = _cds_plan(java_opts, conf.get("spark.driver.extraClassPath", ""))
+    java_opts = " ".join(o for o in (java_opts, plan and plan["flags"]) if o)
+    if java_opts:
+        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
+    with _launch_conf_dir(plan and plan["conf_dir"]):
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if plan:
+        _cds_started(spark, plan)
     return spark
+
+
+def _cds_plan(java_opts: str, extra_class_path: str) -> dict | None:
+    """How the driver JVM about to start shares class data: map the
+    archive adopted under this key, or dump one at exit into a temp
+    directory of its own. None (with the reason logged) when no archive
+    can be used; the JVM then starts with the caller's flags only.
+
+    → {"key", "java", "archive", "dump_dir" (None when mapping),
+    "conf_dir", "flags"}."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    try:
+        tokens = [t for o in (java_opts, *map(os.environ.get, _JAVA_OPTS_ENV)) if o for t in shlex.split(o)]
+    except ValueError as e:
+        return _no_cds(f"cannot split the JVM options: {e}")
+    if any(t.startswith(_CDS_FLAGS) for t in tokens):
+        return _no_cds("the caller passes its own class-data-sharing flag")
+    spark_home = _find_spark_home()
+    real_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    # JDK 17 refuses a non-empty directory on the classpath, where
+    # spark-class puts the conf directory: launch with an empty one,
+    # which reads the same as a directory of templates
+    try:
+        names = os.listdir(real_conf) if os.path.exists(real_conf) else []
+        # the launcher puts these on the classpath too
+        busy = [v for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR")
+                if os.path.isdir(os.environ.get(v) or "") and os.listdir(os.environ[v])]
+    except OSError as e:
+        return _no_cds(f"cannot list a conf directory: {e}")
+    if not all(n.endswith(".template") for n in names):
+        return _no_cds(f"{real_conf} holds files other than *.template")
+    if busy:
+        return _no_cds(f"${busy[0]} names a non-empty directory")
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    jars = os.path.join(spark_home, "jars")
+    if not java or not os.path.isdir(jars):
+        return _no_cds("no java binary or no Spark jars directory found")
+    conf_dir = os.path.join(_CDS_DIR, "conf")
+    try:
+        os.makedirs(conf_dir, exist_ok=True)
+        if os.listdir(conf_dir):
+            return _no_cds(f"{conf_dir} is not empty")
+        if not os.access(_CDS_DIR, os.W_OK):
+            raise PermissionError(_CDS_DIR)
+    except OSError as e:
+        return _no_cds(f"cannot write {_CDS_DIR}: {e}")
+    flags = _path_flags(tokens) + [f"{k}={os.environ.get(k, '')}" for k in _CLASSPATH_ENV]
+    key = _cds_key(java, jars, conf_dir, flags + [f"extraClassPath={extra_class_path}"])
+    plan = {"key": key, "java": java, "conf_dir": conf_dir}
+    final = os.path.join(_CDS_DIR, key)
+    archive = os.path.join(final, "archive.jsa")
+    if os.path.isdir(final) and not _intact(final):
+        # a short archive would fault the JVM that maps it
+        _log.warning("CDS archive %s is not the size it was adopted at; removing it", archive)
+        shutil.rmtree(final, ignore_errors=True)
+    _sweep(plan)
+    if os.path.isdir(final):
+        return {**plan, "archive": archive, "dump_dir": None,
+                "flags": f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}"}
+    # named after this process, which owns it until its JVM has started
+    dump_dir = os.path.join(_CDS_DIR, f"{key}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp")
+    os.makedirs(dump_dir)
+    archive = os.path.join(dump_dir, "archive.jsa")
+    return {**plan, "archive": archive, "dump_dir": dump_dir,
+            "flags": f"-XX:ArchiveClassesAtExit={archive} {_CDS_QUIET}"}
+
+
+def _no_cds(reason: str) -> None:
+    _log.info("driver JVM starts without a CDS archive: %s", reason)
+    return None
+
+
+def _meta(path: str) -> dict:
+    """An archive directory's ``meta.json`` ({} when unreadable): the
+    dumping JVM's ``class_path``, and the ``size`` it was adopted at."""
+    try:
+        with open(os.path.join(path, "meta.json")) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return {}
+
+
+def _intact(final: str) -> bool:
+    """Whether the adopted archive in ``final`` is still the size it was
+    adopted at."""
+    try:
+        return os.path.getsize(os.path.join(final, "archive.jsa")) == _meta(final).get("size")
+    except OSError:
+        return False
+
+
+def _path_flags(tokens: list[str]) -> list[str]:
+    """The tokens of ``tokens`` that change the classpath or the module
+    graph, with the value of a flag that takes it as the next token."""
+    out = []
+    for i, t in enumerate(tokens):
+        if t in _PATH_FLAGS_SPLIT:
+            out += tokens[i : i + 2]
+        elif t.startswith(_PATH_FLAGS_JOINED):
+            out.append(t)
+    return out
+
+
+def _cds_key(java: str, jars_dir: str, conf_dir: str, flags: list[str]) -> str:
+    """Name of the archive a JVM can map: a hash of the java binary (its
+    realpath, its stat and its JDK's ``release`` file), of every jar in
+    ``jars_dir`` (name, size, mtime_ns), of the conf directory on the
+    classpath and of ``flags``."""
+    h = hashlib.sha256()
+    real = os.path.realpath(java)
+    st = os.stat(real)
+    h.update(f"{real}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    with contextlib.suppress(OSError), open(
+        os.path.join(os.path.dirname(os.path.dirname(real)), "release"), "rb"
+    ) as fh:
+        h.update(fh.read())
+    for name in sorted(os.listdir(jars_dir)):
+        st = os.stat(os.path.join(jars_dir, name))
+        h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    h.update("\0".join([conf_dir, *flags]).encode())
+    return h.hexdigest()[:20]
+
+
+@contextlib.contextmanager
+def _launch_conf_dir(conf_dir: str | None):
+    """``SPARK_CONF_DIR`` set to ``conf_dir`` while the gateway launches."""
+    old = os.environ.get("SPARK_CONF_DIR")
+    if conf_dir is not None:
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        yield
+    finally:
+        if old is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = old
+
+
+def _cds_started(spark: SparkSession, plan: dict) -> None:
+    """Log whether the new driver JVM maps the archive; a dumping JVM
+    records its classpath and has its archive adopted once it exits."""
+    jvm = spark.sparkContext._jvm
+    if plan["dump_dir"]:
+        meta = {"class_path": jvm.java.lang.System.getProperty("java.class.path")}
+        with open(os.path.join(plan["dump_dir"], "meta.json"), "w") as fh:
+            json.dump(meta, fh)
+        atexit.register(_adopt_after_exit, SparkContext._gateway.proc, plan)
+        _log.info("driver JVM dumps a CDS archive to %s when it exits", plan["archive"])
+        return
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            mapped = plan["archive"] in fh.read()
+    except OSError:
+        _log.info("cannot read the driver JVM's maps to see whether it maps %s", plan["archive"])
+        return
+    if mapped:
+        _log.info("driver JVM maps CDS archive %s", plan["archive"])
+    else:
+        _log.warning("driver JVM rejected CDS archive %s and runs without it", plan["archive"])
+
+
+def _adopt_after_exit(proc, plan: dict) -> None:
+    """At interpreter exit: adopt the archive now if its JVM has exited
+    (a stopped session); otherwise the next session adopts it."""
+    if proc.poll() is not None:
+        _sweep(plan)
+
+
+def _sweep(plan: dict) -> None:
+    """Settle this key's temp directories. One that no live JVM is still
+    dumping into is adopted as the key's archive when the key has none
+    and a ``-Xshare:on`` map of it succeeds, else removed: a dump that
+    was killed, failed or lost the race to another session."""
+    key, final = plan["key"], os.path.join(_CDS_DIR, plan["key"])
+    for name in sorted(os.listdir(_CDS_DIR)):
+        tmp = os.path.join(_CDS_DIR, name)
+        if not (name.startswith(key + ".") and name.endswith(".tmp")) or _being_dumped(tmp):
+            continue
+        if not os.path.isdir(final) and _maps(plan["java"], tmp):
+            meta = {**_meta(tmp), "size": os.path.getsize(os.path.join(tmp, "archive.jsa"))}
+            with open(os.path.join(tmp, "meta.json"), "w") as fh:
+                json.dump(meta, fh)
+            with contextlib.suppress(OSError):  # another session adopted first
+                os.rename(tmp, final)
+                _log.info("adopted CDS archive %s", final)
+                continue
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _being_dumped(tmp: str) -> bool:
+    """Whether another live process made ``tmp``, or a live process (the
+    dumping JVM) names ``tmp`` on its command line."""
+    owner = os.path.basename(tmp).split(".")[1].split("-")[0]
+    if owner.isdigit() and int(owner) != os.getpid():
+        try:
+            os.kill(int(owner), 0)
+            return True
+        except ProcessLookupError:
+            pass
+        except PermissionError:
+            return True
+    needle = os.fsencode(tmp + os.sep)
+    try:
+        pids = [p for p in os.listdir("/proc") if p.isdigit()]
+    except OSError:
+        return True  # cannot tell: leave it alone
+    for pid in pids:
+        with contextlib.suppress(OSError), open(f"/proc/{pid}/cmdline", "rb") as fh:
+            if needle in fh.read():
+                return True
+    return False
+
+
+def _maps(java: str, tmp: str) -> bool:
+    """Whether ``java`` maps the archive in ``tmp`` under ``-Xshare:on``
+    with the dumping JVM's classpath: false for a missing, half-written
+    or truncated archive (a truncated one faults the checking JVM)."""
+    archive, class_path = os.path.join(tmp, "archive.jsa"), _meta(tmp).get("class_path")
+    if class_path is None or not os.path.isfile(archive):
+        return False
+    cmd = [
+        java, "-Xshare:on", f"-XX:SharedArchiveFile={archive}",
+        f"-XX:ErrorFile={os.path.join(tmp, 'hs_err.log')}", "-XX:-CreateCoredumpOnCrash",
+        "-cp", class_path, "-version",
+    ]
+    try:
+        done = subprocess.run(cmd, capture_output=True, timeout=60)
+    except (OSError, subprocess.TimeoutExpired) as e:
+        _log.warning("could not check CDS archive in %s: %s", tmp, e)
+        return False
+    if done.returncode:
+        out = (done.stdout + done.stderr).decode(errors="replace").strip()
+        _log.info("CDS archive in %s does not map: %s", tmp, out[-300:])
+    return done.returncode == 0
 
 
 def _driver_mem() -> str:

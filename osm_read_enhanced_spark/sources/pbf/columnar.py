@@ -204,14 +204,16 @@ def _kv_runs_columnar(kv: np.ndarray, n: int):
     return offsets, np.array(keys, dtype=np.int64), np.array(vals, dtype=np.int64)
 
 
-def _dense_info_columnar(data: bytes, s: int, e: int, n: int, date_gran: int):
-    """DenseInfo → dict of numpy arrays (user kept as sid indices). A
-    field split over several packed runs is their concatenation, delta
-    decoded across the runs."""
+def _dense_info_columnar(data: bytes, spans, n: int, date_gran: int):
+    """DenseInfo occurrences ``spans`` → dict of numpy arrays (user kept
+    as sid indices). Protobuf merges repeated occurrences, so a field
+    split over several packed runs, in one occurrence or across
+    several, is their concatenation, delta decoded across the runs."""
     runs: dict[int, list] = {}
-    for fno, wt, val in iter_fields(data, s, e):
-        if wt == WT_LEN:
-            runs.setdefault(fno, []).append(data[val[0] : val[1]])
+    for s, e in spans:
+        for fno, wt, val in iter_fields(data, s, e):
+            if wt == WT_LEN:
+                runs.setdefault(fno, []).append(data[val[0] : val[1]])
 
     def packed(fno, decode):
         sl = runs.get(fno)
@@ -274,8 +276,7 @@ def _parse_dense_columnar(data, s, e, meta: _BlockMeta, want_info: bool):
     tag_offsets, key_idx, val_idx = _kv_runs_columnar(kv, n)
     info = None
     if want_info and spans.get(5):
-        s5, e5 = spans[5][0]
-        info = _dense_info_columnar(data, s5, e5, n, meta.date_granularity)
+        info = _dense_info_columnar(data, spans[5], n, meta.date_granularity)
     return {
         "n": n, "ids": ids, "lat": lat_deg, "lon": lon_deg,
         "tag_offsets": tag_offsets, "key_idx": key_idx, "val_idx": val_idx,
@@ -449,16 +450,24 @@ def _info(data, walked, date_gran):
     """Info sub-messages (field 4) of the walked messages → {name:
     (values, valid)}, or None when no message has one. A message without
     Info is null in every column; inside an Info a missing field is null,
-    except ``visible``, which defaults to True."""
+    except ``visible``, which defaults to True. Repeated Info occurrences
+    merge as protobuf merges them: each field's last occurrence wins."""
     info_spans = walked[_len_tag(4)]
     if not any(info_spans):
         return None
     has = np.array([bool(sp) for sp in info_spans], dtype=bool)
-    fields = _walk(
-        data,
-        [sp[-1] if sp else (0, 0) for sp in info_spans],
-        [_varint_tag(fno) for fno, _, _ in _INFO_FIELDS],
-    )
+    tags = [_varint_tag(fno) for fno, _, _ in _INFO_FIELDS]
+    if all(len(sp) <= 1 for sp in info_spans):
+        fields = _walk(data, [sp[0] if sp else (0, 0) for sp in info_spans], tags)
+    else:
+        # walk every occurrence, then join each message's field spans in
+        # occurrence order so ``_scalar`` picks the last one
+        owner = [mi for mi, sp in enumerate(info_spans) for _ in sp]
+        walked_all = _walk(data, [s for sp in info_spans for s in sp], tags)
+        fields = {t: [()] * len(info_spans) for t in tags}
+        for t in tags:
+            for mi, found in zip(owner, walked_all[t]):
+                fields[t][mi] += found
     info = {}
     for fno, name, dtype in _INFO_FIELDS:
         vals, valid = _scalar(data, fields[_varint_tag(fno)])

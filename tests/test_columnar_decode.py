@@ -19,7 +19,7 @@ from osm_read_enhanced_spark.sources.pbf.proto import (
 from osm_read_enhanced_spark.sources.pbf.writer import write_pbf
 
 # sibling test modules: the oracle decoder and the §A1/§A2 golden blocks
-from test_differential import assert_matches_oracle, engine_rows
+from test_differential import assert_matches_oracle, engine_rows, reference_file
 from test_pbf_decode import a1_block, a2_block
 
 REF_PBF = "/root/reference/test/test.pbf"
@@ -32,6 +32,7 @@ def _compare_file(path, mode="strict"):
         assert_matches_oracle(decode_blob(read_block_payload(b)), mode)
 
 
+@reference_file(REF_PBF, twin="test_golden_blocks_match_oracle")
 @pytest.mark.parametrize("mode", ["strict", "osm-read-compat"])
 def test_reference_fixture(mode):
     _compare_file(REF_PBF, mode)
@@ -339,6 +340,37 @@ def test_dense_info_fields_split_over_packed_runs():
     rows = engine_rows(payload)
     assert [(r["version"], r["timestamp"]) for r in rows] == [
         (3, 10_000), (4, 11_000), (5, 13_000)
+    ]
+
+
+def test_repeated_info_sub_messages_merge():
+    """Two Info sub-messages on one way merge as protobuf merges them:
+    every field set in either survives, and a field set in both takes
+    the later value. Strings: 1 "u"."""
+    first = _msg(4, _vs(1, 3), _vs(4, 11))  # version 3, uid 11
+    second = _msg(4, _vs(2, 77), _vs(4, 12), _vs(5, 1))  # timestamp, uid 12, user
+    ways = _msg(3, _vs(1, 31), first, second) + _msg(3, _vs(1, 32), first)
+    payload = _block(["", "u"], ways)
+    assert_matches_oracle(payload)
+    rows = engine_rows(payload)
+    assert [
+        (r["id"], r["version"], r["timestamp"], r["uid"], r["user"], r["changeset"])
+        for r in rows
+    ] == [(31, 3, 77_000, 12, "u", None), (32, 3, None, 11, None, None)]
+
+
+def test_dense_info_split_over_occurrences():
+    """A DenseInfo split over two occurrences in one dense group merges:
+    each packed field is the concatenation of its runs across both,
+    delta decoded across them; a field only one carries is kept."""
+    first = _msg(5, _pu(1, 3), _pz(2, 10), _pz(4, 2, 0))
+    second = _msg(5, _pu(1, 4, 5), _pz(2, 1, 2), _pz(4, 1), _pz(5, 1, 0, 0))
+    dense = _msg(2, _pz(1, 1, 1, 1), _pz(8, 0, 0, 0), _pz(9, 0, 0, 0), first, second)
+    payload = _block(["", "u"], dense)
+    assert_matches_oracle(payload)
+    rows = engine_rows(payload)
+    assert [(r["version"], r["timestamp"], r["uid"], r["user"]) for r in rows] == [
+        (3, 10_000, 2, "u"), (4, 11_000, 2, "u"), (5, 13_000, 3, "u")
     ]
 
 

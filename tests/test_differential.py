@@ -9,7 +9,10 @@ It returns the rows the engine's union batches must hold, field for
 field, in both decode modes.
 """
 
+import os
+
 import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -20,6 +23,8 @@ from osm_read_enhanced_spark.sources.pbf.columnar import (
     UNION_ARROW_SCHEMA,
     decode_block_arrow,
 )
+
+from conftest import REFERENCE_DIR
 
 # ---------------------------------------------------------------- an
 # independent reference decoder: list-of-fields TLV walk, python ints
@@ -110,12 +115,13 @@ def _running(deltas):
 
 
 def _info(b, fields, date_gran, lookup):
-    """Info sub-message (field 4; the last one, as the engine reads it)
-    → the six metadata columns; no Info → all null."""
+    """Info sub-messages (field 4) → the six metadata columns; no Info →
+    all null. Repeated occurrences merge as protobuf merges a message
+    field: their fields concatenate, so each scalar's last one wins."""
     spans = [v for ff, w, v in fields if ff == 4 and w == 2]
     if not spans:
         return dict.fromkeys(META)
-    info = _fields(b, *spans[-1])
+    info = [f for span in spans for f in _fields(b, *span)]
     version, ts, cs, uid, usid, vis = (_last(info, f) for f in range(1, 7))
     return dict(
         version=None if version is None else _int64(version),
@@ -161,7 +167,8 @@ def _dense_rows(b, span, blk, lookup):
     meta = [dict.fromkeys(META) for _ in range(n)]
     info_spans = [v for ff, w, v in d if ff == 5 and w == 2]
     if info_spans:
-        di = _fields(b, *info_spans[0])
+        # repeated DenseInfo occurrences merge: packed runs concatenate
+        di = [f for span in info_spans for f in _fields(b, *span)]
 
         def delta_coded(f):
             return _running(_zz(v) for v in _all_packed(b, di, f))
@@ -287,6 +294,12 @@ def independent_decode(payload: bytes, mode: str = "strict") -> list[dict]:
     return nodes + ways + relations
 
 
+def reference_file(path: str, twin: str):
+    """Skip a test of the reference's own ``path`` where that file is
+    absent; its hand-encoded ``twin`` checks the same golden values."""
+    return pytest.mark.skipif(not os.path.exists(path), reason=f"{path} absent; twin: {twin}")
+
+
 def engine_rows(
     payload: bytes, mode: str = "strict", kinds=("node", "way", "relation")
 ) -> list[dict]:
@@ -345,6 +358,10 @@ def test_pitcairn_like_agrees(tmp_path):
             assert_matches_oracle(payload, mode)
 
 
+REF_PBF = os.path.join(REFERENCE_DIR, "test", "test.pbf")
+
+
+@reference_file(REF_PBF, twin="test_columnar_decode::test_golden_blocks_match_oracle")
 def test_reference_fixture_agrees():
-    payload = decode_blob(read_block_payload(scan_blocks("/root/reference/test/test.pbf")[1]))
+    payload = decode_blob(read_block_payload(scan_blocks(REF_PBF)[1]))
     assert_matches_oracle(payload)

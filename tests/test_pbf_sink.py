@@ -8,7 +8,8 @@ from osm_read_enhanced_spark.fixtures import build_scale_pbf_fast
 from osm_read_enhanced_spark.sources.pbf import read_pbf
 from osm_read_enhanced_spark.sources.pbf.sink import write_pbf_dataset
 
-# sibling test module: the hand-encoded §A1 block and its file framing
+# sibling test modules: the hand-encoded §A1 block and its file framing
+from test_differential import reference_file
 from test_pbf_decode import a1_block, encoded_pbf
 
 REF_PBF = "/root/reference/test/test.pbf"
@@ -48,6 +49,7 @@ def _assert_roundtrip(spark, tmp_path, src_path, compress):
     assert [tuple(m) for m in r1.members] == [tuple(m) for m in r0.members]
 
 
+@reference_file(REF_PBF, twin="test_roundtrip_reference_fixture_encoded")
 @pytest.mark.parametrize("compress", [True, False])
 def test_roundtrip_reference_fixture(spark, tmp_path, compress):
     _assert_roundtrip(spark, tmp_path, REF_PBF, compress)

@@ -21,7 +21,7 @@ from osm_read_enhanced_spark.sources.pbf.blocks import read_block_payload
 from osm_read_enhanced_spark.sources.pbf.reader import UNION_SCHEMA, count_elements
 
 # sibling test modules: the hand-encoded blocks and the oracle decoder
-from test_differential import independent_decode
+from test_differential import independent_decode, reference_file
 from test_pbf_decode import a1_block, a2_block, encoded_pbf
 
 TEST_PBF = "/root/reference/test/test.pbf"
@@ -47,6 +47,7 @@ def _assert_block_index(spark, path, data_size):
     assert idx[1].size == data_size
 
 
+@reference_file(TEST_PBF, twin="test_block_index_df_encoded")
 def test_block_index_df(spark):
     _assert_block_index(spark, TEST_PBF, 476)
 
@@ -74,6 +75,7 @@ def _assert_entities(dfs):
     ]
 
 
+@reference_file(TEST_PBF, twin="test_read_pbf_entities_encoded")
 def test_read_pbf_entities(spark):
     _assert_entities(read_pbf(spark, TEST_PBF))
 
@@ -92,6 +94,7 @@ def _assert_many_nodes(dfs):
     assert (agg.n, agg.lo, agg.hi, agg.d) == (3000, 1, 3000, 3000)
 
 
+@reference_file(MANY_NODES_PBF, twin="test_read_pbf_many_nodes_count_encoded")
 def test_read_pbf_many_nodes_count(spark):
     _assert_many_nodes(read_pbf(spark, MANY_NODES_PBF, kinds=("node",)))
 
@@ -123,6 +126,7 @@ def _assert_compat(dfs):
     assert dfs["ways"].collect()[0].tags == {}
 
 
+@reference_file(TEST_PBF, twin="test_compat_mode_spark_encoded")
 def test_compat_mode_spark(spark):
     _assert_compat(read_pbf(spark, TEST_PBF, kinds=("node", "way"), mode="osm-read-compat"))
 
