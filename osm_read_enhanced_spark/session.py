@@ -15,33 +15,33 @@ about 0.2 s per task (16 reads of 26,672 entries, cProfile of
 
 Most of a session's set-up is the driver JVM loading and verifying
 about 14,600 Spark classes from jars, so ``get_spark`` gives the JVM a
-dynamic class-data-sharing (AppCDS) archive of them. The first session
-under a key (the java binary, every Spark jar's name, size and mtime,
-the conf directory and any classpath or module flag) runs with
+dynamic class-data-sharing (AppCDS) archive of them. A session that
+finds no archive in ``.cds/archive/`` runs with
 ``-XX:ArchiveClassesAtExit`` into a temp directory of its own under
 ``.cds/``; once that JVM has exited and a ``-Xshare:on`` map of the
-file succeeds, the file is adopted under the key, and every later
-session maps it with ``-XX:SharedArchiveFile``. Measured with perfbench
-``pip_tiles`` (4-CPU VM, OpenJDK 17.0.20, local[4], traced runs of two
-seeds a side): ``session.start_s`` 6.7-7.9 → 3.3-4.2 s and
-``session.jvm_warm_s`` (the first JVM job) 3.3-3.7 → 1.7 s, while the
-first Python job stayed at 1.5-2.6 s; ``setup_s`` medians over ten
+file succeeds, the directory is adopted as ``.cds/archive/``, and every
+later session maps it with ``-XX:SharedArchiveFile``. The JVM itself
+checks that an archive fits it (its own version, and the name, size and
+mtime of every classpath jar) and runs without one that does not; the
+session sees that in the JVM's ``/proc/<pid>/maps``, logs a warning and
+removes the archive, so the next session dumps one that fits. Measured
+with perfbench ``pip_tiles`` (4-CPU VM, OpenJDK 17.0.20, local[4],
+traced runs of two seeds a side): ``session.start_s`` 6.7-7.9 → 3.3-4.2 s
+and ``session.jvm_warm_s`` (the first JVM job) 3.3-3.7 → 1.7 s, while
+the first Python job stayed at 1.5-2.6 s; ``setup_s`` medians over ten
 interleaved pairs 15.8 → 10.4 s. The dump costs the first session once:
 ``setup_s`` 17.5 → 21.1 s and a JVM exit of 13.6 s instead of 1.2 s
 while it writes the ~150 MB archive. Where no archive can be used (a
-caller's own CDS flag, a conf directory holding more than
-``*.template`` files, a non-empty ``$HADOOP_CONF_DIR`` or
-``$YARN_CONF_DIR``, an unwritable ``.cds/``) the JVM starts with the
-caller's flags only, and the reason is logged. A JVM that rejects an
-adopted archive runs on without it (``-Xshare:auto``, the default), and
-the session logs a warning.
+caller's own CDS flag, a flag under which the JVM refuses to dump, a
+conf directory holding more than ``*.template`` files, a non-empty
+``$HADOOP_CONF_DIR`` or ``$YARN_CONF_DIR``, an unwritable ``.cds/``)
+the JVM starts with the caller's flags only, and the reason is logged.
 """
 
 from __future__ import annotations
 
 import atexit
 import contextlib
-import hashlib
 import json
 import logging
 import os
@@ -57,7 +57,7 @@ _log = logging.getLogger(__name__)
 
 # the directory holding the package: the daemon's import root
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# the driver JVM's class-data-sharing archives, one directory per key
+# the driver JVM's class-data-sharing archive, adopted into archive/
 _CDS_DIR = os.path.join(_PACKAGE_ROOT, ".cds")
 # flags through which a caller manages class data sharing itself
 _CDS_FLAGS = (
@@ -65,18 +65,8 @@ _CDS_FLAGS = (
     "-XX:SharedClassListFile", "-XX:DumpLoadedClassList",
     "-XX:+AutoCreateSharedArchive", "-XX:+RecordDynamicDumpInfo",
 )
-# flags that change the classpath or the module graph: part of the key.
-# The first set takes its value as the next token.
-_PATH_FLAGS_SPLIT = {
-    "-cp", "-classpath", "--class-path", "-p", "--module-path",
-    "--upgrade-module-path", "--add-modules", "--limit-modules", "--patch-module",
-}
-_PATH_FLAGS_JOINED = (
-    "-Djava.class.path=", "-Xbootclasspath", "--class-path=", "--module-path=",
-    "--upgrade-module-path=", "--add-modules=", "--limit-modules=", "--patch-module=",
-)
-# environment the launcher reads when it builds the classpath
-_CLASSPATH_ENV = ("SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_PREPEND_CLASSES")
+# flags under which a JVM asked to dump an archive refuses to start
+_NO_DUMP_FLAGS = ("--patch-module", "--limit-modules", "--upgrade-module-path")
 # where JVM options come from besides spark.driver.extraJavaOptions
 _JAVA_OPTS_ENV = ("SPARK_SUBMIT_OPTS", "JDK_JAVA_OPTIONS", "JAVA_TOOL_OPTIONS")
 # the JVM writes CDS log lines (626 "Skipping ...: Signed JAR" warnings
@@ -138,7 +128,7 @@ def get_spark(
     # only a session that starts a new driver JVM can give it an archive
     plan = None
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        plan = _cds_plan(java_opts, conf.get("spark.driver.extraClassPath", ""))
+        plan = _cds_plan(java_opts)
     java_opts = " ".join(o for o in (java_opts, plan and plan["flags"]) if o)
     if java_opts:
         builder = builder.config("spark.driver.extraJavaOptions", java_opts)
@@ -150,14 +140,14 @@ def get_spark(
     return spark
 
 
-def _cds_plan(java_opts: str, extra_class_path: str) -> dict | None:
+def _cds_plan(java_opts: str) -> dict | None:
     """How the driver JVM about to start shares class data: map the
-    archive adopted under this key, or dump one at exit into a temp
-    directory of its own. None (with the reason logged) when no archive
-    can be used; the JVM then starts with the caller's flags only.
+    adopted archive, or dump one at exit into a temp directory of its
+    own. None (with the reason logged) when no archive can be used; the
+    JVM then starts with the caller's flags only.
 
-    → {"key", "java", "archive", "dump_dir" (None when mapping),
-    "conf_dir", "flags"}."""
+    → {"java", "archive", "ino" (the adopted file's inode; None when
+    dumping), "dump_dir" (None when mapping), "conf_dir", "flags"}."""
     from pyspark.find_spark_home import _find_spark_home
 
     try:
@@ -166,6 +156,9 @@ def _cds_plan(java_opts: str, extra_class_path: str) -> dict | None:
         return _no_cds(f"cannot split the JVM options: {e}")
     if any(t.startswith(_CDS_FLAGS) for t in tokens):
         return _no_cds("the caller passes its own class-data-sharing flag")
+    refused = [t for t in tokens if t.startswith(_NO_DUMP_FLAGS)]
+    if refused:
+        return _no_cds(f"the JVM refuses to dump an archive under {refused[0]}")
     spark_home = _find_spark_home()
     real_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     # JDK 17 refuses a non-empty directory on the classpath, where
@@ -184,9 +177,8 @@ def _cds_plan(java_opts: str, extra_class_path: str) -> dict | None:
         return _no_cds(f"${busy[0]} names a non-empty directory")
     java_home = os.environ.get("JAVA_HOME")
     java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
-    jars = os.path.join(spark_home, "jars")
-    if not java or not os.path.isdir(jars):
-        return _no_cds("no java binary or no Spark jars directory found")
+    if not java:
+        return _no_cds("no java binary found")
     conf_dir = os.path.join(_CDS_DIR, "conf")
     try:
         os.makedirs(conf_dir, exist_ok=True)
@@ -196,24 +188,25 @@ def _cds_plan(java_opts: str, extra_class_path: str) -> dict | None:
             raise PermissionError(_CDS_DIR)
     except OSError as e:
         return _no_cds(f"cannot write {_CDS_DIR}: {e}")
-    flags = _path_flags(tokens) + [f"{k}={os.environ.get(k, '')}" for k in _CLASSPATH_ENV]
-    key = _cds_key(java, jars, conf_dir, flags + [f"extraClassPath={extra_class_path}"])
-    plan = {"key": key, "java": java, "conf_dir": conf_dir}
-    final = os.path.join(_CDS_DIR, key)
+    plan = {"java": java, "conf_dir": conf_dir}
+    final = os.path.join(_CDS_DIR, "archive")
     archive = os.path.join(final, "archive.jsa")
     if os.path.isdir(final) and not _intact(final):
         # a short archive would fault the JVM that maps it
         _log.warning("CDS archive %s is not the size it was adopted at; removing it", archive)
         shutil.rmtree(final, ignore_errors=True)
-    _sweep(plan)
-    if os.path.isdir(final):
-        return {**plan, "archive": archive, "dump_dir": None,
+    _sweep(java)
+    with contextlib.suppress(OSError):  # gone: this session dumps
+        return {**plan, "archive": archive, "ino": os.stat(archive).st_ino, "dump_dir": None,
                 "flags": f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}"}
     # named after this process, which owns it until its JVM has started
-    dump_dir = os.path.join(_CDS_DIR, f"{key}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp")
-    os.makedirs(dump_dir)
+    dump_dir = os.path.join(_CDS_DIR, f"{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp")
+    try:
+        os.makedirs(dump_dir)
+    except OSError as e:
+        return _no_cds(f"cannot write {_CDS_DIR}: {e}")
     archive = os.path.join(dump_dir, "archive.jsa")
-    return {**plan, "archive": archive, "dump_dir": dump_dir,
+    return {**plan, "archive": archive, "ino": None, "dump_dir": dump_dir,
             "flags": f"-XX:ArchiveClassesAtExit={archive} {_CDS_QUIET}"}
 
 
@@ -241,38 +234,6 @@ def _intact(final: str) -> bool:
         return False
 
 
-def _path_flags(tokens: list[str]) -> list[str]:
-    """The tokens of ``tokens`` that change the classpath or the module
-    graph, with the value of a flag that takes it as the next token."""
-    out = []
-    for i, t in enumerate(tokens):
-        if t in _PATH_FLAGS_SPLIT:
-            out += tokens[i : i + 2]
-        elif t.startswith(_PATH_FLAGS_JOINED):
-            out.append(t)
-    return out
-
-
-def _cds_key(java: str, jars_dir: str, conf_dir: str, flags: list[str]) -> str:
-    """Name of the archive a JVM can map: a hash of the java binary (its
-    realpath, its stat and its JDK's ``release`` file), of every jar in
-    ``jars_dir`` (name, size, mtime_ns), of the conf directory on the
-    classpath and of ``flags``."""
-    h = hashlib.sha256()
-    real = os.path.realpath(java)
-    st = os.stat(real)
-    h.update(f"{real}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
-    with contextlib.suppress(OSError), open(
-        os.path.join(os.path.dirname(os.path.dirname(real)), "release"), "rb"
-    ) as fh:
-        h.update(fh.read())
-    for name in sorted(os.listdir(jars_dir)):
-        st = os.stat(os.path.join(jars_dir, name))
-        h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
-    h.update("\0".join([conf_dir, *flags]).encode())
-    return h.hexdigest()[:20]
-
-
 @contextlib.contextmanager
 def _launch_conf_dir(conf_dir: str | None):
     """``SPARK_CONF_DIR`` set to ``conf_dir`` while the gateway launches."""
@@ -289,51 +250,64 @@ def _launch_conf_dir(conf_dir: str | None):
 
 
 def _cds_started(spark: SparkSession, plan: dict) -> None:
-    """Log whether the new driver JVM maps the archive; a dumping JVM
-    records its classpath and has its archive adopted once it exits."""
+    """Log whether the new driver JVM maps the archive, and remove an
+    archive it rejects so that the next session dumps a fresh one; a
+    dumping JVM records its classpath and has its archive adopted once
+    it exits."""
     jvm = spark.sparkContext._jvm
     if plan["dump_dir"]:
         meta = {"class_path": jvm.java.lang.System.getProperty("java.class.path")}
         with open(os.path.join(plan["dump_dir"], "meta.json"), "w") as fh:
             json.dump(meta, fh)
-        atexit.register(_adopt_after_exit, SparkContext._gateway.proc, plan)
+        atexit.register(_adopt_after_exit, SparkContext._gateway.proc, plan["java"])
         _log.info("driver JVM dumps a CDS archive to %s when it exits", plan["archive"])
         return
     pid = jvm.java.lang.ProcessHandle.current().pid()
     try:
         with open(f"/proc/{pid}/maps") as fh:
-            mapped = plan["archive"] in fh.read()
+            # the maps name the file by its resolved path
+            mapped = os.path.realpath(plan["archive"]) in fh.read()
     except OSError:
         _log.info("cannot read the driver JVM's maps to see whether it maps %s", plan["archive"])
         return
     if mapped:
         _log.info("driver JVM maps CDS archive %s", plan["archive"])
-    else:
-        _log.warning("driver JVM rejected CDS archive %s and runs without it", plan["archive"])
+        return
+    _log.warning("driver JVM rejected CDS archive %s and runs without it; removing it", plan["archive"])
+    # unless another session has adopted a new one in its place since
+    with contextlib.suppress(OSError):
+        if os.stat(plan["archive"]).st_ino == plan["ino"]:
+            shutil.rmtree(os.path.dirname(plan["archive"]), ignore_errors=True)
 
 
-def _adopt_after_exit(proc, plan: dict) -> None:
+def _adopt_after_exit(proc, java: str) -> None:
     """At interpreter exit: adopt the archive now if its JVM has exited
     (a stopped session); otherwise the next session adopts it."""
     if proc.poll() is not None:
-        _sweep(plan)
+        _sweep(java)
 
 
-def _sweep(plan: dict) -> None:
-    """Settle this key's temp directories. One that no live JVM is still
-    dumping into is adopted as the key's archive when the key has none
-    and a ``-Xshare:on`` map of it succeeds, else removed: a dump that
-    was killed, failed or lost the race to another session."""
-    key, final = plan["key"], os.path.join(_CDS_DIR, plan["key"])
-    for name in sorted(os.listdir(_CDS_DIR)):
+def _sweep(java: str) -> None:
+    """Settle the temp directories of dumps. One that no live JVM is
+    still dumping into is adopted as the archive when there is none and
+    a ``-Xshare:on`` map of it succeeds, else removed: a dump that was
+    killed, failed or lost the race to another session. Another session
+    may sweep the same directory at the same time; whichever renames it
+    first adopts it, and the other one finds it gone."""
+    final = os.path.join(_CDS_DIR, "archive")
+    try:
+        names = sorted(os.listdir(_CDS_DIR))
+    except OSError:
+        return
+    for name in names:
         tmp = os.path.join(_CDS_DIR, name)
-        if not (name.startswith(key + ".") and name.endswith(".tmp")) or _being_dumped(tmp):
+        if not name.endswith(".tmp") or _being_dumped(tmp):
             continue
-        if not os.path.isdir(final) and _maps(plan["java"], tmp):
-            meta = {**_meta(tmp), "size": os.path.getsize(os.path.join(tmp, "archive.jsa"))}
-            with open(os.path.join(tmp, "meta.json"), "w") as fh:
-                json.dump(meta, fh)
-            with contextlib.suppress(OSError):  # another session adopted first
+        with contextlib.suppress(OSError):  # gone, or another session adopted first
+            if not os.path.isdir(final) and _maps(java, tmp):
+                meta = {**_meta(tmp), "size": os.path.getsize(os.path.join(tmp, "archive.jsa"))}
+                with open(os.path.join(tmp, "meta.json"), "w") as fh:
+                    json.dump(meta, fh)
                 os.rename(tmp, final)
                 _log.info("adopted CDS archive %s", final)
                 continue
@@ -343,7 +317,7 @@ def _sweep(plan: dict) -> None:
 def _being_dumped(tmp: str) -> bool:
     """Whether another live process made ``tmp``, or a live process (the
     dumping JVM) names ``tmp`` on its command line."""
-    owner = os.path.basename(tmp).split(".")[1].split("-")[0]
+    owner = os.path.basename(tmp).split("-")[0]
     if owner.isdigit() and int(owner) != os.getpid():
         try:
             os.kill(int(owner), 0)

@@ -287,7 +287,7 @@ def _parse_dense_columnar(data, s, e, meta: _BlockMeta, want_info: bool):
 # ------------------------------------------------------- message walk
 
 
-def _walk(data, spans, tags):
+def _walk(data, spans, tags, owner=None, n=None):
     """The per-message TLV walk: for each message span, the spans of the
     wanted fields, keyed by wire tag (``field << 3 | wire type``).
 
@@ -296,10 +296,14 @@ def _walk(data, spans, tags):
     varint occurrence yields the span of its own bytes — a one-value
     packed run — so scalars, repeated varints and packed fields all
     batch-decode through ``_batch_packed``. Other fields are skipped.
+
+    ``owner`` (with the message count ``n``) names the message each span
+    belongs to, for a message split over several spans (repeated
+    occurrences of a sub-message field): their fields join in span order.
     """
     # tuples, grown on the rare hit, cost less than one list per message
-    out = {t: [()] * len(spans) for t in tags}
-    for mi, (s, e) in enumerate(spans):
+    out = {t: [()] * (len(spans) if n is None else n) for t in tags}
+    for mi, (s, e) in zip(range(len(spans)) if owner is None else owner, spans):
         pos = s
         while pos < e:
             tag, pos = read_varint(data, pos)
@@ -456,18 +460,13 @@ def _info(data, walked, date_gran):
     if not any(info_spans):
         return None
     has = np.array([bool(sp) for sp in info_spans], dtype=bool)
-    tags = [_varint_tag(fno) for fno, _, _ in _INFO_FIELDS]
-    if all(len(sp) <= 1 for sp in info_spans):
-        fields = _walk(data, [sp[0] if sp else (0, 0) for sp in info_spans], tags)
-    else:
-        # walk every occurrence, then join each message's field spans in
-        # occurrence order so ``_scalar`` picks the last one
-        owner = [mi for mi, sp in enumerate(info_spans) for _ in sp]
-        walked_all = _walk(data, [s for sp in info_spans for s in sp], tags)
-        fields = {t: [()] * len(info_spans) for t in tags}
-        for t in tags:
-            for mi, found in zip(owner, walked_all[t]):
-                fields[t][mi] += found
+    fields = _walk(
+        data,
+        [s for sp in info_spans for s in sp],
+        [_varint_tag(fno) for fno, _, _ in _INFO_FIELDS],
+        owner=[mi for mi, sp in enumerate(info_spans) for _ in sp],
+        n=len(info_spans),
+    )
     info = {}
     for fno, name, dtype in _INFO_FIELDS:
         vals, valid = _scalar(data, fields[_varint_tag(fno)])

@@ -1,6 +1,6 @@
 """The driver JVM's class-data-sharing archive: dumped by the first
-session under a key, adopted once complete, mapped by later sessions,
-and left out wherever it cannot be used.
+session, adopted once complete, mapped by later sessions, removed once
+a JVM rejects it, and left out wherever it cannot be used.
 
 The session tests run each session in a child process whose script
 points ``session._CDS_DIR`` at a directory under ``tmp_path``."""
@@ -29,6 +29,8 @@ CHILD = textwrap.dedent(
 
     session._CDS_DIR = sys.argv[1]
     conf = {{"spark.driver.memory": "1g", "spark.driver.extraJavaOptions": "-Dcds.probe=7"}}
+    if sys.argv[3]:
+        conf["spark.driver.extraClassPath"] = sys.argv[3]
     spark = session.get_spark("cds-test", cores=1, extra_conf=conf)
     jvm = spark.sparkContext._jvm
     pid = jvm.java.lang.ProcessHandle.current().pid()
@@ -55,13 +57,13 @@ CHILD = textwrap.dedent(
 )
 
 
-def _session(tmp_path, cds_dir, end="stop", env=None) -> dict:
-    """Run one child session; its stdout must be exactly the one line
-    the script prints."""
+def _session(tmp_path, cds_dir, end="stop", env=None, jar="") -> dict:
+    """Run one child session, with ``jar`` first on its classpath; its
+    stdout must be exactly the one line the script prints."""
     script = tmp_path / "child.py"
     script.write_text(CHILD.format(root=ROOT))
     done = subprocess.run(
-        [sys.executable, str(script), str(cds_dir), end],
+        [sys.executable, str(script), str(cds_dir), end, str(jar)],
         capture_output=True, text=True, timeout=240, cwd=str(tmp_path),
         env={**os.environ, **(env or {})},
     )
@@ -83,30 +85,41 @@ def _cds_args(args) -> list[str]:
     return [a for a in args if a.startswith(session._CDS_FLAGS)]
 
 
+def _small_jar(dest) -> str:
+    """A copy of the smallest Spark jar at ``dest``."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = os.path.join(_find_spark_home(), "jars")
+    name = min(os.listdir(jars), key=lambda n: os.path.getsize(os.path.join(jars, n)))
+    shutil.copy2(os.path.join(jars, name), dest)
+    return str(dest)
+
+
 @pytest.fixture(scope="module")
 def adopted(tmp_path_factory):
     """The first session in an empty archive directory maps nothing,
     dumps at exit and has its archive adopted; → (its result, the
-    directory, the adopted archive)."""
+    directory, the adopted archive, the jar the sessions put first on
+    their classpath)."""
     tmp = tmp_path_factory.mktemp("cds-first")
     cds_dir = tmp / "cds"
-    first = _session(tmp, cds_dir)
+    jar = _small_jar(tmp / "probe.jar")
+    first = _session(tmp, cds_dir, jar=jar)
     archives = _archives(cds_dir)
-    assert [os.path.basename(os.path.dirname(a)) for a in archives] == [
-        n for n in os.listdir(cds_dir) if n != "conf"
-    ]  # no temp directory is left next to it
-    assert len(archives) == 1
-    return first, cds_dir, archives[0]
+    assert archives == [str(cds_dir / "archive" / "archive.jsa")]
+    assert sorted(os.listdir(cds_dir)) == ["archive", "conf"]  # no temp directory is left
+    return first, cds_dir, archives[0], jar
 
 
 def test_first_session_dumps_then_second_maps(adopted, tmp_path):
-    first, cds_dir, archive = adopted
+    first, cds_dir, archive, jar = adopted
     assert first["mapped"] == [] and first["rows"] == 5
     assert "-Dcds.probe=7" in first["args"]  # the caller's options still apply
+    assert first["class_path"].split(os.pathsep)[0] == jar
     (flag,) = [a for a in _cds_args(first["args"]) if "Archive" in a]
     assert flag.startswith("-XX:ArchiveClassesAtExit=")
 
-    second = _session(tmp_path, cds_dir)
+    second = _session(tmp_path, cds_dir, jar=jar)
     assert second["mapped"] == [archive] and second["rows"] == 5
     assert "-Dcds.probe=7" in second["args"]
     assert f"-XX:SharedArchiveFile={archive}" in second["args"]
@@ -114,26 +127,40 @@ def test_first_session_dumps_then_second_maps(adopted, tmp_path):
 
 
 def test_truncated_archive_and_killed_dump_never_map(adopted, tmp_path):
-    """Runs after the test above: it truncates the adopted archive (the
-    key names the directory, so the archive cannot move)."""
-    _, cds_dir, archive = adopted
-    key = os.path.basename(os.path.dirname(archive))
+    _, cds_dir, archive, _ = adopted
     with open(archive, "rb") as fh:
         head = fh.read(16 << 20)
-    os.chmod(archive, 0o644)
-    os.truncate(archive, len(head) // 2)
-    # a complete-looking temp of a dump whose owner is gone: the header is
-    # there but the file stops short, so a JVM that mapped it would fault
-    stale = cds_dir / f"{key}.{2**22 + 1}-deadbeef.tmp"
+    # an adopted archive cut short after its adoption ...
+    trunc_dir = tmp_path / "cds"
+    (trunc_dir / "archive").mkdir(parents=True)
+    shutil.copy(os.path.join(os.path.dirname(archive), "meta.json"), trunc_dir / "archive")
+    (trunc_dir / "archive" / "archive.jsa").write_bytes(head[: len(head) // 2])
+    # ... and a complete-looking temp of a dump whose owner is gone: the
+    # header is there but the file stops short, so a JVM that mapped it
+    # would fault
+    stale = trunc_dir / f"{2**22 + 1}-deadbeef.tmp"
     stale.mkdir()
-    shutil.copy(cds_dir / key / "meta.json", stale / "meta.json")
+    shutil.copy(trunc_dir / "archive" / "meta.json", stale / "meta.json")
     (stale / "archive.jsa").write_bytes(head)
 
     # the session maps neither and dumps anew, but its JVM is killed: at
     # the child's exit the dump's temp is swept and nothing is adopted
-    out = _session(tmp_path, cds_dir, end="kill")
+    out = _session(tmp_path, trunc_dir, end="kill")
     assert out["mapped"] == [] and out["rows"] == 5
     assert [a for a in _cds_args(out["args"]) if "SharedArchiveFile" in a] == []
+    assert sorted(os.listdir(trunc_dir)) == ["conf"]
+
+
+def test_touched_jar_gets_the_archive_rejected_and_removed(adopted, tmp_path):
+    """Runs after the tests above. The JVM checks every classpath jar's
+    mtime against the archive's: it runs without the archive, and the
+    session removes it so that the next session dumps a fresh one."""
+    _, cds_dir, archive, jar = adopted
+    st = os.stat(jar)
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    out = _session(tmp_path, cds_dir, jar=jar)
+    assert out["mapped"] == [] and out["rows"] == 5
+    assert f"-XX:SharedArchiveFile={archive}" in out["args"]
     assert sorted(os.listdir(cds_dir)) == ["conf"]
 
 
@@ -150,39 +177,49 @@ def test_non_template_conf_dir_keeps_spark_conf(tmp_path):
     assert not os.path.exists(cds_dir)
 
 
-def test_cds_flag_conf_dirs_or_unwritable_dir_leave_archive_out(tmp_path, monkeypatch):
+def test_cds_flags_conf_dirs_or_unwritable_dir_leave_archive_out(tmp_path, monkeypatch):
     monkeypatch.setattr(session, "_CDS_DIR", str(tmp_path / "cds"))
-    assert session._cds_plan("-Xms1g -Xshare:off", "") is None
+    assert session._cds_plan("-Xms1g -Xshare:off") is None
+    # the JVM would refuse to start with this flag and a dump flag
+    assert session._cds_plan("-Xms1g --patch-module=java.base=/x.jar") is None
     hadoop = tmp_path / "hadoop-conf"
     hadoop.mkdir()
     (hadoop / "core-site.xml").write_text("<configuration/>")
     monkeypatch.setenv("HADOOP_CONF_DIR", str(hadoop))
-    assert session._cds_plan("-Xms1g", "") is None
+    assert session._cds_plan("-Xms1g") is None
     monkeypatch.delenv("HADOOP_CONF_DIR")
     assert not os.path.exists(tmp_path / "cds")
     blocker = tmp_path / "file"
     blocker.write_text("")
     monkeypatch.setattr(session, "_CDS_DIR", str(blocker / "cds"))
-    assert session._cds_plan("-Xms1g", "") is None
+    assert session._cds_plan("-Xms1g") is None
 
 
-def test_key_follows_jars_java_and_path_flags(tmp_path):
-    from pyspark.find_spark_home import _find_spark_home
+def test_sweep_survives_a_concurrent_adoption(tmp_path, monkeypatch):
+    """Two sessions sweep the same finished temp directory: the other
+    one renames it into place while this one checks it."""
+    monkeypatch.setattr(session, "_CDS_DIR", str(tmp_path))
+    final = tmp_path / "archive"
 
-    jars = tmp_path / "jars"
-    jars.mkdir()
-    src = os.path.join(_find_spark_home(), "jars")
-    for name in sorted(os.listdir(src))[:2]:
-        shutil.copy2(os.path.join(src, name), jars / name)
-    java = shutil.which("java")
-    key = session._cds_key(java, str(jars), "/conf", [])
-    assert session._cds_key(java, str(jars), "/conf", []) == key
-    jar = jars / sorted(os.listdir(jars))[0]
-    st = os.stat(jar)
-    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    touched = session._cds_key(java, str(jars), "/conf", [])
-    assert touched != key
-    assert session._cds_key(java, str(jars), "/other-conf", []) != touched
-    flags = session._path_flags(["-Xms2g", "--add-modules", "jdk.x", "-Dfoo=1", "-Xbootclasspath/a:/b"])
-    assert flags == ["--add-modules", "jdk.x", "-Xbootclasspath/a:/b"]
-    assert session._cds_key(java, str(jars), "/conf", flags) != touched
+    def dump(name):
+        tmp = tmp_path / name
+        tmp.mkdir()
+        (tmp / "archive.jsa").write_bytes(b"x" * 10)
+        (tmp / "meta.json").write_text(json.dumps({"class_path": "/cp"}))
+        return tmp
+
+    def other_session_adopts(java, tmp):
+        os.rename(tmp, final)
+        return True
+
+    tmp = dump(f"{os.getpid()}-00000001.tmp")
+    monkeypatch.setattr(session, "_maps", other_session_adopts)
+    session._sweep("java")
+    assert sorted(os.listdir(tmp_path)) == ["archive"]
+    assert not tmp.exists() and (final / "archive.jsa").exists()
+
+    # with an archive in place, a later finished dump is removed unchecked
+    late = dump(f"{os.getpid()}-00000002.tmp")
+    monkeypatch.setattr(session, "_maps", lambda java, tmp: pytest.fail("checked"))
+    session._sweep("java")
+    assert sorted(os.listdir(tmp_path)) == ["archive"] and not late.exists()
